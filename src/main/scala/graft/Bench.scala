@@ -1657,8 +1657,8 @@ object Bench {
             // study (BASELINE.md): finer cells beat k ∝ N/25 on
             // recall-per-probe-fraction, cell replication halves the
             // probe width a given recall needs, and ranking cells ONCE
-            // per vector (selfScored's materialized index) removes the
-            // duplicated k·N ranking term. Frontier: recall 0.906 at
+            // per vector (the first pass of minePairs' per-cell kernel)
+            // removes the duplicated k·N ranking term. Frontier: recall 0.906 at
             // ~12.6 s vs r7's 0.749 at 6.8 s / untuned 0.932 at 23.4 s.
             // r16 (VERDICT r15 #5): contrastive-self-full@10x — the
             // NON-PRUNABLE twin of contrastive-self@10x. Under the bench's
@@ -1682,9 +1682,8 @@ object Bench {
                 .repartition(spark.sparkContext.defaultParallelism)
               val k10 = 160
               // codebook is a one-time index-build artifact: marker-guarded
-              // under benchDir (train is deterministic, so the cached
-              // codebook — and the tuned nProbe below — are stable across
-              // retry attempts)
+              // under benchDir (the cached codebook — and the tuned
+              // nProbe below — stay fixed across retry attempts)
               val cb10Path = s"$benchDir/contrastive-cb-10x-k160r2-$sfTag"
               val cb10 =
                 if (new java.io.File(s"$cb10Path/_SUCCESS").exists())

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** IVF (inverted-file) index for approximate nearest-neighbor search — the
@@ -9,10 +9,13 @@ import org.apache.spark.sql.functions._
   * cells. At 100 TB the cell assignment is a map-side pass against a tiny
   * broadcast codebook and search touches `nProbe/k` of the corpus.
   *
-  * Deterministic by construction: centroids initialize from the first k
-  * vectors by id and Lloyd iterations average in double precision — good
-  * enough for an index (approximation quality is asserted by recall tests,
-  * not bit-equality).
+  * Centroids initialize from the first k vectors by id and Lloyd
+  * iterations average in double precision; only the order in which task
+  * partials add up varies between runs — good enough for an index
+  * (approximation quality is asserted by recall tests, not bit-equality).
+  * For a given codebook, self search and mining results are
+  * deterministic: every score is rounded and every tie goes to the
+  * smaller id.
   */
 object VectorIndex {
 
@@ -27,8 +30,9 @@ object VectorIndex {
       case _ => v.toArray
     }
 
-    def nearest(v: Seq[Float]): Int = {
-      val a = raw(v)
+    def nearest(v: Seq[Float]): Int = nearest(raw(v))
+
+    def nearest(a: Array[Float]): Int = {
       var best = 0
       var bestD = Double.MaxValue
       var c = 0
@@ -45,13 +49,14 @@ object VectorIndex {
       best
     }
 
+    def nearestN(v: Seq[Float], n: Int): Seq[Int] = nearestN(raw(v), n)
+
     /** Distances are precomputed into an array before the sort (r15):
       * `sortBy(f)` re-evaluates `f` on EVERY comparison (`Ordering.on`),
       * so the old form paid ~log2(k) full k·dim distance passes per row
       * instead of one. Result order is bit-identical: the sort is stable
       * and keys are the same doubles. */
-    def nearestN(v: Seq[Float], n: Int): Seq[Int] = {
-      val a = raw(v)
+    def nearestN(a: Array[Float], n: Int): Seq[Int] = {
       val d = new Array[Double](centroids.length)
       var c = 0
       while (c < centroids.length) {
@@ -68,7 +73,15 @@ object VectorIndex {
 
   /** Train a k-cell codebook with `iters` Lloyd iterations. Centroids are
     * tiny (k × dim doubles) — they travel to executors in the task
-    * closure, the distributed passes are the assignments/averages.
+    * closure. Each Lloyd step is ONE map-side pass: every task folds its
+    * vectors into per-cell double sums and counts (k × dim + k), and a
+    * `treeAggregate` adds the partials — no per-element explode, no
+    * shuffle. A centroid is its cell's sum / count in double (the value
+    * `avg` gives); an empty cell keeps its centroid. Partials are added
+    * in task-completion order, so a centroid may differ from another
+    * run in its last bits — the index contract is recall (asserted by
+    * VectorIndexSpec), not bit-equality, and `nProbe = k` search is
+    * independent of the centroids altogether.
     *
     * `sampleOneIn` > 1 trains on a DETERMINISTIC id-hash sample (keep a
     * vector iff `xxhash64(id) % sampleOneIn == 0`) — the documented
@@ -88,25 +101,33 @@ object VectorIndex {
       .map(_.getSeq[Float](0).map(_.toDouble).toArray)
     require(centroids.length >= k,
       s"corpus sample has ${centroids.length} vectors; k=$k cells need at least that many")
+    val dim = centroids(0).length
+    val spark = base.sparkSession
+    import spark.implicits._
+    val vectors = base.select(col(embCol)).as[Array[Float]].rdd
     for (_ <- 1 to iters) {
       val cb = Codebook(centroids)
-      val assigned = assignCells(base, embCol, cb)
-      val means = assigned
-        .select(col("__cell"), posexplode(col(embCol)).as(Seq("pos", "x")))
-        .groupBy("__cell", "pos")
-        .agg(avg(col("x")).as("m"))
-        .collect()
-      val byCell = means.groupBy(_.getInt(0))
-      centroids = centroids.indices.map { c =>
-        byCell.get(c) match {
-          case Some(rows) =>
-            val dim = rows.length
-            val arr = new Array[Double](dim)
-            rows.foreach(r => arr(r.getInt(1)) = r.getDouble(2))
-            arr
-          case None => centroids(c) // empty cell keeps its centroid
-        }
-      }.toArray
+      val (sums, counts) = vectors.treeAggregate(
+          (new Array[Double](k * dim), new Array[Long](k)))(
+        { case ((s, n), v) =>
+            require(v.length == dim, s"vector of dimension ${v.length}, codebook has $dim")
+            val c = cb.nearest(v)
+            var i = 0
+            while (i < dim) { s(c * dim + i) += v(i); i += 1 }
+            n(c) += 1
+            (s, n)
+        },
+        { case ((s1, n1), (s2, n2)) =>
+            var i = 0
+            while (i < s1.length) { s1(i) += s2(i); i += 1 }
+            i = 0
+            while (i < k) { n1(i) += n2(i); i += 1 }
+            (s1, n1)
+        })
+      centroids = Array.tabulate(k) { c =>
+        if (counts(c) == 0) centroids(c) // empty cell keeps its centroid
+        else Array.tabulate(dim)(i => sums(c * dim + i) / counts(c))
+      }
     }
     Codebook(centroids)
   }
@@ -165,41 +186,50 @@ object VectorIndex {
 
   /** Corpus-scale self search: EVERY corpus vector is also a query — the
     * shape of whole-corpus neighbor mining, where [[search]]'s broadcast
-    * query batch would OOM (queries = corpus). Both sides take
-    * [[assignCells]] and meet in a plain shuffled EQUI-JOIN on the cell
-    * id: no broadcast, no driver collect, pair fan-out bounded per cell
-    * at (N/k)·nProbe — size k to the block budget as the corpus grows.
-    * `nProbe = cb.centroids.length` degenerates to exact all-pairs
-    * (every pair meets in the corpus vector's one cell), which is the
-    * oracle-checkable configuration. */
+    * query batch would OOM (queries = corpus). Runs the fused per-cell
+    * kernel ([[cellKernel]]): one pass ranks each vector's cells, one
+    * shuffle routes postings and probes by cell, and each cell scores its
+    * probes against its postings with a bounded top-`topK` per probe; the
+    * per-cell winners merge per query through [[graft.operators.TopK]].
+    * No broadcast, no collect, no pair rows — work per cell is
+    * |cell| × (probes into it), so size k to the block budget as the
+    * corpus grows. `nProbe = cb.centroids.length` degenerates to exact
+    * all-pairs (every pair meets in the corpus vector's one cell), which
+    * is the oracle-checkable configuration. Emits (query_id,
+    * neighbor_id, sim, rank), `sim` = `round(cosine, 4)`, ties to the
+    * smaller neighbor id — the same rows as [[search]] with
+    * queries = corpus. */
   def searchSelf(corpus: DataFrame, idCol: String, embCol: String,
       cb: Codebook, nProbe: Int, topK: Int): DataFrame = {
-    val sims = selfScored(corpus, idCol, embCol, cb, nProbe)
-      .select(col("query_id"), col("neighbor_id"), col("sim"))
+    val sims = cellKernel(corpus, idCol, embCol, None, cb, nProbe,
+      assignR = 1, topK = topK)
     graft.operators.TopK.perGroup(sims, "query_id", "neighbor_id", "sim",
       topK, ascending = false)
   }
 
   /** Contrastive pair mining over the WHOLE corpus: per vector, the
     * hardest positive (nearest same-label) and hardest negative (nearest
-    * other-label) among its probed cells — one row per (query,
-    * pair_type). Same no-broadcast cell equi-join as [[searchSelf]];
-    * the per-(query, type) top-1 is a bounded-buffer partial
-    * aggregation, never a per-query candidate list in one task. */
+    * other-label; a null label is never "same") among its probed cells
+    * — one row (query_id, pair_type, neighbor_id, sim) per (query,
+    * pair_type). The fused per-cell kernel of [[searchSelf]] keeps a
+    * top-1 per probe and pair type, and the per-cell winners merge per
+    * (query, type) in a codegen'd top-1. `assignR` > 1 posts each vector
+    * in its `assignR` nearest cells (IVF cell replication): a neighbor is
+    * met when ANY of its cells is probed, so at fixed recall nProbe — the
+    * probe fan-out nProbe·N — shrinks by roughly assignR× for an index
+    * assignR× larger. A pair can then meet in several cells, harmless for
+    * a top-1 (duplicates carry the identical sim). Ids and labels must be
+    * integral. */
   def minePairs(corpus: DataFrame, idCol: String, embCol: String,
       labelCol: String, cb: Codebook, nProbe: Int,
       assignR: Int = 1): DataFrame = {
-    // assignR > 1: a pair can meet in up to assignR cells — harmless for
-    // the per-(query, type) top-1 (duplicates carry the identical sim)
-    val scored = selfScored(corpus, idCol, embCol, cb, nProbe,
-      extra = Seq(labelCol), assignR = assignR)
+    val scored = cellKernel(corpus, idCol, embCol, Some(labelCol), cb, nProbe,
+        assignR, topK = 1)
       .select(
-        // composite (query, same-label?) key for the bounded top-1
-        (col("query_id") * 2 +
-          when(col(s"n_$labelCol") === col(s"q_$labelCol"), 1).otherwise(0)).as("grp"),
+        // composite (query, same-label?) key for the top-1 merge
+        (col("query_id") * 2 + when(col("same"), 1).otherwise(0)).as("grp"),
         col("neighbor_id"),
-        when(col(s"n_$labelCol") === col(s"q_$labelCol"), lit("pos"))
-          .otherwise(lit("neg")).as("pair_type"),
+        when(col("same"), lit("pos")).otherwise(lit("neg")).as("pair_type"),
         col("sim"))
     graft.operators.TopK.perGroupWithPayload(scored, "grp", "neighbor_id",
         "sim", "pair_type", k = 1, ascending = false)
@@ -207,63 +237,187 @@ object VectorIndex {
         col("pair_type"), col("neighbor_id"), col("sim"))
   }
 
-  /** Shared self-join core: (query_id, neighbor_id, sim [, q_/n_extra]).
-    * Corpus side sits in its `assignR` nearest cells (1 = classic IVF);
-    * query side (the same rows) explodes to its nProbe nearest cells;
-    * the equi-join on `__cell` shuffles both sides — each (q, c) pair
-    * meets in at most assignR cells.
+  private final val Posting = 0
+  private final val Probe = 1
+
+  /** The fused self-search kernel behind [[searchSelf]] and
+    * [[minePairs]]: per-cell candidates (query_id, neighbor_id, sim,
+    * same), where `same` says the two labels are equal and non-null.
     *
-    * The cell RANKING (k distances + a partial sort per vector) is the
-    * self-mining wall floor when it runs once per join side; here it
-    * runs ONCE per vector — the ranked-cells column materializes
-    * (localCheckpoint: this row set IS the index, the thing a production
-    * build persists) and both join sides slice it (top-assignR for the
-    * posting side, top-nProbe for the probe side). */
-  private def selfScored(corpus: DataFrame, idCol: String, embCol: String,
-      cb: Codebook, nProbe: Int, extra: Seq[String] = Nil,
-      assignR: Int = 1): DataFrame = {
+    *  1. One pass over the corpus ranks each vector's cells ONCE
+    *     (`nearestN`) and computes its norm once; the vector leaves as a
+    *     posting row for each of its `assignR` nearest cells and a probe
+    *     row for each of its `nProbe` nearest cells.
+    *  2. One shuffle: rows go to partition `cell % parts`, with `parts` =
+    *     min(k, default parallelism) set explicitly — AQE never coalesces
+    *     a shuffle with a given partition count, so the kernel keeps every
+    *     core — and sort by (cell, tag): a cell's postings arrive before
+    *     its probes.
+    *  3. [[CellScan]] holds the current cell's postings as primitive
+    *     arrays and streams the probes against them, keeping a bounded
+    *     top-`topK` per probe (or, with labels, a top-1 per probe and
+    *     label relation).
+    */
+  private def cellKernel(corpus: DataFrame, idCol: String, embCol: String,
+      labelCol: Option[String], cb: Codebook, nProbe: Int, assignR: Int,
+      topK: Int): DataFrame = {
     require(assignR >= 1, s"assignR must be >= 1, got $assignR")
+    require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
+    require(topK >= 1, s"topK must be >= 1, got $topK")
+    (idCol +: labelCol.toSeq).foreach(
+      graft.operators.TopK.requireIntegral(corpus, _, "VectorIndex"))
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val parts = math.min(cb.centroids.length, spark.sparkContext.defaultParallelism)
     val nRank = math.max(nProbe, assignR)
-    val rankUdf = udf((v: Seq[Float]) => cb.nearestN(v, nRank))
-    val ranked = corpus
-      .select(col(idCol) +: col(embCol) +: extra.map(col): _*)
-      .withColumn("__cells", rankUdf(col(embCol)))
-      // norms hoisted out of the pair stage (r15): one sqrt-of-dot per
-      // VECTOR here instead of two full norm folds per candidate pair —
-      // cosineFromNorms keeps the sim values bit-identical
-      .withColumn("__nrm",
-        sqrt(VectorFunctions.dotProduct(col(embCol), col(embCol))))
-      .localCheckpoint()
-    val indexed = ranked
-      .select(explode(slice(col("__cells"), 1, assignR)).as("__cell") +:
-        col(idCol).as("neighbor_id") +: col(embCol).as("ce") +:
-        col("__nrm").as("n_nrm") +:
-        extra.map(c => col(c).as(s"n_$c")): _*)
-    val probed = ranked
-      .select(explode(slice(col("__cells"), 1, nProbe)).as("__cell") +:
-        col(idCol).as("query_id") +: col(embCol).as("qe") +:
-        col("__nrm").as("q_nrm") +:
-        extra.map(c => col(c).as(s"q_$c")): _*)
-    indexed.join(probed, Seq("__cell")) // shuffled equi-join — NO broadcast
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", round(VectorFunctions.cosineFromNorms(
-        VectorFunctions.dotProduct(col("qe"), col("ce")),
-        col("q_nrm"), col("n_nrm")), 4))
+    val mine = labelCol.isDefined
+    val label = labelCol.map(c => col(c).cast("long")).getOrElse(lit(null).cast("long"))
+    corpus
+      .select(col(idCol).cast("long"), coalesce(label, lit(0L)), label.isNull,
+        col(embCol))
+      .as[(Long, Long, Boolean, Array[Float])]
+      .flatMap { case (id, lbl, noLabel, v) =>
+        val cells = cb.nearestN(v, nRank)
+        val nrm = math.sqrt(CellScan.dot(v, 0, v, 0, v.length))
+        cells.iterator.take(assignR).map(c => (c, Posting, id, lbl, noLabel, v, nrm)) ++
+          cells.iterator.take(nProbe).map(c => (c, Probe, id, lbl, noLabel, v, nrm))
+      }
+      .toDF("cell", "tag", "id", "label", "no_label", "vec", "nrm")
+      .repartitionById(parts, col("cell") % parts)
+      .sortWithinPartitions("cell", "tag")
+      .as[(Int, Int, Long, Long, Boolean, Array[Float], Double)]
+      .mapPartitions { rows =>
+        val scan = new CellScan(topK, mine)
+        rows.flatMap { case (cell, tag, id, lbl, noLabel, v, nrm) =>
+          if (tag == Posting) { scan.post(cell, id, lbl, noLabel, v, nrm); Iterator.empty }
+          else scan.probe(cell, id, lbl, noLabel, v, nrm)
+        }
+      }
+      .toDF("query_id", "neighbor_id", "sim", "same")
   }
 
-  /** Multi-assignment indexing (the IVF "cell replication" refinement):
-    * each corpus vector lands in its `r` nearest cells instead of one,
-    * so a neighbor is met when ANY of its r cells falls inside the
-    * query's probe set. At fixed recall this lets nProbe — and with it
-    * the probe fan-out (nProbe·N joined rows), the wall driver of
-    * corpus-scale self-mining — shrink by roughly r×, for an index only
-    * r× larger. r = 1 is classic single-assignment. */
-  def assignCellsMulti(df: DataFrame, embCol: String, cb: Codebook, r: Int): DataFrame = {
-    require(r >= 1, s"assignR must be >= 1, got $r")
-    if (r == 1) assignCells(df, embCol, cb)
-    else {
-      val multiUdf = udf((v: Seq[Float]) => cb.nearestN(v, r))
-      df.withColumn("__cell", explode(multiUdf(col(embCol))))
+  private object CellScan {
+    /** `VectorKernels.dotF32`'s operation sequence: double products,
+      * summed left to right. */
+    def dot(a: Array[Float], ao: Int, b: Array[Float], bo: Int, n: Int): Double = {
+      var acc = 0.0
+      var i = 0
+      while (i < n) { acc += a(ao + i).toDouble * b(bo + i).toDouble; i += 1 }
+      acc
+    }
+
+    /** Spark's `round(x, 4)` on a double, bit for bit: NaN and the
+      * infinities pass through; anything else rounds HALF_UP on its
+      * shortest decimal form. */
+    def round4(x: Double): Double =
+      if (x.isNaN || x.isInfinite) x
+      else java.math.BigDecimal.valueOf(x)
+        .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+
+    /** Rounding is monotone and moves a value by at most 0.5e-4, so a raw
+      * score this far below a kept (rounded) score can neither beat it
+      * nor tie it: it is skipped before the costly round. */
+    val PruneMargin = 1e-4
+  }
+
+  /** Per-partition state of [[cellKernel]]: the current cell's postings as
+    * primitive arrays (ids, labels, one flat float array, norms), grown by
+    * doubling and reused from cell to cell, and the per-probe buffers.
+    * Scores follow the catalog formula exactly —
+    * `round(cosineFromNorms(dotF32(q, c), |q|, |c|), 4)` — and ranks
+    * follow [[graft.operators.TopK.rankBefore]] (NaN largest, -0.0 =
+    * 0.0, ties to the smaller id), so the per-query merge is
+    * bit-identical to a rank window over all pairs. */
+  private final class CellScan(topK: Int, mine: Boolean) {
+    import CellScan._
+    private var cell = -1
+    private var n = 0
+    private var dim = -1
+    private var ids = new Array[Long](16)
+    private var labels = new Array[Long](16)
+    private var noLabels = new Array[Boolean](16)
+    private var norms = new Array[Double](16)
+    private var flat = new Array[Float](0)
+    // search: best-first top-k of the current probe
+    private val keptS = new Array[Double](topK)
+    private val keptI = new Array[Long](topK)
+    // mining: slot 0 = other label, slot 1 = same label
+    private val bestS = new Array[Double](2)
+    private val bestI = new Array[Long](2)
+    private val has = new Array[Boolean](2)
+
+    def post(c: Int, id: Long, lbl: Long, noLabel: Boolean, v: Array[Float],
+        nrm: Double): Unit = {
+      if (c != cell) { cell = c; n = 0 }
+      if (dim < 0) { dim = v.length; flat = new Array[Float](ids.length * dim) }
+      require(v.length == dim, s"vector of dimension ${v.length} among dimension $dim")
+      if (n == ids.length) {
+        val cap = 2 * n
+        ids = java.util.Arrays.copyOf(ids, cap)
+        labels = java.util.Arrays.copyOf(labels, cap)
+        noLabels = java.util.Arrays.copyOf(noLabels, cap)
+        norms = java.util.Arrays.copyOf(norms, cap)
+        flat = java.util.Arrays.copyOf(flat, cap * dim)
+      }
+      ids(n) = id; labels(n) = lbl; noLabels(n) = noLabel; norms(n) = nrm
+      System.arraycopy(v, 0, flat, n * dim, dim)
+      n += 1
+    }
+
+    /** Score one probe against the current cell's postings; the probe's
+      * candidates for the per-query merge. */
+    def probe(c: Int, id: Long, lbl: Long, noLabel: Boolean, v: Array[Float],
+        nrm: Double): Iterator[(Long, Long, Double, Boolean)] = {
+      if (c != cell || n == 0) return Iterator.empty // a cell without postings
+      require(v.length == dim, s"vector of dimension ${v.length} among dimension $dim")
+      if (mine) {
+        has(0) = false; has(1) = false
+        var j = 0
+        while (j < n) {
+          if (ids(j) != id) {
+            val slot = if (!noLabel && !noLabels(j) && labels(j) == lbl) 1 else 0
+            val raw = cosine(v, nrm, j)
+            if (!has(slot) || !(raw < bestS(slot) - PruneMargin)) {
+              val s = round4(raw)
+              if (!has(slot) ||
+                  graft.operators.TopK.rankBefore(s, ids(j), bestS(slot), bestI(slot), false)) {
+                bestS(slot) = s; bestI(slot) = ids(j); has(slot) = true
+              }
+            }
+          }
+          j += 1
+        }
+        Seq(0, 1).collect { case s if has(s) => (id, bestI(s), bestS(s), s == 1) }.iterator
+      } else {
+        var size = 0
+        var j = 0
+        while (j < n) {
+          if (ids(j) != id) {
+            val raw = cosine(v, nrm, j)
+            if (size < topK || !(raw < keptS(topK - 1) - PruneMargin)) {
+              val s = round4(raw)
+              var at = size // insertion point keeps the buffer best-first
+              while (at > 0 &&
+                  graft.operators.TopK.rankBefore(s, ids(j), keptS(at - 1), keptI(at - 1), false))
+                at -= 1
+              if (at < topK) {
+                var m = math.min(size, topK - 1)
+                while (m > at) { keptS(m) = keptS(m - 1); keptI(m) = keptI(m - 1); m -= 1 }
+                keptS(at) = s; keptI(at) = ids(j)
+                if (size < topK) size += 1
+              }
+            }
+          }
+          j += 1
+        }
+        Array.tabulate(size)(i => (id, keptI(i), keptS(i), false)).iterator
+      }
+    }
+
+    /** `cosineFromNorms`: 0.0 when either norm is zero. */
+    private def cosine(q: Array[Float], qNrm: Double, j: Int): Double = {
+      val denom = qNrm * norms(j)
+      if (denom == 0.0) 0.0 else dot(q, 0, flat, j * dim, dim) / denom
     }
   }
 }

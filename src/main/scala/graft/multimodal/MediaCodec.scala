@@ -273,27 +273,9 @@ object MediaCodec {
 
   /** REAL PCM decode through the JDK codec: every 16-bit LE mono sample.
     * None when no audio reader accepts the bytes or the format isn't
-    * 16-bit PCM. */
+    * 16-bit mono little-endian PCM ([[decodePcm16WithMeta]] says which). */
   def decodePcm16(bytes: Array[Byte]): Option[Array[Short]] =
-    try {
-      val in = javax.sound.sampled.AudioSystem
-        .getAudioInputStream(new ByteArrayInputStream(bytes))
-      try {
-        val fmt = in.getFormat
-        if (fmt.getSampleSizeInBits != 16 || fmt.getChannels != 1 ||
-            fmt.isBigEndian) None
-        else {
-          val raw = in.readAllBytes()
-          val out = new Array[Short](raw.length / 2)
-          var i = 0
-          while (i < out.length) {
-            out(i) = ((raw(2 * i) & 0xff) | (raw(2 * i + 1) << 8)).toShort
-            i += 1
-          }
-          Some(out)
-        }
-      } finally in.close()
-    } catch { case _: Exception => None }
+    decodePcm16WithMeta(bytes).toOption.map(_._4)
 
   // ---- frame container (MJPEG-style concatenated REAL image frames;
   // the container framing is ours — the JDK has no video demuxer — but

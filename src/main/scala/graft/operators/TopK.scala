@@ -24,6 +24,19 @@ import graft.api.Rec
   */
 object TopK {
 
+  /** Strict "(scoreA, idA) ranks before (scoreB, idB)": score best-first,
+    * then id asc. Matches Spark's SQL ordering exactly: NaN sorts as the
+    * LARGEST double (java.lang.Double.compare) and -0.0 equals 0.0 (Spark
+    * normalizes signed zeros before sorting) — a plain `!=`/`<` would
+    * silently evict NaN rows the rank window ranks first. Unboxed so
+    * per-candidate kernels can call it without allocating. */
+  private[graft] def rankBefore(scoreA: Double, idA: Long, scoreB: Double, idB: Long,
+      ascending: Boolean): Boolean = {
+    val cmp = java.lang.Double.compare(scoreA + 0.0, scoreB + 0.0) // -0.0 + 0.0 == 0.0
+    if (cmp != 0) { if (ascending) cmp < 0 else cmp > 0 }
+    else idA < idB
+  }
+
   /** Bounded top-k fold over (id, score) pairs; buffer = best-first
     * sorted Seq of at most k entries. O(k) insert keeps the hot path
     * allocation-light at small k (the ANN use: k ≤ 100). */
@@ -31,18 +44,8 @@ object TopK {
       extends Aggregator[(Long, Long, Double), Seq[(Double, Long)], Seq[(Double, Long)]] {
     require(k > 0, s"top-k needs k > 0, got $k")
 
-    /** Strict "a ranks before b": score best-first, then id asc.
-      * Matches Spark's SQL ordering exactly: NaN sorts as the LARGEST
-      * double (java.lang.Double.compare) and -0.0 equals 0.0 (Spark
-      * normalizes signed zeros before sorting) — a plain `!=`/`<` would
-      * silently evict NaN rows the rank window ranks first. */
-    private[TopK] def rankBefore(a: (Double, Long), b: (Double, Long)): Boolean = {
-      def norm(d: Double): Double = if (d == 0.0) 0.0 else d // -0.0 -> 0.0
-      val cmp = java.lang.Double.compare(norm(a._1), norm(b._1))
-      if (cmp != 0) { if (ascending) cmp < 0 else cmp > 0 }
-      else a._2 < b._2
-    }
-    private def before(a: (Double, Long), b: (Double, Long)): Boolean = rankBefore(a, b)
+    private def before(a: (Double, Long), b: (Double, Long)): Boolean =
+      rankBefore(a._1, a._2, b._1, b._2, ascending)
 
     def zero: Seq[(Double, Long)] = Vector.empty
 
@@ -83,9 +86,8 @@ object TopK {
       extends Aggregator[(Long, Long, Double, String), Seq[(Double, Long, String)],
         Seq[(Double, Long, String)]] {
     require(k > 0, s"top-k needs k > 0, got $k")
-    private val ord = new BoundedTopK(k, ascending)
     private def before(a: (Double, Long, String), b: (Double, Long, String)): Boolean =
-      ord.rankBefore((a._1, a._2), (b._1, b._2))
+      rankBefore(a._1, a._2, b._1, b._2, ascending)
 
     def zero: Seq[(Double, Long, String)] = Vector.empty
 
@@ -128,17 +130,22 @@ object TopK {
     * column types fail fast here with a clear message. */
   private def checkContract(scored: DataFrame, groupCol: String,
       idCol: String, scoreCol: String): Unit = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, NumericType, ShortType}
-    def tpe(c: String) = scored.schema(c).dataType
-    val integral = Set[org.apache.spark.sql.types.DataType](
-      ByteType, ShortType, IntegerType, LongType)
-    for (c <- Seq(groupCol, idCol))
-      require(integral(tpe(c)),
-        s"TopK.perGroup: column '$c' must be integral (byte/short/int/long), " +
-          s"got ${tpe(c).simpleString} — a non-numeric id would cast to NULL")
-    require(tpe(scoreCol).isInstanceOf[NumericType],
+    for (c <- Seq(groupCol, idCol)) requireIntegral(scored, c, "TopK.perGroup")
+    val tpe = scored.schema(scoreCol).dataType
+    require(tpe.isInstanceOf[org.apache.spark.sql.types.NumericType],
       s"TopK.perGroup: score column '$scoreCol' must be numeric, " +
-        s"got ${tpe(scoreCol).simpleString}")
+        s"got ${tpe.simpleString}")
+  }
+
+  /** Fail fast unless `df(c)` is byte/short/int/long: ids and keys ride
+    * kernels as Long, and a cast of anything else would become NULL. */
+  private[graft] def requireIntegral(df: DataFrame, c: String, who: String): Unit = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    val tpe = df.schema(c).dataType
+    require(Set[org.apache.spark.sql.types.DataType](
+        ByteType, ShortType, IntegerType, LongType)(tpe),
+      s"$who: column '$c' must be integral (byte/short/int/long), " +
+        s"got ${tpe.simpleString} — a non-numeric id would cast to NULL")
   }
 
   /** Per-group exact top-k of `scored` by `scoreCol` (desc when
@@ -203,7 +210,7 @@ object TopK {
     *     0.0; BoundedTopK — like Spark's sort — treats them equal), and
     *     IEEE `x + 0.0 == x` for every other double including NaN, which
     *     the struct comparison ranks greatest exactly like
-    *     java.lang.Double.compare in [[BoundedTopK.rankBefore]];
+    *     java.lang.Double.compare in [[rankBefore]];
     *   - `~id` (bitwise NOT) is a total order-REVERSING bijection on
     *     longs (no MinValue overflow, unlike negation), so the max picks
     *     the SMALLEST id on score ties;

@@ -2592,12 +2592,13 @@ object LlmPipeline extends Catalog {
 
   // -- corpus-scale contrastive mining twin: queries = THE WHOLE CORPUS.
   //    The broadcast-query-batch shape above would OOM here (broadcasting
-  //    the corpus to itself); this path routes BOTH sides through IVF
-  //    cell assignment and a plain shuffled equi-join on the cell id —
-  //    no broadcast, no driver collect (VectorIndex.minePairs). Run with
-  //    nProbe = k the cell routing is EXACT (each pair meets once, in
-  //    the corpus vector's cell), so the brute-force SQL self-join
-  //    mirrors it bit-for-bit; production uses nProbe << k (recall
+  //    the corpus to itself); this path routes every vector to its IVF
+  //    cells in one shuffle and scores each cell's probes against its
+  //    postings in a per-cell kernel — no broadcast, no collect, no
+  //    pair join (VectorIndex.minePairs). Run with nProbe = k the
+  //    cell routing is EXACT (each pair meets once, in the corpus
+  //    vector's cell), so the brute-force SQL self-join mirrors it
+  //    bit-for-bit; production uses nProbe << k (recall
   //    pinned by VectorIndexSpec) and trains/persists the codebook once.
   q("q_contrastive_pairs_self",
     """WITH s AS (

@@ -490,6 +490,9 @@ class PlanSpec extends AnyFunSuite {
     // spill-safe pre-filter before collect_list) and is allowed
     assert(!plan.contains("row_number"), plan.take(1500))
     assert(!plan.contains("rank("), plan.take(1500))
+    // exactly one window, and it is the bucket count
+    assert("windowspecdefinition".r.findAllMatchIn(plan).size === 1, plan.take(3000))
+    assert(plan.contains("count(1) windowspecdefinition("), plan.take(3000))
   }
 
   test("HLL registers: one partial-agg'd shuffle, no join before estimate") {

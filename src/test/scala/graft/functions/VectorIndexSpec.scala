@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -115,5 +117,155 @@ class VectorIndexSpec extends AnyFunSuite {
       exact.count { case (k2, es) => m.get(k2).exists(_ >= es) }.toDouble / exact.size
     assert(recall(multi) >= recall(single),
       s"multi-assign recall ${recall(multi)} < single ${recall(single)}")
+  }
+
+  // ---- crafted corpus: what the sf0.01 oracle tables never produce ----
+
+  /** 60 seeded 8-dim vectors around four directions, plus: two exact
+    * duplicates of vector 5 (ids 100, 101 — identical scores, the tie
+    * must go to the smaller id), a near-duplicate whose cosine to 5
+    * differs only past the fourth decimal (ties after rounding), a
+    * zero vector (id 200, every score 0.0), its twin (201) and a row
+    * with a null label (never "same"). */
+  private lazy val crafted: DataFrame = {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(17)
+    val dirs = Array.fill(4)(Array.fill(8)(rnd.nextGaussian().toFloat))
+    val base = (0 until 60).map { i =>
+      val d = dirs(i % 4)
+      (i.toLong, Option(i % 3), d.map(x => x + 0.6f * rnd.nextGaussian().toFloat))
+    }
+    val v5 = base(5)._3
+    val near = v5.clone(); near(7) = near(7) + 1e-5f
+    val extra = Seq(
+      (100L, Option(1), v5.clone()), (101L, Option(2), v5.clone()),
+      (102L, Option(2), near),
+      (200L, Option(0), new Array[Float](8)), (201L, Option(1), new Array[Float](8)),
+      (300L, Option.empty[Int], dirs(1).clone()))
+    (base ++ extra).toDF("vec_id", "label", "embedding").repartition(3)
+  }
+
+  /** Pairs that meet in the index — some posting cell of the neighbor is
+    * among the query's probed cells — scored with the catalog formula
+    * and ranked with `row_number`. `nProbe = k` is every pair. */
+  private def referencePairs(emb: DataFrame, cb: VectorIndex.Codebook,
+      nProbe: Int, assignR: Int): DataFrame = {
+    val rank = udf((v: Seq[Float]) => cb.nearestN(v, cb.centroids.length))
+    val ranked = emb.withColumn("cells", rank(col("embedding")))
+    val q = ranked.select(col("vec_id").as("query_id"), col("label").as("q_label"),
+      col("embedding").as("qe"), slice(col("cells"), 1, nProbe).as("probes"))
+    val c = ranked.select(col("vec_id").as("neighbor_id"), col("label").as("n_label"),
+      col("embedding").as("ce"), slice(col("cells"), 1, assignR).as("posts"))
+    q.crossJoin(c)
+      .filter(col("query_id") =!= col("neighbor_id") &&
+        arrays_overlap(col("probes"), col("posts")))
+      .select(col("query_id"), col("neighbor_id"),
+        when(col("n_label") === col("q_label"), lit("pos")).otherwise(lit("neg"))
+          .as("pair_type"),
+        round(VectorFunctions.cosine(col("qe"), col("ce")), 4).as("sim"))
+  }
+
+  private def bruteTopK(pairs: DataFrame, topK: Int): Seq[(Long, Long, Double, Int)] =
+    pairs
+      .withColumn("rank", row_number().over(Window.partitionBy("query_id")
+        .orderBy(col("sim").desc, col("neighbor_id"))))
+      .filter(col("rank") <= topK)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3), r.getInt(4)))
+      .toSeq.sorted
+
+  private def bruteMined(pairs: DataFrame): Seq[(Long, String, Long, Double)] =
+    pairs
+      .withColumn("rn", row_number().over(Window.partitionBy("query_id", "pair_type")
+        .orderBy(col("sim").desc, col("neighbor_id"))))
+      .filter(col("rn") === 1)
+      .collect().map(r => (r.getLong(0), r.getString(2), r.getLong(1), r.getDouble(3)))
+      .toSeq.sorted
+
+  private def selfRows(emb: DataFrame, cb: VectorIndex.Codebook, nProbe: Int,
+      topK: Int): Seq[(Long, Long, Double, Int)] =
+    VectorIndex.searchSelf(emb, "vec_id", "embedding", cb, nProbe, topK)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+      .toSeq.sorted
+
+  private def minedRows(emb: DataFrame, cb: VectorIndex.Codebook, nProbe: Int,
+      assignR: Int): Seq[(Long, String, Long, Double)] =
+    VectorIndex.minePairs(emb, "vec_id", "embedding", "label", cb, nProbe, assignR)
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3)))
+      .toSeq.sorted
+
+  test("crafted set: self search and mining equal the brute-force rank window " +
+      "(score ties, zero norms, null labels, nProbe < k, assignR = 2)") {
+    val emb = crafted
+    val k = 6
+    val cb = VectorIndex.train(emb, "vec_id", "embedding", k = k, iters = 2)
+    for ((nProbe, assignR) <- Seq((k, 1), (2, 1), (2, 2), (1, 3))) {
+      val pairs = referencePairs(emb, cb, nProbe, assignR).cache()
+      assert(minedRows(emb, cb, nProbe, assignR) === bruteMined(pairs),
+        s"minePairs nProbe=$nProbe assignR=$assignR")
+      if (assignR == 1)
+        assert(selfRows(emb, cb, nProbe, topK = 4) === bruteTopK(pairs, 4),
+          s"searchSelf nProbe=$nProbe")
+      pairs.unpersist()
+    }
+    // the crafted edge cases actually occur in the exact answer
+    val exact = selfRows(emb, cb, nProbe = k, topK = 8)
+    // exact duplicates (100, 101) and the near-duplicate (102) share the
+    // rounded top score of 5, in id order
+    val of5 = exact.filter(_._1 == 5L).sortBy(_._4)
+    val tiedTop = of5.filter(_._3 == of5.head._3).map(_._2)
+    assert(Seq(100L, 101L, 102L).forall(tiedTop.contains), of5)
+    assert(tiedTop === tiedTop.sorted, of5)
+    assert(exact.filter(_._1 == 200L).forall(_._3 == 0.0)) // zero norm scores 0.0
+    assert(exact.filter(_._1 == 200L).sortBy(_._4).map(_._2).take(2) === Seq(0L, 1L))
+    val mined = minedRows(emb, cb, nProbe = k, assignR = 1)
+    assert(mined.filter(_._1 == 300L).map(_._2) === Seq("neg")) // null label: no "pos"
+  }
+
+  test("one-pass Lloyd step equals a groupBy(cell, pos).avg of the same assignment") {
+    val emb = Tables.load(spark, dir, "embeddings")
+    val k = 8
+    val init = VectorIndex.Codebook(
+      emb.orderBy("vec_id").limit(k).select("embedding").collect()
+        .map(_.getSeq[Float](0).map(_.toDouble).toArray))
+    val trained = VectorIndex.train(emb, "vec_id", "embedding", k = k, iters = 1)
+    val means = VectorIndex.assignCells(emb, "embedding", init)
+      .select(col("__cell"), posexplode(col("embedding")).as(Seq("pos", "x")))
+      .groupBy("__cell", "pos").agg(avg(col("x")).as("m"))
+      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
+    assert(means.keySet.map(_._1).size > 1)
+    for (c <- 0 until k; pos <- 0 until 64) {
+      val want = means.getOrElse((c, pos), init.centroids(c)(pos)) // empty cell keeps its centroid
+      assert(math.abs(trained.centroids(c)(pos) - want) <= 1e-12,
+        s"cell $c pos $pos: ${trained.centroids(c)(pos)} vs $want")
+    }
+  }
+
+  test("the per-cell kernel keeps its explicit partition count under AQE") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec,
+      AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeLike}
+    val emb = Tables.load(spark, dir, "embeddings")
+    val k = 8
+    val cb = VectorIndex.train(emb, "vec_id", "embedding", k = k, iters = 1)
+    val mined = VectorIndex.minePairs(emb, "vec_id", "embedding", "label", cb, nProbe = k)
+    mined.collect()
+    val plan = mined.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
+      case p => p
+    }
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case s: QueryStageExec => walk(s.plan)
+      case _ => p.children.flatMap(walk)
+    })
+    val nodes = walk(plan)
+    val kernel = nodes.collect {
+      case e: ShuffleExchangeLike if e.shuffleOrigin == REPARTITION_BY_NUM => e.numPartitions }
+    assert(kernel === Seq(math.min(k, spark.sparkContext.defaultParallelism)),
+      plan.toString.take(3000))
+    val reread = nodes.collect { case r: AQEShuffleReadExec => r.child }
+      .collect { case s: ShuffleQueryStageExec => s.shuffle.shuffleOrigin }
+    assert(!reread.contains(REPARTITION_BY_NUM), plan.toString.take(3000))
   }
 }

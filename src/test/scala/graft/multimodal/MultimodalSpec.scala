@@ -147,8 +147,9 @@ class MultimodalSpec extends AnyFunSuite {
     // carry the actual channel count, not "rejected"
     val stereo = {
       val b = MediaCodec.encodeWavPcm16(8000, samples.take(8))
-      // RIFF fmt chunk: channels at offset 22 (LE short), block align 34,
-      // byte rate 28 — patch to 2-channel so only the header changes
+      // RIFF fmt chunk: channels at offset 22 (LE short), byte rate 28,
+      // block align 32, bits per sample 34 — patch to 2-channel so only
+      // the header changes
       b(22) = 2; b(32) = 4
       val byteRate = 8000 * 4
       b(28) = (byteRate & 0xff).toByte; b(29) = ((byteRate >> 8) & 0xff).toByte
