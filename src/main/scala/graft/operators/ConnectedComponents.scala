@@ -117,10 +117,7 @@ object ConnectedComponents {
         .map { case (l, (n, ll)) => (n, math.min(l, ll.getOrElse(l))) }
         .partitionBy(part)
       next.localCheckpoint()
-      val t0 = System.nanoTime()
       val s = labelSum(next)
-      if (sys.env.contains("GRAFT_CC_TRACE")) System.err.println(
-        f"[cc] round ${it + 1}: ${(System.nanoTime() - t0) / 1e9}%.3f s")
       converged = prevSum.contains(s)
       prevSum = Some(s)
       val prior = labels

@@ -5323,11 +5323,14 @@ object LlmPipeline extends Catalog {
   //    cross-multiplied into exact integer MICRO-points:
   //      s = 22000·tf·(2N−2df+1)·10⁶ DIV ((10000·tf+3000+9·dlnorm)·(2df+1))
   //    so the per-doc sum is an exact BIGINT and the ranking has no
-  //    float summation anywhere (safe while tf·N ≲ 4·10⁸ per the BIGINT
-  //    bound; beyond that, double scoring is the documented default).
+  //    float summation anywhere (safe while tf·N ≲ 4·10⁸; past the BIGINT
+  //    bound the query fails with an overflow error instead of wrapping,
+  //    and double scoring is the documented escape).
   //    Queries: each doc_id < 5 queries with its distinct ≥6-char terms.
-  //    Scale: the query-term set broadcasts against the posting lists
-  //    (tf), one (query,doc) shuffle, bounded top-5.
+  //    Scale: functions.Bm25 — the query terms ride the task closures;
+  //    two map-only passes over the spread corpus (n, Σdl, df; then tf,
+  //    scores and a bounded top-5 per query and partition), then an
+  //    exact merge of the ≤ queries × 5 × partitions collected rows.
   q("q_bm25_search",
     s"""WITH t AS (
        |  SELECT doc_id,
@@ -5361,41 +5364,8 @@ object LlmPipeline extends Catalog {
        |    row_number() OVER (PARTITION BY query_id ORDER BY score_micro DESC, doc_id) AS rank
        |  FROM agg)
        |SELECT query_id, doc_id, score_micro, rank FROM ranked WHERE rank <= 5""") { (s, dir) =>
-    val tok = spread(load(s, dir, "documents"))
-      .select(col("doc_id"), explode(T.tokens(col("text"))).as("token"))
-      // consumed by several branches with zero plan sharing (r15
-      // before-plan: up to 10 parquet scans) — tokenize once
-      .localCheckpoint(false)
-    val tf = tok.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-    val dfreq = tok.select("doc_id", "token").distinct()
-      .groupBy("token").agg(count(lit(1)).as("df"))
-    // r16 (VERDICT r15 #8): doc length from the checkpointed token table
-    // instead of a SECOND tokenizing scan of documents. The old `dl` kept
-    // zero-token docs (dl = 0) only for tot's (n, tl): the sc join below
-    // never reaches them (a doc with no tokens has no tf rows), their tl
-    // contribution is 0, and n is just the document COUNT — read here
-    // from a doc_id-only scan (no tokenization; parquet prunes to one
-    // column). Scores are value-identical.
-    val dl = tok.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-    val tot = spread(load(s, dir, "documents")).select(col("doc_id"))
-      .agg(count(lit(1)).as("n"))
-      .crossJoin(tok.agg(count(lit(1)).as("tl")))
-    val qt = tok.filter(col("doc_id") < 5 && length(col("token")) >= 6)
-      .select(col("doc_id").as("query_id"), col("token").as("qtoken")).distinct()
-    val hit = tf.join(broadcast(qt),
-      col("qtoken") === col("token") && col("query_id") =!= col("doc_id"))
-      .select(col("query_id"), col("doc_id"), col("token"), col("tf"))
-    val sc = hit
-      .join(dfreq, "token")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(tot))
-      .withColumn("s", expr(
-        """(22000 * tf * (2 * n - 2 * df + 1) * 1000000)
-          | div ((10000 * tf + 3000 + 9 * ((dl * n * 1000) div tl)) * (2 * df + 1))""".stripMargin))
-    val agg = sc.groupBy("query_id", "doc_id").agg(sum("s").as("score_micro"))
-    graft.operators.TopK.perGroup(agg, "query_id", "doc_id", "score_micro",
-        k = 5, ascending = false)
-      .withColumn("score_micro", col("score_micro").cast("long"))
+    graft.functions.Bm25.topK(spread(load(s, dir, "documents")),
+      load(s, dir, "documents").filter(col("doc_id") < 5), k = 5)
   }
 
   // -- REAL image resize round-trip: encode the deterministic PNG per

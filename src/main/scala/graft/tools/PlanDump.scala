@@ -21,7 +21,8 @@ object PlanDump {
     val qarg = if (args.length > 1) args(1) else "all"
     val reps = if (args.length > 2) args(2).toInt else 0
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val suffix = sys.env.getOrElse("PLANDUMP_SUFFIX", "")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

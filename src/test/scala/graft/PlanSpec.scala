@@ -310,13 +310,17 @@ class PlanSpec extends AnyFunSuite {
     // the dim-join is the inverted-index merge: the query vectors (a
     // bounded batch) broadcast; the corpus posting list never re-shuffles
     // for the join, and nothing degenerates into a cartesian pass
-    for (q <- Seq("q_rag_retrieval", "q_bm25_search")) {
-      val plan = planOf(q)
-      assert(plan.contains("BroadcastHashJoin"), s"$q: ${plan.take(1500)}")
-      // (bm25's 1-row corpus-totals cross join is a broadcast NLJ by
-      // design — only a true cartesian pairing is banned)
-      assert(!plan.contains("CartesianProduct"), s"$q: ${plan.take(1500)}")
-    }
+    val plan = planOf("q_rag_retrieval")
+    assert(plan.contains("BroadcastHashJoin"), plan.take(1500))
+    assert(!plan.contains("CartesianProduct"), plan.take(1500))
+  }
+
+  test("BM25 search is a kernel: the returned plan has no join, window or shuffle") {
+    // functions.Bm25 scores and ranks in two map-only RDD passes and
+    // returns the merged top-k as a local relation
+    val plan = planOf("q_bm25_search")
+    for (op <- Seq("Join", "Window", "Exchange", "CartesianProduct"))
+      assert(!plan.contains(op), s"$op: ${plan.take(1500)}")
   }
 
   test("span removal: banded family + ONE doc-keyed hit shuffle, cleanup is a map") {
