@@ -18,8 +18,6 @@ import org.apache.spark.sql.functions._
 object DedupFunctions {
   import TextFunctions.{md5Long, normalizeText, tokens}
 
-  private val Prime = 2147483647L // 2^31 - 1 (Mersenne)
-
   /** Distinct word n-gram shingles of the normalized text.
     *
     * The token array is lambda-bound so it's computed once per row — a
@@ -43,24 +41,6 @@ object DedupFunctions {
           .otherwise(transform(sequence(lit(1), count), i => s.substr(i, lit(k)))))
     }
 
-  /** Universal-hash parameters for the i-th MinHash function (fixed,
-    * engine-independent). */
-  def minhashParams(i: Int): (Long, Long) = (2L * i + 1, 12345L + 7919L * i)
-
-  /** Base hashes of the shingle array, folded into [0, P). Computed once
-    * per shingle; the k signature rows are cheap affine transforms of
-    * these (md5 is ~100x the cost of the multiply-add, so hashing once
-    * instead of k times dominates MinHash throughput). */
-  def shingleHashes(shingles: Column): Column =
-    transform(shingles, s => md5Long(s) % Prime)
-
-  /** One MinHash value from pre-computed base hashes: min of (a*h + b)
-    * mod P. */
-  def minhashOne(hashes: Column, i: Int): Column = {
-    val (a, b) = minhashParams(i)
-    array_min(transform(hashes, h => (h * a + b) % Prime))
-  }
-
   /** Bind `c`'s value once and use it several times inside `f` — the
     * array-wrap lambda idiom. Catalyst's CollapseProject freely inlines
     * aliased expressions into every use site, so an expensive subtree
@@ -69,15 +49,14 @@ object DedupFunctions {
   def bindOnce(c: Column)(f: Column => Column): Column =
     element_at(transform(array(c), f), 1)
 
-  /** MinHash signature of length k as an array column. Base md5 hashes are
-    * computed once per shingle; the k rows are affine transforms
-    * (a_i = 2i+1, b_i from [[minhashParams]]). */
-  def minhashSignature(shingles: Column, k: Int): Column =
-    bindOnce(shingleHashes(shingles)) { hs =>
-      transform(sequence(lit(0), lit(k - 1)), i =>
-        array_min(transform(hs, h =>
-          (h * (i * 2 + 1) + (lit(12345L) + lit(7919L) * i)) % Prime)))
-    }
+  /** MinHash signature of length k over the text's distinct word
+    * 3-shingles (the [[wordShingles]] of `text`): per shingle
+    * `h = md5Long(shingle) % (2^31 - 1)`, and row i is the min over h of
+    * `(h * (2i + 1) + 12345 + 7919 i) % (2^31 - 1)`. One codegen'd pass
+    * per row ([[graft.plans.HashKernels.md5MinHash]]); a null text gives
+    * k nulls. */
+  def minhashSignature(text: Column, k: Int): Column =
+    graft.plans.NativeHash.md5MinHash(text, 3, k)
 
   /** LSH band key: hash of one band (contiguous rows of the signature).
     * Docs sharing any band key are candidate pairs. */

@@ -34,7 +34,7 @@ object NearDupIndex {
     require(k % bands == 0, s"k=$k must be divisible by bands=$bands")
     docs
       .select(col(idCol).as("id"),
-        D.minhashSignature(D.wordShingles(col(textCol), 3), k).as("sig"))
+        D.minhashSignature(col(textCol), k).as("sig"))
       .select(col("id"), col("sig"),
         explode(D.bandKeys(col("sig"), bands, k / bands)).as("bk"))
       .select(col("id"), col("sig"),

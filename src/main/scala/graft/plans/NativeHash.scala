@@ -1,9 +1,12 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lower
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -146,7 +149,11 @@ object HashKernels {
   def md5Long60(s: UTF8String): Long = {
     val md = md5Local.get()
     md.reset()
-    val d = md.digest(s.getBytes)
+    long60(md.digest(s.getBytes))
+  }
+
+  /** The first 60 bits of a digest (see [[md5Long60]]). */
+  private def long60(d: Array[Byte]): Long = {
     var v = 0L
     var i = 0
     while (i < 7) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
@@ -178,12 +185,8 @@ object HashKernels {
       while (i < len && !isRegexSpace(text.charAt(i))) i += 1
       if (i > start) {
         md.reset()
-        val d = md.digest(text.substring(start, i)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        var v = 0L
-        var k = 0
-        while (k < 7) { v = (v << 8) | (d(k) & 0xffL); k += 1 }
-        val h = (v << 4) | ((d(7) & 0xffL) >>> 4)
+        val h = long60(md.digest(text.substring(start, i)
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
         var b = 0
         while (b < bits) {
           if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
@@ -197,9 +200,78 @@ object HashKernels {
     out
   }
 
+  private final val MinHashPrime = 2147483647L // 2^31 - 1
+
+  /** One-pass md5-family MinHash signature: the codegen'd twin of the
+    * interpreted `minhashSignature(wordShingles(text, n), k)` column
+    * pipeline, bit for bit. `s` is the already-lowercased text (the
+    * expression's child is Spark's own `lower`), or null.
+    *   - Tokens are the maximal runs of non-`\s` bytes. Java regex `\s`
+    *     is ASCII `[ \t\n\x0B\f\r]`, and those bytes never occur inside
+    *     a multi-byte UTF-8 sequence, so splitting bytes splits chars.
+    *   - A shingle is n consecutive tokens joined by one space; fewer
+    *     than n tokens make the whole text one shingle (`""` when there
+    *     are none). The digest is fed token by token, so no shingle
+    *     string is built.
+    *   - `h = md5Long60(shingle) % (2^31 - 1)`, and
+    *     `sig(i) = min over h of (h * (2i + 1) + 12345 + 7919 i) % (2^31 - 1)`.
+    *     A repeated shingle leaves the min unchanged, so the distinct
+    *     step of the column pipeline is not needed.
+    *   - A null text gives k nulls, as the column pipeline does.
+    * Equivalence pinned by NativeHashSpec. */
+  def md5MinHash(s: UTF8String, n: Int, k: Int): ArrayData = {
+    if (s == null) return new GenericArrayData(new Array[Any](k))
+    val bytes = s.getBytes
+    val len = bytes.length
+    var starts = new Array[Int](32)
+    var ends = new Array[Int](32)
+    var m = 0
+    var i = 0
+    while (i < len) {
+      while (i < len && isRegexSpace(bytes(i))) i += 1
+      val start = i
+      while (i < len && !isRegexSpace(bytes(i))) i += 1
+      if (i > start) {
+        if (m == starts.length) {
+          starts = java.util.Arrays.copyOf(starts, 2 * m)
+          ends = java.util.Arrays.copyOf(ends, 2 * m)
+        }
+        starts(m) = start
+        ends(m) = i
+        m += 1
+      }
+    }
+    val sig = Array.fill(k)(Long.MaxValue)
+    val md = md5Local.get()
+    md.reset()
+    val w = math.min(n, m) // words per shingle: the whole text when m < n
+    val shingles = math.max(1, m - n + 1)
+    var first = 0
+    while (first < shingles) {
+      var t = first
+      while (t < first + w) {
+        if (t > first) md.update(' '.toByte)
+        md.update(bytes, starts(t), ends(t) - starts(t))
+        t += 1
+      }
+      val h = long60(md.digest()) % MinHashPrime // digest() resets md
+      var j = 0
+      while (j < k) {
+        val v = (h * (2 * j + 1) + 12345L + 7919L * j) % MinHashPrime
+        if (v < sig(j)) sig(j) = v
+        j += 1
+      }
+      first += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(sig)
+  }
+
   /** Java regex `\s`: ASCII whitespace only (unlike Character.isWhitespace). */
   private def isRegexSpace(c: Char): Boolean =
     c == ' ' || (c >= '\t' && c <= '\r') // \t \n VT \f \r
+
+  private def isRegexSpace(b: Byte): Boolean =
+    b == ' ' || (b >= '\t' && b <= '\r')
 
   private def hashBytes(h0: Long, bs: Array[Byte]): Long = {
     var h = h0
@@ -279,6 +351,30 @@ case class Md5SimHash64(child: Expression, bits: Int) extends UnaryExpression {
     copy(child = newChild)
 }
 
+/** `md5_minhash(lower(text), n, k)` — one-pass codegen'd MinHash
+  * signature over n-word shingles on the oracle md5 hash family (see
+  * [[HashKernels.md5MinHash]]); replaces the interpreted shingle → md5 per
+  * shingle → k affine-min lambda chain bit-exactly. Not null-propagating:
+  * a null text gives an array of k nulls, so the generated code passes
+  * the null through to the kernel instead of using `defineCodeGen`. */
+case class Md5MinHash(child: Expression, n: Int, k: Int) extends UnaryExpression {
+  require(n >= 1 && k >= 1)
+  override def dataType: DataType = ArrayType(LongType, containsNull = true)
+  override def nullable: Boolean = false
+  override def prettyName: String = "md5_minhash"
+  override def eval(input: InternalRow): Any =
+    HashKernels.md5MinHash(child.eval(input).asInstanceOf[UTF8String], n, k)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      ArrayData ${ev.value} = graft.plans.HashKernels.md5MinHash(
+        ${c.isNull} ? null : ${c.value}, $n, $k);""", isNull = FalseLiteral)
+  }
+  override protected def withNewChildInternal(newChild: Expression): Md5MinHash =
+    copy(child = newChild)
+}
+
 /** `fnv_fold_longs(array<long>, seed)` — seeded FNV-1a fold over long
   * lanes (wrapping multiply in codegen, exempt from ANSI overflow
   * checks); the LSH band-key compressor. */
@@ -308,6 +404,8 @@ object NativeHash {
     column(SimHash64Native(expression(c), bits))
   def md5SimHash64(c: Column, bits: Int = 60): Column =
     column(Md5SimHash64(expression(c), bits))
+  def md5MinHash(text: Column, n: Int, k: Int): Column =
+    column(Md5MinHash(expression(lower(text)), n, k))
 
   /** Register `fnv64` / `shingle_hashes` for SQL use. */
   def register(spark: SparkSession): Unit = {

@@ -519,17 +519,9 @@ object LlmPipeline extends Catalog {
 
   /** Spark side of the same candidate-pair generation: band buckets ->
     * in-bucket pairs, one pass (no self-join recompute). */
-  private def minhashPairs(s: org.apache.spark.sql.SparkSession, dir: String) =
-    minhashPairsFromShingles(spread(load(s, dir, "documents"))
-      .select(col("doc_id"), D.wordShingles(col("text"), 3).as("shs")))
-
-  /** [[minhashPairs]] over an already-shingled (doc_id, shs) table — lets
-    * q_lsh_pr_eval share ONE tokenize+shingle pass between the candidate
-    * side and its exact-Jaccard truth side (r16, VERDICT r15 #7). Same
-    * signatures, buckets and pairs as before the split. */
-  private def minhashPairsFromShingles(shd: org.apache.spark.sql.DataFrame) = {
-    val sigs = shd.select(col("doc_id"),
-      D.minhashSignature(col("shs"), 16).as("sig"))
+  private def minhashPairs(s: org.apache.spark.sql.SparkSession, dir: String) = {
+    val sigs = spread(load(s, dir, "documents"))
+      .select(col("doc_id"), D.minhashSignature(col("text"), 16).as("sig"))
     // bucket cap (oracle-mirrored): an exact-dup flood sharing every
     // band hash must not explode O(n^2) pairs in one task. The r16
     // window-count pre-filter (erFuzzyPairs/ahashPairsFrom) was A/B'd
@@ -590,9 +582,11 @@ object LlmPipeline extends Catalog {
   // -- dedup-group closure: connected components over the MinHash pair
   //    graph (A~B, B~C => one group even though A,C never paired), with
   //    the minimum doc id as the canonical representative to keep. The
-  //    Spark side runs distributed min-label propagation (one shuffle per
-  //    round, rounds = component diameter — small for near-dup cliques);
-  //    the oracle closes the same graph with a recursive CTE.
+  //    Spark side contracts each partition's edges with a local
+  //    union-find and stops there when no component spans partitions
+  //    (one shuffle); otherwise min-label propagation with pointer
+  //    jumping finishes the spanning components. The oracle closes the
+  //    same graph with a recursive CTE.
   q("q_dedup_components",
     s"""WITH RECURSIVE $SqlMinhashPairCtes,
        |pairs AS ($SqlMinhashPairSelect),
@@ -712,8 +706,7 @@ object LlmPipeline extends Catalog {
        |JOIN sizes sb ON sb.doc_id = e.doc_b""") { (s, dir) =>
     val pairs = minhashPairs(s, dir)
     val sigs = spread(load(s, dir, "documents"))
-      .select(col("doc_id"),
-        D.minhashSignature(D.wordShingles(col("text"), 3), 16).as("sig"))
+      .select(col("doc_id"), D.minhashSignature(col("text"), 16).as("sig"))
     val sh = spread(load(s, dir, "documents"))
       .select(col("doc_id"), explode(D.wordShingles(col("text"), 3)).as("shingle"))
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
@@ -947,7 +940,7 @@ object LlmPipeline extends Catalog {
     val docs = s.readStream.schema(raw.schema).parquet(s"$dir/documents.parq*")
     val ks = graft.api.GraftStreams(s).stream[Long, Seq[Long]](docs,
       col("doc_id"),
-      D.minhashSignature(D.wordShingles(col("text"), 3), 16),
+      D.minhashSignature(col("text"), 16),
       expr("timestamp_micros(doc_id)"))
     val name = s"dsl_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     graft.streaming.StreamingNearDup.minhashPairs(ks)
@@ -6894,18 +6887,14 @@ object LlmPipeline extends Catalog {
        |       ELSE 0 END AS BIGINT) AS recall_micro
        |FROM tr JOIN tp USING (threshold_micro) CROSS JOIN nc""") { (s, dir) =>
     import s.implicits._
-    // r16 (VERDICT r15 #7): ONE tokenize+shingle pass shared by the LSH
-    // candidate side and the exact-Jaccard truth side (before: two full
-    // wordShingles pipelines — the plan has no scans because the
-    // checkpoints are eager, but the r15 shape ran the shingle kernel
-    // twice per doc)
-    val shd = spread(load(s, dir, "documents"))
-      .select(col("doc_id"), D.wordShingles(col("text"), 3).as("shs"))
-      .localCheckpoint(false)
-    val cand = minhashPairsFromShingles(shd).localCheckpoint()
+    // the candidate side hashes text straight into signatures (the
+    // md5_minhash kernel); only the exact-Jaccard truth side builds
+    // shingle strings, in one pass
+    val cand = minhashPairs(s, dir).localCheckpoint()
     // exact kept-shingle Jaccard in integer micro units (the
     // q_dedup_ngram_jaccard shape, unthresholded)
-    val sh = shd.select(col("doc_id"), explode(col("shs")).as("s"))
+    val sh = spread(load(s, dir, "documents"))
+      .select(col("doc_id"), explode(D.wordShingles(col("text"), 3)).as("s"))
     val kept = sh.groupBy("s").agg(collect_list(col("doc_id")).as("ids"))
       .filter(size(col("ids")) <= 50).localCheckpoint()
     val sized = kept.select(explode(col("ids")).as("doc_id"))

@@ -105,8 +105,9 @@ object StreamingNearDup {
     * (reference lineage: the same banded-LSH family; here docs meeting
     * in a per-(band, bandhash) bucket ARE the output, no distance
     * rescore). `sigs`: key = doc id, value = the k-element MinHash
-    * signature (compute with `DedupFunctions.minhashSignature`
-    * upstream). Each band's hash and index pack into one compact long
+    * signature (compute it upstream from the text column with
+    * `DedupFunctions.minhashSignature(text, k)`, one codegen'd pass per
+    * row). Each band's hash and index pack into one compact long
     * bucket id (bandhash is 60-bit, band < 8 — no collision across
     * bands), so stage 1 shuffles once on a long key exactly like the
     * SimHash twin; the same once-only stage collapses pairs that meet

@@ -533,6 +533,37 @@ class PlanSpec extends AnyFunSuite {
       plan.contains("BroadcastNestedLoopJoin BuildRight"), plan.take(1500))
   }
 
+  test("MinHash pair graph: one md5_minhash kernel, no interpreted shingle lambda") {
+    import org.apache.spark.sql.execution.SparkStrategy
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    // the shingle lambda was transform(sequence(1, n), i ->
+    // concat_ws(' ', slice(tokens, i, 3))), hashed per element
+    def assertNoLambda(plan: String, what: String): Unit = {
+      assert(!plan.contains("sequence("), s"$what:\n${plan.take(1500)}")
+      assert(!plan.contains("concat_ws( , slice("), s"$what:\n${plan.take(1500)}")
+    }
+    val lsh = planOf("q_dedup_minhash_lsh")
+    assert(lsh.contains("md5_minhash("), lsh.take(1500))
+    assertNoLambda(lsh, "q_dedup_minhash_lsh")
+    // q_dedup_components closes the pair graph on RDDs while it is built,
+    // so its returned plan only reads the labels: check every plan Spark
+    // plans on this thread during the build instead
+    val planned = scala.collection.mutable.ArrayBuffer.empty[String]
+    val builder = Thread.currentThread
+    object Record extends SparkStrategy {
+      def apply(plan: LogicalPlan) = {
+        if (Thread.currentThread eq builder) planned.synchronized(planned += plan.toString)
+        Nil
+      }
+    }
+    spark.experimental.extraStrategies = Seq(Record)
+    try planOf("q_dedup_components")
+    finally spark.experimental.extraStrategies = Nil
+    val plans = planned.synchronized(planned.toList)
+    assert(plans.exists(_.contains("md5_minhash(")), plans.mkString("\n").take(1500))
+    plans.foreach(assertNoLambda(_, "q_dedup_components"))
+  }
+
   test("triangle census: ordered-edge equi-joins only, no cartesian") {
     val plan = planOf("q_graph_triangles")
     assert(!plan.contains("CartesianProduct"), plan.take(1500))

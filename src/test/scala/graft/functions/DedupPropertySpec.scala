@@ -34,8 +34,8 @@ class DedupPropertySpec extends AnyFunSuite {
         DedupFunctions.jaccard(
           DedupFunctions.wordShingles($"a", 3), DedupFunctions.wordShingles($"b", 3))
           .as("true_jac"),
-        DedupFunctions.minhashSignature(DedupFunctions.wordShingles($"a", 3), 16).as("sa"),
-        DedupFunctions.minhashSignature(DedupFunctions.wordShingles($"b", 3), 16).as("sb"))
+        DedupFunctions.minhashSignature($"a", 16).as("sa"),
+        DedupFunctions.minhashSignature($"b", 16).as("sb"))
       .collect()
     val (errs, n) = rows.foldLeft((0.0, 0)) { case ((e, c), r) =>
       val trueJac = r.getDouble(0)
@@ -55,7 +55,7 @@ class DedupPropertySpec extends AnyFunSuite {
     val withDup = docs ++ Seq((100L, docs.head._2)) // exact dup of doc 1
     val df = withDup.toDF("doc_id", "text")
     val sigs = df.select($"doc_id",
-      DedupFunctions.minhashSignature(DedupFunctions.wordShingles($"text", 3), 16).as("sig"))
+      DedupFunctions.minhashSignature($"text", 16).as("sig"))
     val bands = sigs.select($"doc_id", explode(DedupFunctions.bandKeys($"sig", 4, 4)).as("bk"))
       .select($"doc_id", $"bk.band", $"bk.bandhash")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))

@@ -71,7 +71,7 @@ class FunctionsSpec extends AnyFunSuite {
       ("d2", "the quick brown fox jumps over the lazy dog today"),
       ("d3", "completely different words appear in this unrelated sentence")).toDF("id", "t")
     val sigs = df.select($"id",
-        DedupFunctions.minhashSignature(DedupFunctions.wordShingles($"t", 3), 16).as("sig"))
+        DedupFunctions.minhashSignature($"t", 16).as("sig"))
       .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
     assert(sigs("d1") === sigs("d1")) // stable
     val sim12 = sigs("d1").zip(sigs("d2")).count { case (a, b) => a == b } / 16.0

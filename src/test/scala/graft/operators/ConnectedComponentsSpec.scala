@@ -72,4 +72,45 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(got.length === 2000)
     assert(got.forall(_._2 == 0L), "every node must reach the min endpoint")
   }
+
+  /** A 40,000-edge path plus 200 5-cliques: 84,000 directed messages,
+    * above one task's 65,536-message budget, so the messages spread over
+    * 2 partitions (by id parity) and components span them. The path
+    * visits ids 0, 1, 3, 2, 4, 5, 7, 6, ...: every 1-3 edge joins two odd
+    * ids and every 2-4 edge two even ids, so neither partition sees the
+    * whole path and the local pass leaves the labels unfinished. */
+  private lazy val spanning: Seq[(Long, Long)] = {
+    val rnd = new Random(7)
+    val ids = (0L until 40000L by 4L).flatMap(i => Seq(i, i + 1, i + 3, i + 2)) :+ 40000L
+    val path = ids.sliding(2).map(p => (p(0), p(1))).toSeq
+    val cliques = (0 until 200).flatMap { c =>
+      val m = (0 until 5).map(j => 100000L + 7L * c + j)
+      for (a <- m; b <- m if a < b) yield (b, a)
+    }
+    rnd.shuffle(path ++ cliques)
+  }
+
+  test("components spanning partitions close in the propagation loop") {
+    check(spanning, "path + cliques over 2 partitions")
+  }
+
+  test("non-convergence within maxIter still throws") {
+    // the local pass leaves the path's labels unfinished, and one loop
+    // round cannot both change a label and confirm the fixpoint
+    val e = intercept[IllegalStateException] {
+      ConnectedComponents.run(spanning.toDF("src", "dst"), "src", "dst", maxIter = 1)
+    }
+    assert(e.getMessage.contains("did not converge in 1 rounds"))
+  }
+
+  test("one partition over the message budget contracts in chunks") {
+    // shuffle partitions = 1 caps the message partitions at 1, so the
+    // 84,000 messages are contracted in two chunks and the nodes both
+    // chunks saw are relabeled by the loop
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try check(spanning, "path + cliques in one partition, two chunks")
+    finally spark.conf.set(key, prior)
+  }
 }

@@ -118,6 +118,54 @@ class NativeHashSpec extends AnyFunSuite {
     assert(plan.contains("*(1)"), plan)
   }
 
+  test("md5_minhash kernel = the interpreted minhashSignature(wordShingles(_, 3), 16), " +
+      "bit for bit") {
+    import org.apache.spark.sql.Column
+    import graft.functions.DedupFunctions.{bindOnce, minhashSignature, wordShingles}
+    import graft.functions.TextFunctions.md5Long
+    // the column pipeline the kernel replaces, inlined verbatim: md5 per
+    // distinct shingle, then k affine-min lambdas over the base hashes
+    def oldSignature(c: Column, k: Int = 16) = {
+      val prime = 2147483647L
+      bindOnce(transform(wordShingles(c, 3), s => md5Long(s) % prime)) { hs =>
+        transform(sequence(lit(0), lit(k - 1)), i =>
+          array_min(transform(hs, h =>
+            (h * (i * 2 + 1) + (lit(12345L) + lit(7919L) * i)) % prime)))
+      }
+    }
+    val adversarial = Seq(
+      "", " ", "   \t\n\u000B\f\r  ", "one", "one two", " one\u000Btwo ",
+      "one two three", "The quick  brown fox JUMPS over", "  lead and trail  ",
+      "a b c a b c a b c a b c", // repeated shingles
+      "tab\tsplit\nand\u000Bvertical\fand\rcr words",
+      "İstanbul GRÜSSE straße ß ẞ ΟΔΟΣ ΣΟΦΙΑ σΣ ς", // case mapping is lower()'s
+      "😀emoji😀 a 中文 b 😀 c", // astral-plane UTF-8
+      "non\u00A0breaking\u00A0space is\u00A0not \\s") // U+00A0 is one token
+    val pool = "abcXYZ09 .,!\t\n\u000B\f\r\u00A0İßΣσς中😀"
+      .codePoints().toArray.map(cp => new String(Character.toChars(cp)))
+    val seeded = new scala.util.Random(903)
+    val fuzz = (1 to 60).map(_ =>
+      (1 to seeded.nextInt(40)).map(_ => pool(seeded.nextInt(pool.length))).mkString)
+    val texts = (adversarial ++ fuzz).map(Option(_)) :+ None
+    val local = texts.toDF("t")
+    // a parquet copy: over a scan the kernel runs as generated code, over
+    // the local relation it is folded by the interpreted eval
+    val path = java.nio.file.Files.createTempDirectory("md5minhash").toString + "/t"
+    local.write.parquet(path)
+    for ((df, how) <- Seq((local, "interpreted"), (spark.read.parquet(path), "codegen"))) {
+      val got = df.select($"t", minhashSignature($"t", 16), oldSignature($"t")).collect()
+      assert(got.length === texts.length)
+      got.foreach { r =>
+        assert(r.getSeq[Any](1) === r.getSeq[Any](2), s"$how: ${r.getString(0)}")
+        if (r.isNullAt(0)) assert(r.getSeq[Any](1) === Seq.fill(16)(null), how)
+      }
+    }
+    // the kernel over a real scan stays inside whole-stage codegen
+    val plan = spark.read.parquet(path).select(minhashSignature($"t", 16))
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("*(1)") && plan.contains("md5_minhash("), plan)
+  }
+
   test("native minhash query finds the same near-dup structure as the md5 path") {
     val dir = "/root/testdata/sf0.001"
     val md5Pairs = graft.SparkEntry.queries("q_dedup_minhash_lsh")(spark, dir)
