@@ -1,5 +1,8 @@
 package graft.functions
 
+import scala.reflect.ClassTag
+
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -7,12 +10,13 @@ import org.apache.spark.sql.functions._
   * MinHash, SimHash, n-gram Jaccard.
   *
   * Design constraints:
-  *   - Column expressions only (codegen'd, distributed, no UDFs).
+  *   - Column expressions (codegen'd, distributed, no UDFs), except
+  *     [[bucketPairs]], the RDD kernel that pairs LSH buckets.
   *   - Deterministic: hashes derive from md5 so the DuckDB oracle can
   *     reproduce them bit-for-bit (`CAST('0x'||substr(md5(s),1,15) AS
   *     BIGINT)` == Spark `conv(substring(md5(s),1,15),16,10)`).
-  *   - LSH banding turns the O(n^2) pair space into an equi-join on
-  *     (band, band-hash) — a shuffle join on a compact key, which is the
+  *   - LSH banding turns the O(n^2) pair space into a grouping on
+  *     (band, band-hash) — one shuffle on a compact key, which is the
   *     100 TB-viable path (candidate pairs only, then exact rescoring).
   */
 object DedupFunctions {
@@ -85,6 +89,33 @@ object DedupFunctions {
           y => struct(x.as("a"), y.as("b")))))
     }
 
+  /** Candidate pairs of LSH buckets, on RDDs: `members` holds one
+    * ((band, key), (id, payload)) row per bucket membership. Each bucket
+    * of 2 to [[MaxBucket]] members (the oracle's `HAVING count(*)
+    * BETWEEN 2 AND 50`: an exact-dup flood sharing a bucket must not fan
+    * out O(n²) pairs in one task) is sorted by id, and every two members
+    * (a, b) with a before b are offered to `pair`; its results are
+    * deduplicated across buckets. The payload (a fingerprint, say) rides
+    * the bucket, so `pair` can rescore without a rejoin. Callers drop
+    * rows with a null id or key before they get here: `getLong` reads a
+    * null as 0. */
+  def bucketPairs[K: ClassTag, P: ClassTag, T: ClassTag](members: RDD[(K, (Long, P))])(
+      pair: ((Long, P), (Long, P)) => Option[T]): RDD[T] =
+    members.groupByKey()
+      .flatMap { case (_, bucket) =>
+        val ms = bucket.toArray
+        if (ms.length < 2 || ms.length > MaxBucket) Iterator.empty
+        else {
+          val sorted = ms.sortBy(_._1)
+          Iterator.range(0, sorted.length).flatMap(i =>
+            Iterator.range(i + 1, sorted.length).flatMap(j => pair(sorted(i), sorted(j))))
+        }
+      }
+      .distinct()
+
+  /** Largest bucket [[bucketPairs]] pairs. */
+  private final val MaxBucket = 50
+
   /** Exact Jaccard similarity of two distinct-element array columns. */
   def jaccard(a: Column, b: Column): Column = {
     val inter = size(array_intersect(a, b)).cast("double")
@@ -106,8 +137,4 @@ object DedupFunctions {
     // NativeHashSpec's kernel-vs-column property. The md5 hash family
     // (the oracle contract) is unchanged.
     graft.plans.NativeHash.md5SimHash64(c.cast("string"), bits)
-
-  /** Hamming distance between two long-encoded fingerprints. */
-  def hammingDist(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b))
 }

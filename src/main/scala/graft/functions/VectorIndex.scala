@@ -1,7 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.Partitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 /** IVF (inverted-file) index for approximate nearest-neighbor search — the
   * scale path beyond sign-bucket LSH: k-means cells, vectors assigned to
@@ -71,8 +74,10 @@ object VectorIndex {
     }
   }
 
-  /** Train a k-cell codebook with `iters` Lloyd iterations. Centroids are
-    * tiny (k × dim doubles) — they travel to executors in the task
+  /** Train a k-cell codebook with `iters` Lloyd iterations. Ids must be
+    * integral; a null id or vector fails the job. The initial centroids
+    * are the k vectors with the smallest ids (`takeOrdered`). Centroids
+    * are tiny (k × dim doubles) — they travel to executors in the task
     * closure. Each Lloyd step is ONE map-side pass: every task folds its
     * vectors into per-cell double sums and counts (k × dim + k), and a
     * `treeAggregate` adds the partials — no per-element explode, no
@@ -95,21 +100,18 @@ object VectorIndex {
     val base =
       if (sampleOneIn == 1) df
       else df.filter(pmod(xxhash64(col(idCol)), lit(sampleOneIn)) === 0)
-    var centroids: Array[Array[Double]] = base
-      .orderBy(col(idCol)).limit(k)
-      .select(col(embCol)).collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toArray)
+    val vectors = read(base, idCol, embCol, None)
+    var centroids: Array[Array[Double]] = vectors
+      .takeOrdered(k)(Ordering.by[Vec, Long](_.id))
+      .map(_.v.map(_.toDouble))
     require(centroids.length >= k,
       s"corpus sample has ${centroids.length} vectors; k=$k cells need at least that many")
     val dim = centroids(0).length
-    val spark = base.sparkSession
-    import spark.implicits._
-    val vectors = base.select(col(embCol)).as[Array[Float]].rdd
     for (_ <- 1 to iters) {
       val cb = Codebook(centroids)
       val (sums, counts) = vectors.treeAggregate(
           (new Array[Double](k * dim), new Array[Long](k)))(
-        { case ((s, n), v) =>
+        { case ((s, n), Vec(_, _, _, v)) =>
             require(v.length == dim, s"vector of dimension ${v.length}, codebook has $dim")
             val c = cb.nearest(v)
             var i = 0
@@ -202,9 +204,10 @@ object VectorIndex {
   def searchSelf(corpus: DataFrame, idCol: String, embCol: String,
       cb: Codebook, nProbe: Int, topK: Int): DataFrame = {
     val sims = cellKernel(corpus, idCol, embCol, None, cb, nProbe,
-      assignR = 1, topK = topK)
-    graft.operators.TopK.perGroup(sims, "query_id", "neighbor_id", "sim",
-      topK, ascending = false)
+        assignR = 1, topK = topK)
+      .map { case (q, n, s, _) => Row(q, n, s) }
+    graft.operators.TopK.perGroup(corpus.sparkSession.createDataFrame(sims, SimSchema),
+      "query_id", "neighbor_id", "sim", topK, ascending = false)
   }
 
   /** Contrastive pair mining over the WHOLE corpus: per vector, the
@@ -212,33 +215,70 @@ object VectorIndex {
     * other-label; a null label is never "same") among its probed cells
     * — one row (query_id, pair_type, neighbor_id, sim) per (query,
     * pair_type). The fused per-cell kernel of [[searchSelf]] keeps a
-    * top-1 per probe and pair type, and the per-cell winners merge per
-    * (query, type) in a codegen'd top-1. `assignR` > 1 posts each vector
-    * in its `assignR` nearest cells (IVF cell replication): a neighbor is
-    * met when ANY of its cells is probed, so at fixed recall nProbe — the
+    * top-1 per probe and pair type, and one `reduceByKey` on (query,
+    * same label?) merges the per-cell winners with
+    * [[graft.operators.TopK.rankBefore]]; a winner keeps its own sim
+    * (a `-0.0` stays `-0.0`). `assignR` > 1 posts each vector in its
+    * `assignR` nearest cells (IVF cell replication): a neighbor is met
+    * when ANY of its cells is probed, so at fixed recall nProbe — the
     * probe fan-out nProbe·N — shrinks by roughly assignR× for an index
     * assignR× larger. A pair can then meet in several cells, harmless for
     * a top-1 (duplicates carry the identical sim). Ids and labels must be
-    * integral. */
+    * integral; a null id or vector fails the job. */
   def minePairs(corpus: DataFrame, idCol: String, embCol: String,
       labelCol: String, cb: Codebook, nProbe: Int,
       assignR: Int = 1): DataFrame = {
-    val scored = cellKernel(corpus, idCol, embCol, Some(labelCol), cb, nProbe,
+    val winners = cellKernel(corpus, idCol, embCol, Some(labelCol), cb, nProbe,
         assignR, topK = 1)
-      .select(
-        // composite (query, same-label?) key for the top-1 merge
-        (col("query_id") * 2 + when(col("same"), 1).otherwise(0)).as("grp"),
-        col("neighbor_id"),
-        when(col("same"), lit("pos")).otherwise(lit("neg")).as("pair_type"),
-        col("sim"))
-    graft.operators.TopK.perGroupWithPayload(scored, "grp", "neighbor_id",
-        "sim", "pair_type", k = 1, ascending = false)
-      .select(expr("CAST(grp DIV 2 AS BIGINT)").as("query_id"),
-        col("pair_type"), col("neighbor_id"), col("sim"))
+      .map { case (q, n, s, same) => ((q, same), (s, n)) }
+      .reduceByKey { (a, b) =>
+        if (graft.operators.TopK.rankBefore(b._1, b._2, a._1, a._2, false)) b else a
+      }
+      .map { case ((q, same), (s, n)) => Row(q, if (same) "pos" else "neg", n, s) }
+    corpus.sparkSession.createDataFrame(winners, MinedSchema)
+  }
+
+  private val SimSchema = StructType(Seq(
+    StructField("query_id", LongType, nullable = false),
+    StructField("neighbor_id", LongType, nullable = false),
+    StructField("sim", DoubleType, nullable = false)))
+
+  private val MinedSchema = StructType(Seq(
+    StructField("query_id", LongType, nullable = false),
+    StructField("pair_type", StringType, nullable = false),
+    StructField("neighbor_id", LongType, nullable = false),
+    StructField("sim", DoubleType, nullable = false)))
+
+  /** One corpus row: its id, its label (0 when `noLabel`) and its vector. */
+  private final case class Vec(id: Long, label: Long, noLabel: Boolean, v: Array[Float])
+
+  /** The corpus rows, read as Spark's internal rows — no row deserializer.
+    * Ids and labels must be integral. A null id or vector fails the job
+    * (neither can be placed in a cell); a null label is `noLabel`. */
+  private def read(corpus: DataFrame, idCol: String, embCol: String,
+      labelCol: Option[String]): RDD[Vec] = {
+    (idCol +: labelCol.toSeq).foreach(
+      graft.operators.TopK.requireIntegral(corpus, _, "VectorIndex"))
+    val label = labelCol.map(c => col(c).cast("long")).getOrElse(lit(null).cast("long"))
+    corpus
+      .select(col(idCol).cast("long"), coalesce(label, lit(0L)), label.isNull,
+        col(embCol))
+      .queryExecution.toRdd
+      .map { r =>
+        require(!r.isNullAt(0), s"VectorIndex: null $idCol")
+        require(!r.isNullAt(3), s"VectorIndex: null $embCol at $idCol ${r.getLong(0)}")
+        Vec(r.getLong(0), r.getLong(1), r.getBoolean(2), r.getArray(3).toFloatArray())
+      }
   }
 
   private final val Posting = 0
   private final val Probe = 1
+
+  /** Sends cell `c` to partition `c % numPartitions`; keys are (cell, tag). */
+  private[functions] final case class CellPartitioner(numPartitions: Int)
+      extends Partitioner {
+    def getPartition(key: Any): Int = key.asInstanceOf[(Int, Int)]._1 % numPartitions
+  }
 
   /** The fused self-search kernel behind [[searchSelf]] and
     * [[minePairs]]: per-cell candidates (query_id, neighbor_id, sim,
@@ -247,12 +287,11 @@ object VectorIndex {
     *  1. One pass over the corpus ranks each vector's cells ONCE
     *     (`nearestN`) and computes its norm once; the vector leaves as a
     *     posting row for each of its `assignR` nearest cells and a probe
-    *     row for each of its `nProbe` nearest cells.
-    *  2. One shuffle: rows go to partition `cell % parts`, with `parts` =
-    *     min(k, default parallelism) set explicitly — AQE never coalesces
-    *     a shuffle with a given partition count, so the kernel keeps every
-    *     core — and sort by (cell, tag): a cell's postings arrive before
-    *     its probes.
+    *     row for each of its `nProbe` nearest cells, keyed by (cell, tag).
+    *  2. One shuffle (`repartitionAndSortWithinPartitions`): rows go to
+    *     partition `cell % parts`, with `parts` = min(k, default
+    *     parallelism), and sort by (cell, tag): a cell's postings arrive
+    *     before its probes.
     *  3. [[CellScan]] holds the current cell's postings as primitive
     *     arrays and streams the probes against them, keeping a bounded
     *     top-`topK` per probe (or, with labels, a top-1 per probe and
@@ -260,40 +299,28 @@ object VectorIndex {
     */
   private def cellKernel(corpus: DataFrame, idCol: String, embCol: String,
       labelCol: Option[String], cb: Codebook, nProbe: Int, assignR: Int,
-      topK: Int): DataFrame = {
+      topK: Int): RDD[(Long, Long, Double, Boolean)] = {
     require(assignR >= 1, s"assignR must be >= 1, got $assignR")
     require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
     require(topK >= 1, s"topK must be >= 1, got $topK")
-    (idCol +: labelCol.toSeq).foreach(
-      graft.operators.TopK.requireIntegral(corpus, _, "VectorIndex"))
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val parts = math.min(cb.centroids.length, spark.sparkContext.defaultParallelism)
+    val parts = math.min(cb.centroids.length, corpus.sparkSession.sparkContext.defaultParallelism)
     val nRank = math.max(nProbe, assignR)
     val mine = labelCol.isDefined
-    val label = labelCol.map(c => col(c).cast("long")).getOrElse(lit(null).cast("long"))
-    corpus
-      .select(col(idCol).cast("long"), coalesce(label, lit(0L)), label.isNull,
-        col(embCol))
-      .as[(Long, Long, Boolean, Array[Float])]
-      .flatMap { case (id, lbl, noLabel, v) =>
-        val cells = cb.nearestN(v, nRank)
-        val nrm = math.sqrt(CellScan.dot(v, 0, v, 0, v.length))
-        cells.iterator.take(assignR).map(c => (c, Posting, id, lbl, noLabel, v, nrm)) ++
-          cells.iterator.take(nProbe).map(c => (c, Probe, id, lbl, noLabel, v, nrm))
+    read(corpus, idCol, embCol, labelCol)
+      .flatMap { x =>
+        val cells = cb.nearestN(x.v, nRank)
+        val posted = (x, math.sqrt(CellScan.dot(x.v, 0, x.v, 0, x.v.length)))
+        cells.iterator.take(assignR).map(c => ((c, Posting), posted)) ++
+          cells.iterator.take(nProbe).map(c => ((c, Probe), posted))
       }
-      .toDF("cell", "tag", "id", "label", "no_label", "vec", "nrm")
-      .repartitionById(parts, col("cell") % parts)
-      .sortWithinPartitions("cell", "tag")
-      .as[(Int, Int, Long, Long, Boolean, Array[Float], Double)]
+      .repartitionAndSortWithinPartitions(CellPartitioner(parts))
       .mapPartitions { rows =>
         val scan = new CellScan(topK, mine)
-        rows.flatMap { case (cell, tag, id, lbl, noLabel, v, nrm) =>
-          if (tag == Posting) { scan.post(cell, id, lbl, noLabel, v, nrm); Iterator.empty }
-          else scan.probe(cell, id, lbl, noLabel, v, nrm)
+        rows.flatMap { case ((cell, tag), (x, nrm)) =>
+          if (tag == Posting) { scan.post(cell, x, nrm); Iterator.empty }
+          else scan.probe(cell, x, nrm)
         }
       }
-      .toDF("query_id", "neighbor_id", "sim", "same")
   }
 
   private object CellScan {
@@ -346,8 +373,8 @@ object VectorIndex {
     private val bestI = new Array[Long](2)
     private val has = new Array[Boolean](2)
 
-    def post(c: Int, id: Long, lbl: Long, noLabel: Boolean, v: Array[Float],
-        nrm: Double): Unit = {
+    def post(c: Int, x: Vec, nrm: Double): Unit = {
+      val v = x.v
       if (c != cell) { cell = c; n = 0 }
       if (dim < 0) { dim = v.length; flat = new Array[Float](ids.length * dim) }
       require(v.length == dim, s"vector of dimension ${v.length} among dimension $dim")
@@ -359,16 +386,16 @@ object VectorIndex {
         norms = java.util.Arrays.copyOf(norms, cap)
         flat = java.util.Arrays.copyOf(flat, cap * dim)
       }
-      ids(n) = id; labels(n) = lbl; noLabels(n) = noLabel; norms(n) = nrm
+      ids(n) = x.id; labels(n) = x.label; noLabels(n) = x.noLabel; norms(n) = nrm
       System.arraycopy(v, 0, flat, n * dim, dim)
       n += 1
     }
 
     /** Score one probe against the current cell's postings; the probe's
       * candidates for the per-query merge. */
-    def probe(c: Int, id: Long, lbl: Long, noLabel: Boolean, v: Array[Float],
-        nrm: Double): Iterator[(Long, Long, Double, Boolean)] = {
+    def probe(c: Int, x: Vec, nrm: Double): Iterator[(Long, Long, Double, Boolean)] = {
       if (c != cell || n == 0) return Iterator.empty // a cell without postings
+      val Vec(id, lbl, noLabel, v) = x
       require(v.length == dim, s"vector of dimension ${v.length} among dimension $dim")
       if (mine) {
         has(0) = false; has(1) = false

@@ -1,7 +1,9 @@
 package graft.queries
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import graft.Tables.load
 import graft.functions.{DedupFunctions => D, TextFunctions => T, VectorFunctions => V}
 
@@ -127,8 +129,6 @@ object LlmPipeline extends Catalog {
        |    ORDER BY ${sqlMd5Long("'shuf-0|' || CAST(doc_id AS VARCHAR)")}, doc_id)
        |  - 1 AS pos, doc_id, source
        |FROM documents""") { (s, dir) =>
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val keyed = load(s, dir, "documents")
       .select(T.md5Long(concat(lit("shuf-0|"), col("doc_id").cast("string"))).as("k"),
         col("doc_id"), col("source"))
@@ -517,27 +517,29 @@ object LlmPipeline extends Catalog {
       |JOIN kb b ON a.bd = b.bd AND a.bandhash = b.bandhash
       |  AND a.doc_id < b.doc_id""".stripMargin
 
-  /** Spark side of the same candidate-pair generation: band buckets ->
-    * in-bucket pairs, one pass (no self-join recompute). */
+  /** Spark side of the same candidate-pair generation: the codegen'd
+    * projection computes each document's band keys, and the bucket
+    * pairing ([[D.bucketPairs]], the oracle's 2..50 bucket cap included)
+    * runs on RDDs. A null doc_id never pairs. Every scan of the result
+    * reads the same RDD and so reuses its shuffles: a consumer that reads
+    * the pairs several times generates them once, without a checkpoint. */
   private def minhashPairs(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    val sigs = spread(load(s, dir, "documents"))
-      .select(col("doc_id"), D.minhashSignature(col("text"), 16).as("sig"))
-    // bucket cap (oracle-mirrored): an exact-dup flood sharing every
-    // band hash must not explode O(n^2) pairs in one task. The r16
-    // window-count pre-filter (erFuzzyPairs/ahashPairsFrom) was A/B'd
-    // here too and measured 2-7% SLOWER on four consumers — these
-    // buckets buffer bare longs (8 B/member, not ~100 B structs), so the
-    // guard's extra sort outweighs the smaller buffers; the post-collect
-    // size filter stays (OPTIMIZATION_r16.md has the A/B).
-    sigs
-      .select(col("doc_id"), explode(D.bandKeys(col("sig"), 4, 4)).as("bk"))
-      .groupBy(col("bk.band"), col("bk.bandhash"))
-      .agg(collect_list(col("doc_id")).as("ids"))
-      .filter(size(col("ids")).between(2, 50))
-      .select(explode(D.orderedPairs(col("ids"))).as("p"))
-      .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
-      .distinct()
+    val members = spread(load(s, dir, "documents"))
+      .select(col("doc_id").cast("long"),
+        explode(D.bandKeys(D.minhashSignature(col("text"), 16), 4, 4)).as("bk"))
+      .select(col("doc_id"), col("bk.band"), col("bk.bandhash"))
+      .queryExecution.toRdd
+      // bandhash is an md5 of a (never null) concat_ws
+      .flatMap { r =>
+        if (r.isNullAt(0)) None else Some(((r.getInt(1), r.getLong(2)), (r.getLong(0), ())))
+      }
+    val pairs = D.bucketPairs(members) { case ((a, _), (b, _)) => Some(Row(a, b)) }
+    s.createDataFrame(pairs, PairSchema)
   }
+
+  private val PairSchema = StructType(Seq(
+    StructField("doc_a", LongType, nullable = false),
+    StructField("doc_b", LongType, nullable = false)))
 
   // -- MinHash + LSH banding: k=16 signature, 4 bands x 4 rows; candidate
   //    pairs share at least one band hash. Equi-join on (band, bandhash).
@@ -583,9 +585,9 @@ object LlmPipeline extends Catalog {
   //    graph (A~B, B~C => one group even though A,C never paired), with
   //    the minimum doc id as the canonical representative to keep. The
   //    Spark side contracts each partition's edges with a local
-  //    union-find and stops there when no component spans partitions
-  //    (one shuffle); otherwise min-label propagation with pointer
-  //    jumping finishes the spanning components. The oracle closes the
+  //    union-find and stops there when no component spans partitions;
+  //    otherwise it contracts the graph of local roots the same way
+  //    until no node has two roots. The oracle closes the
   //    same graph with a recursive CTE.
   q("q_dedup_components",
     s"""WITH RECURSIVE $SqlMinhashPairCtes,
@@ -817,31 +819,38 @@ object LlmPipeline extends Catalog {
 
   // -- SimHash near-dup PAIRS: band the 60-bit fingerprint into 4x15-bit
   //    chunks (pigeonhole: any pair within hamming 3 shares a chunk),
-  //    bucket-join on (band, chunk), rescore candidates by exact hamming
+  //    bucket on (band, chunk), rescore candidates by exact hamming
   //    distance — the banding is mirrored in the oracle, so results stay
   //    hash-exact while pair generation never goes all-pairs.
   /** Banded SimHash pairing shared by the md5 (oracle) and native-FNV
     * twins: 4x15-bit chunks, the 2..50 bucket cap mirroring the oracle's
     * HAVING (a hot chunk — e.g. the fingerprint mass of near-empty docs —
     * must not fan out O(n^2) pairs in one task; exact-dup groups that
-    * large belong to q_dedup_exact), fingerprints riding the buckets as
-    * structs, hamming <= 5 rescore. One body so the twins cannot
-    * silently diverge. */
+    * large belong to q_dedup_exact), fingerprints riding the buckets
+    * ([[D.bucketPairs]]), hamming <= 5 rescore. One body so the twins
+    * cannot silently diverge. A null doc_id never pairs. */
   private def simhashBandPairs(fps: org.apache.spark.sql.DataFrame) = {
-    val bands = fps
-      .select(col("doc_id"), explode(sequence(lit(0), lit(3))).as("band"), col("h"))
-      .select(col("doc_id"), col("h"), col("band"),
-        expr("shiftright(h, band * 15)").bitwiseAND(lit(32767L)).as("chunk"))
-    val pairs = bands.groupBy("band", "chunk")
-      .agg(collect_list(struct(col("doc_id"), col("h"))).as("ids"))
-      .filter(size(col("ids")).between(2, 50))
-      .select(explode(D.orderedPairs(col("ids"))).as("p"))
-      .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
-        col("p.a.h").as("ha"), col("p.b.h").as("hb"))
-      .distinct()
-    val ham = D.hammingDist(col("ha"), col("hb"))
-    pairs.filter(ham <= 5).select(col("doc_a"), col("doc_b"), ham.as("hamming"))
+    val members = fps.select(col("doc_id").cast("long"), col("h")).queryExecution.toRdd
+      .flatMap { r =>
+        // a null h could only pair inside the null bucket, where the
+        // hamming filter drops every pair: skip it (getLong reads it as 0)
+        if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
+        else {
+          val (id, h) = (r.getLong(0), r.getLong(1))
+          Iterator.tabulate(4)(band => ((band, (h >> (band * 15)) & 32767L), (id, h)))
+        }
+      }
+    val pairs = D.bucketPairs(members) { case ((a, ha), (b, hb)) =>
+      val ham = java.lang.Long.bitCount(ha ^ hb)
+      if (ham <= 5) Some(Row(a, b, ham)) else None
+    }
+    fps.sparkSession.createDataFrame(pairs, SimhashPairSchema)
   }
+
+  private val SimhashPairSchema = StructType(Seq(
+    StructField("doc_a", LongType, nullable = false),
+    StructField("doc_b", LongType, nullable = false),
+    StructField("hamming", IntegerType, nullable = false)))
 
   q("q_dedup_simhash_pairs",
     s"""WITH t AS (SELECT doc_id, unnest($SqlTokens) AS tok FROM documents),
@@ -1493,8 +1502,6 @@ object LlmPipeline extends Catalog {
       |  CAST(sum(chunk_tokens) AS BIGINT) AS pack_tokens,
       |  count(*) AS n_chunks
       |FROM numbered GROUP BY 1""") { (s, dir) =>
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val chunks = queries("q_text_chunking")(s, dir)
     // global contiguous numbering WITHOUT a single-partition window: range
     // partition on the order key, sort within partitions, zipWithIndex
@@ -2437,7 +2444,7 @@ object LlmPipeline extends Catalog {
   }
 
   // keep: drop every non-representative (representative = min id per
-  // duplicate group; closure via pointer jumping on the Spark side, a
+  // duplicate group; closure via ConnectedComponents on the Spark side, a
   // recursive min-label CTE on the oracle side — the pair graph is
   // dup-mass-sized, so the closure input is bounded).
   q("q_semdedup_keep",
@@ -5754,7 +5761,7 @@ object LlmPipeline extends Catalog {
        |${step("r2", "r3")}
        |SELECT n AS doc_id, d AS degree, r AS rank_micro FROM r3"""
   }) { (s, dir) =>
-    val pairs = minhashPairs(s, dir).localCheckpoint()
+    val pairs = minhashPairs(s, dir)
     val sym = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
       .unionByName(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
       .localCheckpoint()
@@ -6890,7 +6897,7 @@ object LlmPipeline extends Catalog {
     // the candidate side hashes text straight into signatures (the
     // md5_minhash kernel); only the exact-Jaccard truth side builds
     // shingle strings, in one pass
-    val cand = minhashPairs(s, dir).localCheckpoint()
+    val cand = minhashPairs(s, dir)
     // exact kept-shingle Jaccard in integer micro units (the
     // q_dedup_ngram_jaccard shape, unthresholded)
     val sh = spread(load(s, dir, "documents"))
@@ -6956,7 +6963,7 @@ object LlmPipeline extends Catalog {
        |    coalesce(tn.n_triangles, 0) * 2000000 // (deg.degree * (deg.degree - 1))
        |    ELSE 0 END AS BIGINT) AS clustering_micro
        |FROM deg LEFT JOIN tn ON tn.n = deg.n""") { (s, dir) =>
-    val pairs = minhashPairs(s, dir).localCheckpoint()
+    val pairs = minhashPairs(s, dir)
     val sym = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
       .unionByName(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
     val deg = sym.groupBy(col("a").as("n")).agg(count(lit(1)).as("degree"))
@@ -7003,7 +7010,7 @@ object LlmPipeline extends Catalog {
        |SELECT dh.bucket, dh.n_nodes, dh.sum_degree, t.n_connected, t.max_degree,
        |  nd.n_docs - t.n_connected AS n_isolated
        |FROM dh CROSS JOIN t CROSS JOIN nd""") { (s, dir) =>
-    val pairs = minhashPairs(s, dir).localCheckpoint() // pair gen runs once
+    val pairs = minhashPairs(s, dir)
     val deg = pairs
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
       .unionByName(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))

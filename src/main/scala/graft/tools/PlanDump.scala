@@ -1,12 +1,22 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Round-15 measurement tool (guide §1): dump `.explain("formatted")` for
-  * declared queries to files (the judge-checkable plan evidence under
-  * plans/r15/) and optionally time each query with the bench's timed
-  * action (`df.count()`) after one untimed warmup.
+  * declared queries to files (the plan evidence under plans/r15/) and
+  * optionally time each query: build it and write every row to the
+  * `noop` sink (a `count()` would let Catalyst prune the operator under
+  * test), once untimed (cold), then `reps` times.
+  *
+  * Every query also prints its Janino compile count: the number of
+  * classes its cold build and write compiled (the delta of Spark's
+  * `CodegenMetrics.METRIC_COMPILATION_TIME`). Spark caches compiled
+  * classes by (class loader, source) in 100 entries, and in local mode
+  * each class costs two (driver and executor loader), so a suite whose
+  * queries together compile more than about 50 classes recompiles some
+  * on every run.
   *
   * Usage:
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
@@ -42,23 +52,25 @@ object PlanDump {
         case Some(fn) =>
           try {
             spark.sparkContext.setJobDescription(s"plandump:$q")
+            val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
             val df = fn(spark, sfDir)
             val plan = df.queryExecution.explainString(
               ExplainMode.fromString("formatted"))
             java.nio.file.Files.write(
               java.nio.file.Paths.get(outDir, s"$q$suffix.txt"),
               plan.getBytes("UTF-8"))
+            def noop(d: DataFrame): Unit = d.write.format("noop").mode("overwrite").save()
+            val cold = { val t0 = System.nanoTime(); noop(df); (System.nanoTime() - t0) / 1e9 }
+            val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
             if (reps > 0) {
-              val warm = { val t0 = System.nanoTime(); fn(spark, sfDir).count()
-                (System.nanoTime() - t0) / 1e9 }
               val times = (1 to reps).map { _ =>
                 val t0 = System.nanoTime()
-                fn(spark, sfDir).count()
+                noop(fn(spark, sfDir))
                 (System.nanoTime() - t0) / 1e9
               }
-              println(f"[plandump] $q%-36s warm=$warm%7.3f " +
+              println(f"[plandump] $q%-36s compiles=$compiles%4d cold=$cold%7.3f " +
                 times.map(t => f"$t%7.3f").mkString(" "))
-            } else println(s"[plandump] $q plan written")
+            } else println(f"[plandump] $q%-36s compiles=$compiles%4d plan written")
           } catch {
             case e: Throwable =>
               System.err.println(s"[plandump] $q FAILED: $e")

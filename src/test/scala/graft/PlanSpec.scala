@@ -534,34 +534,37 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("MinHash pair graph: one md5_minhash kernel, no interpreted shingle lambda") {
-    import org.apache.spark.sql.execution.SparkStrategy
-    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
     // the shingle lambda was transform(sequence(1, n), i ->
     // concat_ws(' ', slice(tokens, i, 3))), hashed per element
     def assertNoLambda(plan: String, what: String): Unit = {
       assert(!plan.contains("sequence("), s"$what:\n${plan.take(1500)}")
       assert(!plan.contains("concat_ws( , slice("), s"$what:\n${plan.take(1500)}")
     }
-    val lsh = planOf("q_dedup_minhash_lsh")
-    assert(lsh.contains("md5_minhash("), lsh.take(1500))
-    assertNoLambda(lsh, "q_dedup_minhash_lsh")
-    // q_dedup_components closes the pair graph on RDDs while it is built,
-    // so its returned plan only reads the labels: check every plan Spark
-    // plans on this thread during the build instead
-    val planned = scala.collection.mutable.ArrayBuffer.empty[String]
-    val builder = Thread.currentThread
-    object Record extends SparkStrategy {
-      def apply(plan: LogicalPlan) = {
-        if (Thread.currentThread eq builder) planned.synchronized(planned += plan.toString)
-        Nil
-      }
+    // both queries pair the buckets (and close the graph) on RDDs while
+    // they are built, so their returned plans only read the pairs: check
+    // every plan Spark plans during the build instead
+    for (q <- Seq("q_dedup_minhash_lsh", "q_dedup_components")) {
+      val plans = PlanRecorder.logical(spark)(planOf(q)).map(_.toString)
+      assert(plans.exists(_.contains("md5_minhash(")), s"$q:\n${plans.mkString("\n").take(1500)}")
+      plans.foreach(assertNoLambda(_, q))
     }
-    spark.experimental.extraStrategies = Seq(Record)
-    try planOf("q_dedup_components")
-    finally spark.experimental.extraStrategies = Nil
-    val plans = planned.synchronized(planned.toList)
-    assert(plans.exists(_.contains("md5_minhash(")), plans.mkString("\n").take(1500))
-    plans.foreach(assertNoLambda(_, "q_dedup_components"))
+  }
+
+  test("pair-mining kernels run on RDDs: no typed operator, no object or sort aggregate") {
+    // IVF mining and LSH bucket pairing used to run as typed Datasets
+    // (row deserializers, mapPartitions) with collect_list / max(struct)
+    // aggregates: every one of those nodes compiles classes of its own
+    import org.apache.spark.sql.execution.{DeserializeToObjectExec, MapPartitionsExec}
+    import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
+    for (q <- Seq("q_contrastive_pairs_self", "q_dedup_minhash_lsh", "q_dedup_simhash_pairs")) {
+      val plans = PlanRecorder.physical(spark)(planOf(q))
+      assert(plans.nonEmpty, q)
+      val typed = plans.flatMap(_.collect {
+        case p @ (_: ObjectHashAggregateExec | _: SortAggregateExec |
+            _: DeserializeToObjectExec | _: MapPartitionsExec) => p.nodeName
+      })
+      assert(typed.isEmpty, s"$q: ${typed.distinct}\n${plans.mkString("\n").take(3000)}")
+    }
   }
 
   test("triangle census: ordered-edge equi-joins only, no cartesian") {

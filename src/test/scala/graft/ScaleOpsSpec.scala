@@ -113,17 +113,23 @@ class ScaleOpsSpec extends AnyFunSuite {
 
     // the corpus must NEVER ride a broadcast in the self-join shape
     // (queries = corpus would broadcast the whole corpus); assert on the
-    // plan with AQE-at-toy-scale's small-table conversion disabled
+    // plans planned while mining (its kernel reads the corpus through
+    // one of them), with AQE-at-toy-scale's small-table conversion
+    // disabled
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val mined = graft.functions.VectorIndex.minePairs(
-        emb, "vec_id", "embedding", "label", cb, nProbe = 2)
-      val plan = mined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Broadcast"), plan.take(1500))
-      assert(!plan.contains("CartesianProduct"), plan.take(1500))
+      val plans = graft.PlanRecorder.physical(spark) {
+        graft.functions.VectorIndex.minePairs(
+          emb, "vec_id", "embedding", "label", cb, nProbe = 2).queryExecution.executedPlan
+      }
+      assert(plans.exists(_.toString.contains("embeddings.parquet")), plans.mkString("\n"))
+      for (plan <- plans.map(_.toString)) {
+        assert(!plan.contains("Broadcast"), plan.take(1500))
+        assert(!plan.contains("CartesianProduct"), plan.take(1500))
+      }
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)

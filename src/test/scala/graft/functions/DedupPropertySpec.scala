@@ -83,4 +83,22 @@ class DedupPropertySpec extends AnyFunSuite {
     assert(ham(base0, hs(0L)) === 0) // rate 0 => identical fingerprint
     assert(ham(base0, hs(1L)) < ham(base0, hs(2L))) // more mutation => farther
   }
+
+  test("bucketPairs: buckets of 2..50, id-ordered pairs, each pair once, payload rides") {
+    // bucket (0, k) holds ids k*100 + 1 .. k*100 + k, offered in reverse;
+    // bucket (1, k) repeats the first two members of bucket (0, k)
+    val members = (1 to 52).flatMap { k =>
+      val ids = (1 to k).map(i => k * 100L + i).reverse
+      ids.map(id => ((0, k.toLong), (id, -id))) ++
+        ids.takeRight(2).map(id => ((1, k.toLong), (id, -id)))
+    }
+    val got = DedupFunctions.bucketPairs(spark.sparkContext.parallelize(members, 3)) {
+      case ((a, pa), (b, pb)) => if (pa == -a && pb == -b) Some((a, b)) else None
+    }.collect()
+    val want = (2 to 50).flatMap { k =>
+      for (i <- 1 to k; j <- i + 1 to k) yield (k * 100L + i, k * 100L + j)
+    } ++ Seq((5101L, 5102L), (5201L, 5202L)) // only the 2-member buckets of 51, 52
+    assert(got.length === got.distinct.length)
+    assert(got.sorted.toSeq === want.sorted)
+  }
 }

@@ -242,30 +242,36 @@ class VectorIndexSpec extends AnyFunSuite {
   }
 
   test("the per-cell kernel keeps its explicit partition count under AQE") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec,
-      AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
-    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeLike}
+    // the kernel shuffle is an RDD shuffle, which AQE never coalesces:
+    // its partitioner sends cell c to partition c % min(k, parallelism)
+    import org.apache.spark.ShuffleDependency
+    import org.apache.spark.rdd.RDD
     val emb = Tables.load(spark, dir, "embeddings")
     val k = 8
     val cb = VectorIndex.train(emb, "vec_id", "embedding", k = k, iters = 1)
     val mined = VectorIndex.minePairs(emb, "vec_id", "embedding", "label", cb, nProbe = k)
-    mined.collect()
-    val plan = mined.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
-      case p => p
+    def lineage(r: RDD[_]): Seq[RDD[_]] = r +: r.dependencies.flatMap(d => lineage(d.rdd))
+    val kernel = lineage(mined.queryExecution.toRdd).flatMap(_.dependencies).collect {
+      case d: ShuffleDependency[_, _, _] => d.partitioner
+    }.collect { case p: VectorIndex.CellPartitioner => p.numPartitions }
+    assert(kernel === Seq(math.min(k, spark.sparkContext.defaultParallelism)))
+  }
+
+  test("a null vec_id fails train and minePairs instead of becoming id 0") {
+    val s = spark
+    import s.implicits._
+    val emb = Tables.load(spark, dir, "embeddings")
+    val cb = VectorIndex.train(emb, "vec_id", "embedding", k = 4, iters = 1)
+    val withNull = emb.select(col("vec_id"), col("embedding"), col("label"))
+      .union(Seq((Option.empty[Long], Array.fill(64)(0.5f), 1)).toDF("vec_id", "embedding", "label"))
+    for ((what, run) <- Seq[(String, () => Any)](
+        "train" -> (() => VectorIndex.train(withNull, "vec_id", "embedding", k = 4, iters = 1)),
+        "minePairs" -> (() => VectorIndex.minePairs(withNull, "vec_id", "embedding", "label",
+          cb, nProbe = 4).collect()))) {
+      val e = intercept[Exception](run())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("VectorIndex: null vec_id")),
+        s"$what: $e")
     }
-    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case s: QueryStageExec => walk(s.plan)
-      case _ => p.children.flatMap(walk)
-    })
-    val nodes = walk(plan)
-    val kernel = nodes.collect {
-      case e: ShuffleExchangeLike if e.shuffleOrigin == REPARTITION_BY_NUM => e.numPartitions }
-    assert(kernel === Seq(math.min(k, spark.sparkContext.defaultParallelism)),
-      plan.toString.take(3000))
-    val reread = nodes.collect { case r: AQEShuffleReadExec => r.child }
-      .collect { case s: ShuffleQueryStageExec => s.shuffle.shuffleOrigin }
-    assert(!reread.contains(REPARTITION_BY_NUM), plan.toString.take(3000))
   }
 }

@@ -63,9 +63,9 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   test("a 2000-node chain converges inside 20 rounds (pointer jumping)") {
     // diameter 2000 >> maxIter: plain hashmin would need ~2000 rounds
     // and (round-9 fix) must THROW rather than return a partial closure;
-    // with path halving distance information doubles per round, so this
-    // converges in O(log 2000) ~ 11 rounds. The sf0.1 image-aHash pair
-    // graph actually hit the old cap in the round-9 bench probe.
+    // the chain fits one chunk, so the local union-find closes it in one
+    // round. The sf0.1 image-aHash pair graph actually hit the old cap in
+    // the round-9 bench probe.
     val edges = (0L until 1999L).map(i => (i, i + 1))
     val got = ConnectedComponents.run(edges.toDF("src", "dst"), "src", "dst")
       .as[(Long, Long)].collect()
@@ -94,9 +94,20 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     check(spanning, "path + cliques over 2 partitions")
   }
 
+  test("a 40,000-edge path over shuffled ids closes on 2 partitions") {
+    // ids in random order along the path: min-label propagation with
+    // pointer jumping needs rounds in proportion to the path length here
+    // (it threw at maxIter); each contraction round merges every chunk's
+    // pieces of the path, so a few rounds close it
+    val ids = new Random(11).shuffle((0L to 40000L).toVector)
+    val path = ids.sliding(2).map(p => (p(0), p(1))).toSeq
+    assert(path.size == 40000) // 80,000 messages: 2 partitions of one chunk each
+    check(path, "shuffled-id path over 2 partitions")
+  }
+
   test("non-convergence within maxIter still throws") {
-    // the local pass leaves the path's labels unfinished, and one loop
-    // round cannot both change a label and confirm the fixpoint
+    // the first round leaves nodes with two local roots, so one round
+    // cannot close the graph
     val e = intercept[IllegalStateException] {
       ConnectedComponents.run(spanning.toDF("src", "dst"), "src", "dst", maxIter = 1)
     }
@@ -106,7 +117,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   test("one partition over the message budget contracts in chunks") {
     // shuffle partitions = 1 caps the message partitions at 1, so the
     // 84,000 messages are contracted in two chunks and the nodes both
-    // chunks saw are relabeled by the loop
+    // chunks saw are relabeled by a second round
     val key = "spark.sql.shuffle.partitions"
     val prior = spark.conf.get(key)
     spark.conf.set(key, "1")

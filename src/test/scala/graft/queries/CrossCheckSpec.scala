@@ -27,6 +27,23 @@ class CrossCheckSpec extends AnyFunSuite {
     assert((truth -- nativePairs).isEmpty, s"native variant missed ${truth -- nativePairs}")
   }
 
+  test("LSH bucket pairing: a null doc_id never pairs (minhash + simhash)") {
+    // one copy of each of the first 20 documents gets a null id: it
+    // shares every bucket with its original, yet pairs with nothing, and
+    // it does not count toward a bucket's size
+    val s = spark
+    val docs = graft.Tables.load(s, dir, "documents")
+    val withNull = docs.union(docs.orderBy("doc_id").limit(20)
+      .withColumn("doc_id", org.apache.spark.sql.functions.lit(null).cast("long")))
+    val tmp = java.nio.file.Files.createTempDirectory("null-doc-id").toString
+    withNull.write.parquet(s"$tmp/documents.parquet")
+    for (qn <- Seq("q_dedup_minhash_lsh", "q_dedup_simhash_pairs", "q_dedup_simhash_native")) {
+      val got = SparkEntry.queries(qn)(s, tmp).collect()
+      assert(got.forall(r => !r.isNullAt(0) && !r.isNullAt(1)), s"$qn paired a null id")
+      assert(got.toSet === SparkEntry.queries(qn)(s, dir).collect().toSet, qn)
+    }
+  }
+
   test("both simhash pairings recall the true near-dup population") {
     // hash families differ, so the noise band (hamming 4-5) diverges; the
     // invariant is that each family's banding+rescoring finds the REAL
