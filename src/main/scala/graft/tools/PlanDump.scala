@@ -6,9 +6,10 @@ import org.apache.spark.sql.execution.ExplainMode
 
 /** Round-15 measurement tool (guide §1): dump `.explain("formatted")` for
   * declared queries to files (the plan evidence under plans/r15/) and
-  * optionally time each query: build it and write every row to the
-  * `noop` sink (a `count()` would let Catalyst prune the operator under
-  * test), once untimed (cold), then `reps` times.
+  * time each query's writes of every row to the `noop` sink (a `count()`
+  * would let Catalyst prune the operator under test): `cold` is the first
+  * write of the frame the plan dump built, then `reps` timed rebuilds and
+  * writes.
   *
   * Every query also prints its Janino compile count: the number of
   * classes its cold build and write compiled (the delta of Spark's
