@@ -1,6 +1,12 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Loaders for the driver-provided parquet tables (TESTDATA.md).
   *
@@ -9,6 +15,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (`PushedFilters` / `ReadSchema` in `.explain`), which is what makes the
   * same plans viable at 100 TB — only the referenced columns and row
   * groups are read.
+  *
+  * [[load]] hands the reader the table's schema, read on the driver from
+  * one parquet footer. Without a schema, `spark.read.parquet` infers it
+  * with a one-task Spark job per call, and a catalog query that loads a
+  * table pays that job on every build. The footer is the one Spark's own
+  * inference reads when `spark.sql.parquet.mergeSchema` is off:
+  * `_common_metadata`, else `_metadata`, else the first data file by path
+  * (names starting with `_` or `.` are not data). With `mergeSchema` on,
+  * every footer counts, so [[load]] leaves inference to Spark.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -36,7 +51,50 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     // legacy flag is a no-op for the µs encoding, required for the nanos one
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df =
+      if (spark.sessionState.conf.isParquetSchemaMergingEnabled) spark.read.parquet(path)
+      else spark.read.schema(footerSchema(spark, path)).parquet(path)
     if (name == "events") tsNormalized(df) else df
+  }
+
+  /** The schema Spark infers for the parquet file or directory `path`
+    * with `mergeSchema` off, read on the driver. */
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq.filterNot(c => hidden(c.getPath.getName)).flatMap(leaves)
+    // a missing path throws here, as spark.read.parquet does
+    val files = leaves(fs.getFileStatus(root)).sortBy(_.getPath.toString)
+    val summaries = Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+      ParquetFileWriter.PARQUET_METADATA_FILE)
+    val file = summaries.view.flatMap(n => files.find(_.getPath.getName == n)).headOption
+      .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+      .getOrElse(throw new IllegalArgumentException(s"no parquet data file under $path"))
+    val footer = new Footer(file.getPath, ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
+    // built after load set nanosAsLong: the converter reads the session conf
+    val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+    nullable(ParquetFileFormat.readSchemaFromFooter(footer, converter)).asInstanceOf[StructType]
+  }
+
+  /** The names a file listing for a data source skips (Spark keeps the
+    * two summary files for the parquet reader). */
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=") ||
+      name.startsWith(".") || name.endsWith("._COPYING_")) &&
+      !name.startsWith(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE) &&
+      !name.startsWith(ParquetFileWriter.PARQUET_METADATA_FILE)
+
+  /** `t` with every struct field, array element and map value nullable,
+    * as Spark relaxes the schema of a file source. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
   }
 }

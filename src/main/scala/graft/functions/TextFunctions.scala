@@ -304,15 +304,12 @@ object TextFunctions {
     * number. */
   def luhnCheckDigit(c: Column): Column = (lit(10) - luhnSum(c, 1) % 10) % 10
 
-  /** Fraction of tokens that are (English) stopwords. Tokenizes ONCE per
-    * row (bindOnce) — the token subtree would otherwise be duplicated
-    * into both the count and the filter. */
-  def stopwordRatio(c: Column): Column =
-    DedupFunctions.bindOnce(tokens(lower(c))) { ts =>
-      val n = size(ts)
-      val sw = size(filter(ts, t => t.isin(EnStopwords: _*)))
-      when(n === 0, lit(0.0)).otherwise(sw.cast("double") / n)
-    }
+  /** Fraction of tokens that are (English) stopwords. */
+  def stopwordRatio(c: Column): Column = {
+    val st = textStats(c)
+    val n = st.getField("lower_tokens")
+    when(n === 0, lit(0.0)).otherwise(st.getField("stop").cast("double") / n)
+  }
 
   /** Mean token length in characters (0 for empty docs). */
   def meanTokenLen(c: Column): Column =
@@ -322,27 +319,35 @@ object TextFunctions {
         aggregate(ts, lit(0L), (acc, t) => acc + length(t)).cast("double") / n)
     }
 
-  /** [[qualityScore]] against caller-supplied token arrays — lets a
-    * composite pipeline (q_pipeline_c4) share one tokenization across
-    * quality and language ID. Identical arithmetic to the public form. */
-  private[graft] def qualityScoreOf(c: Column, ts: Column, lts: Column): Column = {
-    val lenScore = least(size(ts).cast("double") / 100.0, lit(1.0))
-    val punctPenalty = greatest(lit(0.0), lit(1.0) - punctRatio(c) * 5.0)
-    val n = size(lts)
-    val sw = size(filter(lts, t => t.isin(EnStopwords: _*)))
-    val swRatio = when(n === 0, lit(0.0)).otherwise(sw.cast("double") / n)
+  /** The integer counts behind [[qualityScore]], [[langId]] and
+    * [[stopwordRatio]] in one codegen'd pass per row
+    * ([[graft.plans.TextStatsKernel.stats]]): `tokens` and `lower_tokens`
+    * (whitespace tokens of the text and of `lower(text)`), `stop` (lowered
+    * tokens in [[EnStopwords]]), one hit count per [[LangMarkers]]
+    * language, `punct` ([[PunctClass]] characters) and `cjk` (any code
+    * point in U+4E00..U+9FFF). Null for a null text. */
+  private[graft] def textStats(c: Column): Column =
+    graft.plans.NativeHash.textStats(c, ("stop" -> EnStopwords) +: LangMarkers)
+
+  /** [[qualityScore]] over the [[textStats]] `st` of `c` — lets a composite
+    * pipeline (q_pipeline_c4) share one stats pass across quality and
+    * language ID. The floating-point steps are the oracle's, in its order,
+    * so the values are bit-identical (NativeHashSpec). */
+  private[graft] def qualityScoreOf(c: Column, st: Column): Column = {
+    val lenScore = least(st.getField("tokens").cast("double") / 100.0, lit(1.0))
+    val len = length(c)
+    val punctRatio =
+      when(len === 0, lit(0.0)).otherwise(st.getField("punct").cast("double") / len)
+    val punctPenalty = greatest(lit(0.0), lit(1.0) - punctRatio * 5.0)
+    val n = st.getField("lower_tokens")
+    val swRatio = when(n === 0, lit(0.0)).otherwise(st.getField("stop").cast("double") / n)
     round((lenScore * 0.4 + punctPenalty * 0.3 + least(swRatio * 5.0, lit(1.0)) * 0.3), 6)
   }
 
   /** Composite heuristic quality score in [0,1]: rewards mid-length docs,
     * a sane stopword ratio and low punctuation density. Deterministic and
     * SQL-expressible so it can be oracle-checked. */
-  def qualityScore(c: Column): Column =
-    DedupFunctions.bindOnce(tokens(c)) { ts =>
-      DedupFunctions.bindOnce(tokens(lower(c))) { lts =>
-        qualityScoreOf(c, ts, lts)
-      }
-    }
+  def qualityScore(c: Column): Column = qualityScoreOf(c, textStats(c))
 
   /** Marker words per language for the n-gram/stopword language-ID
     * heuristic. Scores = whole-word marker hits; argmax wins, ties broken
@@ -353,39 +358,24 @@ object TextFunctions {
     "es" -> Seq("el", "la", "los", "las", "es", "y", "que", "en"),
     "fr" -> Seq("le", "la", "les", "et", "est", "que", "des", "une"))
 
-  /** Per-language marker-hit count (whole-word matches on the lowercased
-    * text). */
-  def langScore(c: Column, markers: Seq[String]): Column = {
-    val ts = tokens(lower(c))
-    size(filter(ts, t => t.isin(markers: _*)))
-  }
-
   /** Heuristic language ID: CJK characters => "zh"; otherwise the language
     * with the most marker-word hits ("und" = undetermined when all zero).
-    * Tie-break: first language in [[LangMarkers]] order.
-    *
-    * Tokenizes ONCE and computes each score ONCE per row: the tokens and
-    * the score array are lambda-bound, so the argmax/pick chain reads the
-    * bound array instead of duplicating the token-filter subtree ~16×
-    * (this was an 8× term in the C4-pipeline bench at 50k docs). */
-  def langId(c: Column): Column =
-    DedupFunctions.bindOnce(tokens(lower(c)))(langIdOf(c, _))
+    * Tie-break: first language in [[LangMarkers]] order. */
+  def langId(c: Column): Column = langIdOf(textStats(c))
 
-  /** [[langId]] against a caller-supplied lowercased-token array. */
-  private[graft] def langIdOf(c: Column, lts: Column): Column = {
-    val hasCjk = length(regexp_replace(c, "[\\x{4e00}-\\x{9fff}]", "")) < length(c)
-    val scored = DedupFunctions.bindOnce(
-      array(LangMarkers.map { case (_, m) =>
-        size(filter(lts, t => t.isin(m: _*)))
-      }: _*)) { scoreArr =>
-      val mx = array_max(scoreArr)
-      // first language (in LangMarkers order) reaching the max wins —
-      // array_position returns the FIRST 1-based match
-      val names = array(LangMarkers.map(l => lit(l._1)): _*)
-      when(mx === 0, lit("und"))
-        .otherwise(element_at(names, array_position(scoreArr, mx).cast("int")))
-    }
-    when(hasCjk, lit("zh")).otherwise(scored)
+  /** [[langId]] over a [[textStats]] column. */
+  private[graft] def langIdOf(st: Column): Column = {
+    val scoreArr = array(LangMarkers.map(l => st.getField(l._1)): _*)
+    val mx = array_max(scoreArr)
+    // first language (in LangMarkers order) reaching the max wins —
+    // array_position returns the FIRST 1-based match
+    val names = array(LangMarkers.map(l => lit(l._1)): _*)
+    // a null text has no language; the explicit branch also keeps the
+    // column nullable (element_at declares a non-null result here)
+    when(st.isNull, lit(null).cast("string"))
+      .when(st.getField("cjk"), lit("zh"))
+      .when(mx === 0, lit("und"))
+      .otherwise(element_at(names, array_position(scoreArr, mx).cast("int")))
   }
 
   /** 64-bit hex document fingerprint over normalized text (first 16 hex

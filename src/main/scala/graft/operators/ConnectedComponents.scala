@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components over an undirected edge list by
@@ -56,14 +56,21 @@ object ConnectedComponents {
   def run(edges: DataFrame, srcCol: String, dstCol: String, maxIter: Int = 20): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
+    runEdges(spark,
+      edges.select(col(srcCol).cast("long"), col(dstCol).cast("long")).as[(Long, Long)].rdd,
+      maxIter)
+  }
+
+  /** [[run]] over an edge RDD, for callers whose pairs come from an RDD
+    * kernel: no row encoding on the way in. Returns the columns
+    * (n, label). */
+  def runEdges(spark: SparkSession, edges: RDD[(Long, Long)], maxIter: Int = 20): DataFrame = {
+    import spark.implicits._
     val shufflePartitions = spark.sessionState.conf.numShufflePartitions.toLong
 
     // (from, to) per direction; localCheckpoint cuts the upstream
     // pair-pipeline lineage out of every round
-    var graph = edges
-      .select(col(srcCol).cast("long"), col(dstCol).cast("long"))
-      .as[(Long, Long)].rdd
-      .flatMap { case (a, b) => Iterator((a, b), (b, a)) }
+    var graph = edges.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
     graph.localCheckpoint()
     var messages = graph.count()
     var labels: RDD[(Long, Long)] = null // node -> label

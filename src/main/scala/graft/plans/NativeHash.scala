@@ -406,6 +406,8 @@ object NativeHash {
     column(Md5SimHash64(expression(c), bits))
   def md5MinHash(text: Column, n: Int, k: Int): Column =
     column(Md5MinHash(expression(lower(text)), n, k))
+  def textStats(text: Column, sets: Seq[(String, Seq[String])]): Column =
+    column(TextStats(expression(text), expression(lower(text)), sets))
 
   /** Register `fnv64` / `shingle_hashes` for SQL use. */
   def register(spark: SparkSession): Unit = {

@@ -523,7 +523,13 @@ object LlmPipeline extends Catalog {
     * runs on RDDs. A null doc_id never pairs. Every scan of the result
     * reads the same RDD and so reuses its shuffles: a consumer that reads
     * the pairs several times generates them once, without a checkpoint. */
-  private def minhashPairs(s: org.apache.spark.sql.SparkSession, dir: String) = {
+  private def minhashPairs(s: org.apache.spark.sql.SparkSession, dir: String) =
+    s.createDataFrame(minhashPairRdd(s, dir).map { case (a, b) => Row(a, b) }, PairSchema)
+
+  /** The (doc_a, doc_b) pairs of [[minhashPairs]] as the kernel's RDD:
+    * the connected-components closures read them without a row encoding
+    * round trip. */
+  private def minhashPairRdd(s: org.apache.spark.sql.SparkSession, dir: String) = {
     val members = spread(load(s, dir, "documents"))
       .select(col("doc_id").cast("long"),
         explode(D.bandKeys(D.minhashSignature(col("text"), 16), 4, 4)).as("bk"))
@@ -533,8 +539,7 @@ object LlmPipeline extends Catalog {
       .flatMap { r =>
         if (r.isNullAt(0)) None else Some(((r.getInt(1), r.getLong(2)), (r.getLong(0), ())))
       }
-    val pairs = D.bucketPairs(members) { case ((a, _), (b, _)) => Some(Row(a, b)) }
-    s.createDataFrame(pairs, PairSchema)
+    D.bucketPairs(members) { case ((a, _), (b, _)) => Some((a, b)) }
   }
 
   private val PairSchema = StructType(Seq(
@@ -571,7 +576,7 @@ object LlmPipeline extends Catalog {
        |WHERE NOT EXISTS (SELECT 1 FROM losers l WHERE l.doc_id = d.doc_id)""") { (s, dir) =>
     import graft.operators.ConnectedComponents
     val docs = load(s, dir, "documents").select(col("doc_id"), col("source"))
-    val members = ConnectedComponents.run(minhashPairs(s, dir), "doc_a", "doc_b")
+    val members = ConnectedComponents.runEdges(s, minhashPairRdd(s, dir))
       .join(docs, col("n") === col("doc_id"))
     val winners = members.groupBy("label")
       .agg(min_by(col("n"), struct(col("source"), col("n"))).as("win"))
@@ -602,7 +607,7 @@ object LlmPipeline extends Catalog {
        |  CAST(n = min(m) AS INT) AS is_canonical
        |FROM reach GROUP BY n""") { (s, dir) =>
     import graft.operators.ConnectedComponents
-    ConnectedComponents.run(minhashPairs(s, dir), "doc_a", "doc_b")
+    ConnectedComponents.runEdges(s, minhashPairRdd(s, dir))
       .select(col("n").as("doc_id"), col("label").as("component"),
         (col("n") === col("label")).cast("int").as("is_canonical"))
   }
@@ -625,7 +630,7 @@ object LlmPipeline extends Catalog {
        |SELECT d.doc_id, d.lang, d.n_chars FROM documents d
        |WHERE NOT EXISTS (SELECT 1 FROM losers l WHERE l.doc_id = d.doc_id)""") { (s, dir) =>
     import graft.operators.ConnectedComponents
-    val losers = ConnectedComponents.run(minhashPairs(s, dir), "doc_a", "doc_b")
+    val losers = ConnectedComponents.runEdges(s, minhashPairRdd(s, dir))
       .filter(col("n") =!= col("label"))
       .select(col("n").as("doc_id"))
     // losers is one row per DUPLICATE doc — web crawls run 30-50% dup
@@ -661,7 +666,7 @@ object LlmPipeline extends Catalog {
        |  CAST((cluster_size - 1) * count(*) AS BIGINT) AS removable
        |FROM sizes GROUP BY cluster_size""") { (s, dir) =>
     import graft.operators.ConnectedComponents
-    ConnectedComponents.run(minhashPairs(s, dir), "doc_a", "doc_b")
+    ConnectedComponents.runEdges(s, minhashPairRdd(s, dir))
       .groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
       .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters"))
       .select(col("cluster_size"), col("n_clusters"),
@@ -1315,7 +1320,7 @@ object LlmPipeline extends Catalog {
        |FROM b""") { (s, dir) =>
     import graft.functions.Sampling
     import graft.operators.ConnectedComponents
-    val comp = ConnectedComponents.run(minhashPairs(s, dir), "doc_a", "doc_b")
+    val comp = ConnectedComponents.runEdges(s, minhashPairRdd(s, dir))
       .select(col("n").as("doc_id"), col("label").as("comp_label"))
     load(s, dir, "documents").select("doc_id")
       .join(comp, Seq("doc_id"), "left")
@@ -1359,22 +1364,21 @@ object LlmPipeline extends Catalog {
        |  max(quality) AS max_quality
        |FROM l GROUP BY 1""".stripMargin
   }) { (s, dir) =>
-    // quality and language ID share ONE tokenization pass (both need the
-    // lowercased tokens) — same arithmetic as the public column functions,
-    // so the oracle is untouched
-    val scored = D.bindOnce(T.tokens(col("text"))) { ts =>
-      D.bindOnce(T.tokens(lower(col("text")))) { lts =>
-        struct(
-          T.qualityScoreOf(col("text"), ts, lts).as("quality"),
-          T.langIdOf(col("text"), lts).as("lang"))
-      }
-    }
+    // quality and language ID share ONE text-stats pass — the same
+    // arithmetic as the public column functions, so the oracle is
+    // untouched. The stats ride a one-element explode: pushed below a
+    // Project, the filter would inline the kernel once per field it reads
+    // (a Filter has no common-subexpression elimination)
     load(s, dir, "documents")
-      .select(col("doc_id"), col("text"), scored.as("s"))
-      .filter(col("s.quality") > 0.55 && col("s.lang") === "en")
+      .select(col("doc_id"), col("text"),
+        explode(array(T.textStats(col("text")))).as("st"))
+      .select(col("doc_id"), col("text"),
+        T.qualityScoreOf(col("text"), col("st")).as("quality"),
+        T.langIdOf(col("st")).as("lang"))
+      .filter(col("quality") > 0.55 && col("lang") === "en")
       .groupBy(T.fingerprintHex(col("text")).as("fp"))
       .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"),
-        max(col("s.quality")).as("max_quality"))
+        max(col("quality")).as("max_quality"))
   }
 
   // -- token blocklist filter — the C4 "bad words" stage (Raffel et al.,

@@ -13,11 +13,13 @@ import org.apache.spark.sql.execution.ExplainMode
   *
   * Every query also prints its Janino compile count: the number of
   * classes its cold build and write compiled (the delta of Spark's
-  * `CodegenMetrics.METRIC_COMPILATION_TIME`). Spark caches compiled
-  * classes by (class loader, source) in 100 entries, and in local mode
-  * each class costs two (driver and executor loader), so a suite whose
-  * queries together compile more than about 50 classes recompiles some
-  * on every run.
+  * `CodegenMetrics.METRIC_COMPILATION_TIME`), and `jobs=N`, the Spark
+  * jobs that build and write started (a schema-inference or checkpoint
+  * job in the build shows up here, not in the write's plan). Spark
+  * caches compiled classes by (class loader, source) in 100 entries, and
+  * in local mode each class costs two (driver and executor loader), so a
+  * suite whose queries together compile more than about 50 classes
+  * recompiles some on every run.
   *
   * Usage:
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
@@ -54,14 +56,18 @@ object PlanDump {
           try {
             spark.sparkContext.setJobDescription(s"plandump:$q")
             val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-            val df = fn(spark, sfDir)
-            val plan = df.queryExecution.explainString(
-              ExplainMode.fromString("formatted"))
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(outDir, s"$q$suffix.txt"),
-              plan.getBytes("UTF-8"))
             def noop(d: DataFrame): Unit = d.write.format("noop").mode("overwrite").save()
-            val cold = { val t0 = System.nanoTime(); noop(df); (System.nanoTime() - t0) / 1e9 }
+            val (cold, jobs) = Jobs.counted(spark) {
+              val df = fn(spark, sfDir)
+              val plan = df.queryExecution.explainString(
+                ExplainMode.fromString("formatted"))
+              java.nio.file.Files.write(
+                java.nio.file.Paths.get(outDir, s"$q$suffix.txt"),
+                plan.getBytes("UTF-8"))
+              val t0 = System.nanoTime()
+              noop(df)
+              (System.nanoTime() - t0) / 1e9
+            }
             val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
             if (reps > 0) {
               val times = (1 to reps).map { _ =>
@@ -69,9 +75,9 @@ object PlanDump {
                 noop(fn(spark, sfDir))
                 (System.nanoTime() - t0) / 1e9
               }
-              println(f"[plandump] $q%-36s compiles=$compiles%4d cold=$cold%7.3f " +
-                times.map(t => f"$t%7.3f").mkString(" "))
-            } else println(f"[plandump] $q%-36s compiles=$compiles%4d plan written")
+              println(f"[plandump] $q%-36s compiles=$compiles%4d jobs=$jobs%3d " +
+                f"cold=$cold%7.3f " + times.map(t => f"$t%7.3f").mkString(" "))
+            } else println(f"[plandump] $q%-36s compiles=$compiles%4d jobs=$jobs%3d plan written")
           } catch {
             case e: Throwable =>
               System.err.println(s"[plandump] $q FAILED: $e")

@@ -550,6 +550,22 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("C4 scoring: one text_stats kernel inside whole-stage codegen, no lambda") {
+    // quality and language ID were ~10 filter/transform lambdas over split
+    // token arrays, evaluated interpreted, once per field the filter read
+    val df = SparkEntry.queries("q_pipeline_c4")(spark, dir)
+    df.collect()
+    val plan = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val text = plan.toString
+    assert(!text.contains("lambdafunction"), text)
+    assert("text_stats\\(".r.findAllIn(text).size === 1, text)
+    assert(text.linesIterator.exists(l =>
+      l.matches(""".*\*\(\d+\) Generate .*text_stats\(.*""")), text)
+  }
+
   test("pair-mining kernels run on RDDs: no typed operator, no object or sort aggregate") {
     // IVF mining and LSH bucket pairing used to run as typed Datasets
     // (row deserializers, mapPartitions) with collect_list / max(struct)

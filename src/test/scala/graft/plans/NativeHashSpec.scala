@@ -166,6 +166,99 @@ class NativeHashSpec extends AnyFunSuite {
     assert(plan.contains("*(1)") && plan.contains("md5_minhash("), plan)
   }
 
+  test("text_stats kernel: qualityScore, langId, stopwordRatio and c4's struct = " +
+      "the lambda chain, bit for bit") {
+    import org.apache.spark.sql.{Column, Row}
+    import graft.functions.DedupFunctions.bindOnce
+    import graft.functions.TextFunctions._
+    // the lambda chain the kernel replaces, inlined verbatim: token arrays
+    // from split, filter lambdas per word list, a bound score array
+    def oldQualityOf(c: Column, ts: Column, lts: Column): Column = {
+      val lenScore = least(size(ts).cast("double") / 100.0, lit(1.0))
+      val punctPenalty = greatest(lit(0.0), lit(1.0) - punctRatio(c) * 5.0)
+      val n = size(lts)
+      val sw = size(filter(lts, t => t.isin(EnStopwords: _*)))
+      val swRatio = when(n === 0, lit(0.0)).otherwise(sw.cast("double") / n)
+      round((lenScore * 0.4 + punctPenalty * 0.3 + least(swRatio * 5.0, lit(1.0)) * 0.3), 6)
+    }
+    def oldLangIdOf(c: Column, lts: Column): Column = {
+      val hasCjk = length(regexp_replace(c, "[\\x{4e00}-\\x{9fff}]", "")) < length(c)
+      val scored = bindOnce(
+        array(LangMarkers.map { case (_, m) => size(filter(lts, t => t.isin(m: _*))) }: _*)) {
+        scoreArr =>
+          val mx = array_max(scoreArr)
+          val names = array(LangMarkers.map(l => lit(l._1)): _*)
+          when(mx === 0, lit("und"))
+            .otherwise(element_at(names, array_position(scoreArr, mx).cast("int")))
+      }
+      when(hasCjk, lit("zh")).otherwise(scored)
+    }
+    def oldC4(c: Column) = bindOnce(tokens(c)) { ts =>
+      bindOnce(tokens(lower(c))) { lts =>
+        struct(oldQualityOf(c, ts, lts).as("quality"), oldLangIdOf(c, lts).as("lang"))
+      }
+    }
+    def oldStopwordRatio(c: Column) = bindOnce(tokens(lower(c))) { ts =>
+      val n = size(ts)
+      val sw = size(filter(ts, t => t.isin(EnStopwords: _*)))
+      when(n === 0, lit(0.0)).otherwise(sw.cast("double") / n)
+    }
+    def newC4(c: Column) = {
+      val st = textStats(c)
+      struct(qualityScoreOf(c, st).as("quality"), langIdOf(st).as("lang"))
+    }
+
+    // every edge of PunctClass and its neighbours: ' ' ! / 0 9 : @ A Z [ ` a z { ~ DEL
+    val punctEdges = Seq(0x20, 0x21, 0x2f, 0x30, 0x39, 0x3a, 0x40, 0x41, 0x5a, 0x5b, 0x60,
+      0x61, 0x7a, 0x7b, 0x7e, 0x7f).map(_.toChar)
+    val adversarial = Seq(
+      "", " ", "\t", "one", "one two", "   \t\n\u000B\f\r  ",
+      "\tlead and trail tabs\t", "  lead and trail spaces  ", " \t mixed \t the ",
+      "the", "The AND Of", "the, and. (und) la; der! 'das' the-the «die»",
+      "non\u00A0breaking the\u00A0and", // U+00A0 is not \s: one token
+      "İstanbul İN İn ẞ STRASSE ΟΔΟΣ ΣΟΦΙΑΣ σς", // case mapping is lower()'s
+      "\u4DFF below", "\u4E00 first", "\u9FFF last", "\uA000 above", "mixed中文text",
+      "😀 astral \uD840\uDC00 the", // U+20000 is CJK-B, outside U+4E00..U+9FFF
+      punctEdges.mkString, punctEdges.mkString(" "), punctEdges.mkString("the"),
+      "und der die das ist nicht ein zu the and",
+      "el la los las es y que en le les et est des une",
+      "la la la", "the a an and or of to in is it", "thee th nichts nicht A an")
+    val pool = Seq("the", "THE", "und", "la", "en", "que", "nicht", "a", "des", "xyz",
+      "longwordtoken", " ", "  ", "\t", "\n", "\u000B", "\f", "\r", "\u00A0", ",", ".",
+      "!", "(", ")", "~", "`", "@", "[", "{", "İ", "ß", "Σ", "ς", "中", "\u9FFF", "\uA000",
+      "😀")
+    val seeded = new scala.util.Random(1910)
+    val fuzz = (1 to 200).map(_ =>
+      (1 to seeded.nextInt(30)).map(_ => pool(seeded.nextInt(pool.length))).mkString)
+    val texts = (adversarial ++ fuzz).map(Option(_)) :+ None
+    val local = texts.toDF("t")
+    // a parquet copy: over a scan the kernel runs as generated code, over
+    // the local relation it is folded by the interpreted eval
+    val path = java.nio.file.Files.createTempDirectory("textstats").toString + "/t"
+    local.write.parquet(path)
+    def bits(r: Row, i: Int): Option[Long] =
+      if (r.isNullAt(i)) None else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(i)))
+    for ((df, how) <- Seq((local, "interpreted"), (spark.read.parquet(path), "codegen"))) {
+      val t = $"t"
+      val got = df.select(t, qualityScore(t), oldC4(t).getField("quality"),
+        langId(t), oldC4(t).getField("lang"), stopwordRatio(t), oldStopwordRatio(t),
+        newC4(t), oldC4(t)).collect()
+      assert(got.length === texts.length)
+      got.foreach { r =>
+        val what = s"$how: ${Option(r.getString(0)).map(_.map(_.toInt.toHexString))}"
+        assert(bits(r, 1) === bits(r, 2), what)
+        assert(r.getString(3) === r.getString(4), what)
+        assert(bits(r, 5) === bits(r, 6), what)
+        assert(Option(r.getStruct(7)).map(s => (bits(s, 0), s.getString(1))) ===
+          Option(r.getStruct(8)).map(s => (bits(s, 0), s.getString(1))), what)
+      }
+    }
+    // the kernel over a real scan stays inside whole-stage codegen
+    val plan = spark.read.parquet(path).select(textStats($"t"))
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("*(1)") && plan.contains("text_stats("), plan)
+  }
+
   test("native minhash query finds the same near-dup structure as the md5 path") {
     val dir = "/root/testdata/sf0.001"
     val md5Pairs = graft.SparkEntry.queries("q_dedup_minhash_lsh")(spark, dir)
