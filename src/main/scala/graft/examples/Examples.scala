@@ -182,8 +182,13 @@ object StreamingIngestApp {
     val b = GraftStreams(spark)
     val mem = MemoryStream[(Long, String, java.sql.Timestamp)]
 
-    val ingested = b.stream[Long, String](mem.toDF(), $"_1", $"_2", $"_3")
-      .where(TextFunctions.qualityScore(col(Rec.ValueCol)) > 0.3)
+    // the quality score reads five fields of the text stats; a Filter has
+    // no common-subexpression elimination, so the stats ride a one-element
+    // explode (as in q_pipeline_c4) and the kernel runs once per row
+    val gated = mem.toDF()
+      .select($"_1", $"_2", $"_3", explode(array(TextFunctions.textStats($"_2"))).as("st"))
+      .filter(TextFunctions.qualityScoreOf($"_2", $"st") > 0.3)
+    val ingested = b.stream[Long, String](gated, $"_1", $"_2", $"_3")
       .mapValuesExpr(TextFunctions.redactPii(col(Rec.ValueCol)))
       .selectKeyExpr[String](TextFunctions.fingerprintHex(col(Rec.ValueCol)))
       .dedupWithinGrace(Seq(Rec.KeyCol), graceMs = 60000)

@@ -19,6 +19,14 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField
   * For a given codebook, self search and mining results are
   * deterministic: every score is rounded and every tie goes to the
   * smaller id.
+  *
+  * Training and self search read the corpus into one RDD of rows. Each
+  * read plans the corpus frame anew, so [[train]] followed by
+  * [[minePairs]] scans it — and runs any shuffle in it — twice.
+  * [[trainAndMinePairs]] and [[trainAndSearchSelf]] read it once and feed
+  * that RDD to the initial `takeOrdered`, the Lloyd `treeAggregate`s and
+  * the per-cell kernel; the later jobs reuse the shuffle output and skip
+  * its stage. Their results are those of the two calls.
   */
 object VectorIndex {
 
@@ -100,7 +108,11 @@ object VectorIndex {
     val base =
       if (sampleOneIn == 1) df
       else df.filter(pmod(xxhash64(col(idCol)), lit(sampleOneIn)) === 0)
-    val vectors = read(base, idCol, embCol, None)
+    trainOn(read(base, idCol, embCol, None), k, iters)
+  }
+
+  /** [[train]] over corpus rows already read. */
+  private def trainOn(vectors: RDD[Vec], k: Int, iters: Int): Codebook = {
     var centroids: Array[Array[Double]] = vectors
       .takeOrdered(k)(Ordering.by[Vec, Long](_.id))
       .map(_.v.map(_.toDouble))
@@ -202,11 +214,24 @@ object VectorIndex {
     * smaller neighbor id — the same rows as [[search]] with
     * queries = corpus. */
   def searchSelf(corpus: DataFrame, idCol: String, embCol: String,
-      cb: Codebook, nProbe: Int, topK: Int): DataFrame = {
-    val sims = cellKernel(corpus, idCol, embCol, None, cb, nProbe,
-        assignR = 1, topK = topK)
+      cb: Codebook, nProbe: Int, topK: Int): DataFrame =
+    searchSelfOn(corpus.sparkSession, read(corpus, idCol, embCol, None), cb, nProbe, topK)
+
+  /** [[train]] then [[searchSelf]] from ONE read of the corpus: the
+    * k-means passes and the per-cell kernel consume the same rows, so a
+    * shuffle upstream of them (a repartition spreading a one-file scan)
+    * runs once and the later jobs read its output. */
+  def trainAndSearchSelf(corpus: DataFrame, idCol: String, embCol: String,
+      k: Int, iters: Int, nProbe: Int, topK: Int): DataFrame = {
+    val vectors = read(corpus, idCol, embCol, None)
+    searchSelfOn(corpus.sparkSession, vectors, trainOn(vectors, k, iters), nProbe, topK)
+  }
+
+  private def searchSelfOn(spark: SparkSession, vectors: RDD[Vec], cb: Codebook,
+      nProbe: Int, topK: Int): DataFrame = {
+    val sims = cellKernel(vectors, mine = false, cb, nProbe, assignR = 1, topK = topK)
       .map { case (q, n, s, _) => Row(q, n, s) }
-    graft.operators.TopK.perGroup(corpus.sparkSession.createDataFrame(sims, SimSchema),
+    graft.operators.TopK.perGroup(spark.createDataFrame(sims, SimSchema),
       "query_id", "neighbor_id", "sim", topK, ascending = false)
   }
 
@@ -227,15 +252,28 @@ object VectorIndex {
     * integral; a null id or vector fails the job. */
   def minePairs(corpus: DataFrame, idCol: String, embCol: String,
       labelCol: String, cb: Codebook, nProbe: Int,
-      assignR: Int = 1): DataFrame = {
-    val winners = cellKernel(corpus, idCol, embCol, Some(labelCol), cb, nProbe,
-        assignR, topK = 1)
+      assignR: Int = 1): DataFrame =
+    mineOn(corpus.sparkSession, read(corpus, idCol, embCol, Some(labelCol)), cb,
+      nProbe, assignR)
+
+  /** [[train]] then [[minePairs]] from ONE read of the corpus, as
+    * [[trainAndSearchSelf]]: the rows `takeOrdered`, the Lloyd
+    * `treeAggregate`s and the per-cell kernel consume are the same. */
+  def trainAndMinePairs(corpus: DataFrame, idCol: String, embCol: String,
+      labelCol: String, k: Int, iters: Int, nProbe: Int): DataFrame = {
+    val vectors = read(corpus, idCol, embCol, Some(labelCol))
+    mineOn(corpus.sparkSession, vectors, trainOn(vectors, k, iters), nProbe, assignR = 1)
+  }
+
+  private def mineOn(spark: SparkSession, vectors: RDD[Vec], cb: Codebook,
+      nProbe: Int, assignR: Int): DataFrame = {
+    val winners = cellKernel(vectors, mine = true, cb, nProbe, assignR, topK = 1)
       .map { case (q, n, s, same) => ((q, same), (s, n)) }
       .reduceByKey { (a, b) =>
         if (graft.operators.TopK.rankBefore(b._1, b._2, a._1, a._2, false)) b else a
       }
       .map { case ((q, same), (s, n)) => Row(q, if (same) "pos" else "neg", n, s) }
-    corpus.sparkSession.createDataFrame(winners, MinedSchema)
+    spark.createDataFrame(winners, MinedSchema)
   }
 
   private val SimSchema = StructType(Seq(
@@ -297,16 +335,14 @@ object VectorIndex {
     *     top-`topK` per probe (or, with labels, a top-1 per probe and
     *     label relation).
     */
-  private def cellKernel(corpus: DataFrame, idCol: String, embCol: String,
-      labelCol: Option[String], cb: Codebook, nProbe: Int, assignR: Int,
-      topK: Int): RDD[(Long, Long, Double, Boolean)] = {
+  private def cellKernel(vectors: RDD[Vec], mine: Boolean, cb: Codebook, nProbe: Int,
+      assignR: Int, topK: Int): RDD[(Long, Long, Double, Boolean)] = {
     require(assignR >= 1, s"assignR must be >= 1, got $assignR")
     require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
     require(topK >= 1, s"topK must be >= 1, got $topK")
-    val parts = math.min(cb.centroids.length, corpus.sparkSession.sparkContext.defaultParallelism)
+    val parts = math.min(cb.centroids.length, vectors.sparkContext.defaultParallelism)
     val nRank = math.max(nProbe, assignR)
-    val mine = labelCol.isDefined
-    read(corpus, idCol, embCol, labelCol)
+    vectors
       .flatMap { x =>
         val cells = cb.nearestN(x.v, nRank)
         val posted = (x, math.sqrt(CellScan.dot(x.v, 0, x.v, 0, x.v.length)))

@@ -36,18 +36,23 @@ import org.apache.spark.sql.functions._
   *     links them, and those root-to-root edges are the next round's
   *     graph.
   *
+  * A round whose graph has at most 65,536 messages — one chunk — runs
+  * none of that: the graph, coalesced into one partition without a
+  * shuffle, goes through one union-find pass, which gives every node its
+  * component's minimum, the final label. That round is the last, with no
+  * shuffle, round checkpoint or count; it is the only round of the common
+  * dedup pair graph.
+  *
   * Labels compose: a node's label is its first-round root, mapped through
   * every later round that relabeled that root. When no node has two local
   * roots, each component's edges closed under one root, which is its
-  * minimum, and the labels are final — after the first round already
-  * when every component's edges lay in one chunk, the common case for
-  * dedup pair graphs, which fit one partition. Each round merges every
-  * component of its chunks into one node, so the graph shrinks
-  * geometrically and closes once it fits one chunk, whatever order the
-  * node ids take along a chain. Non-convergence within `maxIter` rounds
-  * throws rather than returning a partial closure — wrong groups are
-  * worse than a visible failure. `RDD.localCheckpoint` truncates lineage
-  * each round, and the driver holds only counts, never node data.
+  * minimum, and the labels are final. Each round merges every component
+  * of its chunks into one node, so the graph shrinks geometrically and
+  * closes once it fits one chunk, whatever order the node ids take along
+  * a chain. Non-convergence within `maxIter` rounds throws rather than
+  * returning a partial closure — wrong groups are worse than a visible
+  * failure. `RDD.localCheckpoint` truncates lineage each round, and the
+  * driver holds only counts, never node data.
   */
 object ConnectedComponents {
 
@@ -80,27 +85,35 @@ object ConnectedComponents {
         throw new IllegalStateException(
           s"ConnectedComponents did not converge in $maxIter rounds " +
             "(nodes still have several local roots) — raise maxIter")
-      // scale-adaptive round width (guide §2: derive from input size,
-      // never a local constant): ~64k messages per task
-      val part = new HashPartitioner(math.max(1L, math.min(shufflePartitions,
-        (messages + ChunkMessages - 1) / ChunkMessages)).toInt)
-      // node -> its distinct local roots, ascending
-      val roots = graph
-        .repartitionAndSortWithinPartitions(part)
-        .mapPartitions(localRoots)
-        .groupByKey(part)
-        .mapValues(_.toArray.distinct.sorted)
-      roots.localCheckpoint()
-      val step = roots.mapValues(_(0))
+      val step =
+        if (messages <= ChunkMessages) {
+          // one chunk holds the whole graph: its union-find gives every
+          // node its final label, so no shuffle, round checkpoint or count
+          messages = 0
+          graph.coalesce(1).mapPartitions(localRoots)
+        } else {
+          // scale-adaptive round width (guide §2: derive from input size,
+          // never a local constant): ~64k messages per task
+          val part = new HashPartitioner(math.max(1L, math.min(shufflePartitions,
+            (messages + ChunkMessages - 1) / ChunkMessages)).toInt)
+          // node -> its distinct local roots, ascending
+          val roots = graph
+            .repartitionAndSortWithinPartitions(part)
+            .mapPartitions(localRoots)
+            .groupByKey(part)
+            .mapValues(_.toArray.distinct.sorted)
+          roots.localCheckpoint()
+          // many nodes can link the same two roots: drop repeats per task
+          graph = roots.values.mapPartitions(_.flatMap(rs =>
+            rs.iterator.drop(1).flatMap(r => Iterator((rs(0), r), (r, rs(0))))).distinct)
+          graph.localCheckpoint() // the count below materializes both checkpoints
+          messages = graph.count()
+          roots.mapValues(_(0))
+        }
       labels =
         if (labels == null) step
         else labels.map(_.swap).leftOuterJoin(step)
           .map { case (l, (n, next)) => (n, next.getOrElse(l)) }
-      // many nodes can link the same two roots: drop repeats per task
-      graph = roots.values.mapPartitions(_.flatMap(rs =>
-        rs.iterator.drop(1).flatMap(r => Iterator((rs(0), r), (r, rs(0))))).distinct)
-      graph.localCheckpoint() // the count below materializes both checkpoints
-      messages = graph.count()
       round += 1
     }
     (if (labels == null) spark.sparkContext.emptyRDD[(Long, Long)] else labels)

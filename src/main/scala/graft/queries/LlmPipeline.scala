@@ -589,11 +589,11 @@ object LlmPipeline extends Catalog {
   // -- dedup-group closure: connected components over the MinHash pair
   //    graph (A~B, B~C => one group even though A,C never paired), with
   //    the minimum doc id as the canonical representative to keep. The
-  //    Spark side contracts each partition's edges with a local
-  //    union-find and stops there when no component spans partitions;
-  //    otherwise it contracts the graph of local roots the same way
-  //    until no node has two roots. The oracle closes the
-  //    same graph with a recursive CTE.
+  //    Spark side closes a graph of at most 65,536 messages with one
+  //    union-find pass; a larger one it contracts per partition chunk,
+  //    then contracts the graph of local roots the same way until it
+  //    fits one chunk. The oracle closes the same graph with a recursive
+  //    CTE.
   q("q_dedup_components",
     s"""WITH RECURSIVE $SqlMinhashPairCtes,
        |pairs AS ($SqlMinhashPairSelect),
@@ -2238,9 +2238,8 @@ object LlmPipeline extends Catalog {
     import graft.functions.VectorIndex
     val emb = spread(load(s, dir, "embeddings"))
     val k = 8
-    val cb = VectorIndex.train(emb, "vec_id", "embedding", k = k, iters = 2)
-    val nn = VectorIndex.searchSelf(emb, "vec_id", "embedding", cb,
-      nProbe = k, topK = 5)
+    val nn = VectorIndex.trainAndSearchSelf(emb, "vec_id", "embedding", k = k,
+      iters = 2, nProbe = k, topK = 5)
     val labels = emb.select(col("vec_id"), col("label"))
     nn.join(labels.select(col("vec_id").as("neighbor_id"),
         col("label").as("n_label")), "neighbor_id")
@@ -2599,7 +2598,8 @@ object LlmPipeline extends Catalog {
   //    the corpus to itself); this path routes every vector to its IVF
   //    cells in one shuffle and scores each cell's probes against its
   //    postings in a per-cell kernel — no broadcast, no collect, no
-  //    pair join (VectorIndex.minePairs). Run with nProbe = k the
+  //    pair join (VectorIndex.trainAndMinePairs: training and mining
+  //    share one read of the corpus). Run with nProbe = k the
   //    cell routing is EXACT (each pair meets once, in the corpus
   //    vector's cell), so the brute-force SQL self-join mirrors it
   //    bit-for-bit; production uses nProbe << k (recall
@@ -2620,8 +2620,8 @@ object LlmPipeline extends Catalog {
     import graft.functions.VectorIndex
     val emb = spread(load(s, dir, "embeddings"))
     val k = 8
-    val cb = VectorIndex.train(emb, "vec_id", "embedding", k = k, iters = 2)
-    VectorIndex.minePairs(emb, "vec_id", "embedding", "label", cb, nProbe = k)
+    VectorIndex.trainAndMinePairs(emb, "vec_id", "embedding", "label", k = k,
+      iters = 2, nProbe = k)
   }
 
   // -- L2 normalization (unit vectors): the preprocessing step that turns

@@ -13,9 +13,11 @@ import org.apache.spark.sql.execution.ExplainMode
   *
   * Every query also prints its Janino compile count: the number of
   * classes its cold build and write compiled (the delta of Spark's
-  * `CodegenMetrics.METRIC_COMPILATION_TIME`), and `jobs=N`, the Spark
+  * `CodegenMetrics.METRIC_COMPILATION_TIME`), `jobs=N`, the Spark
   * jobs that build and write started (a schema-inference or checkpoint
-  * job in the build shows up here, not in the write's plan). Spark
+  * job in the build shows up here, not in the write's plan), and
+  * `stages=N`, the stages those jobs ran (a stage whose shuffle output
+  * an earlier job already wrote is skipped, and not counted). Spark
   * caches compiled classes by (class loader, source) in 100 entries, and
   * in local mode each class costs two (driver and executor loader), so a
   * suite whose queries together compile more than about 50 classes
@@ -57,7 +59,7 @@ object PlanDump {
             spark.sparkContext.setJobDescription(s"plandump:$q")
             val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
             def noop(d: DataFrame): Unit = d.write.format("noop").mode("overwrite").save()
-            val (cold, jobs) = Jobs.counted(spark) {
+            val (cold, n) = Jobs.counted(spark) {
               val df = fn(spark, sfDir)
               val plan = df.queryExecution.explainString(
                 ExplainMode.fromString("formatted"))
@@ -75,9 +77,11 @@ object PlanDump {
                 noop(fn(spark, sfDir))
                 (System.nanoTime() - t0) / 1e9
               }
-              println(f"[plandump] $q%-36s compiles=$compiles%4d jobs=$jobs%3d " +
+              println(f"[plandump] $q%-36s compiles=$compiles%4d jobs=${n.jobs}%3d " +
+                f"stages=${n.stages}%3d " +
                 f"cold=$cold%7.3f " + times.map(t => f"$t%7.3f").mkString(" "))
-            } else println(f"[plandump] $q%-36s compiles=$compiles%4d jobs=$jobs%3d plan written")
+            } else println(f"[plandump] $q%-36s compiles=$compiles%4d jobs=${n.jobs}%3d " +
+              f"stages=${n.stages}%3d plan written")
           } catch {
             case e: Throwable =>
               System.err.println(s"[plandump] $q FAILED: $e")

@@ -50,8 +50,8 @@ class TablesSpec extends AnyFunSuite {
   test("load starts no Spark job") {
     val dirs = Tables.all.map(sf -> _) :+ (written("dir", 2) -> "dir")
     for ((dir, name) <- dirs) {
-      val (_, jobs) = Jobs.counted(spark)(Tables.load(spark, dir, name))
-      assert(jobs === 0, name)
+      val (_, n) = Jobs.counted(spark)(Tables.load(spark, dir, name))
+      assert(n.jobs === 0, name)
     }
   }
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{Tables, TestSpark}
+import graft.tools.Jobs
 
 /** IVF index quality: deterministic training shape and recall against the
   * brute-force top-k (the baseline the index approximates). */
@@ -222,6 +223,59 @@ class VectorIndexSpec extends AnyFunSuite {
     assert(mined.filter(_._1 == 300L).map(_._2) === Seq("neg")) // null label: no "pos"
   }
 
+  test("crafted set: training and mining from one read equal train + minePairs " +
+      "/ searchSelf bit for bit at nProbe = k, one job fewer") {
+    val emb = crafted // repartition(3): its shuffle runs once per read
+    val k = 6
+    // (query, pair type or rank, neighbor, raw bits of sim)
+    def bits(rows: Array[org.apache.spark.sql.Row]) = rows.toSeq.map(r =>
+      (r.getLong(0), String.valueOf(r.get(1)), r.getLong(2),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(3)))).sorted
+    val (mined, twoMine) = Jobs.counted(spark) {
+      val cb = VectorIndex.train(emb, "vec_id", "embedding", k = k, iters = 2)
+      VectorIndex.minePairs(emb, "vec_id", "embedding", "label", cb, nProbe = k)
+        .select("query_id", "pair_type", "neighbor_id", "sim").collect()
+    }
+    val (minedOnce, oneMine) = Jobs.counted(spark) {
+      VectorIndex.trainAndMinePairs(emb, "vec_id", "embedding", "label", k = k,
+          iters = 2, nProbe = k)
+        .select("query_id", "pair_type", "neighbor_id", "sim").collect()
+    }
+    assert(bits(minedOnce) === bits(mined))
+    assert(oneMine.jobs === twoMine.jobs - 1, s"$oneMine vs $twoMine")
+    assert(oneMine.stages < twoMine.stages, s"$oneMine vs $twoMine")
+    val (found, twoSearch) = Jobs.counted(spark) {
+      val cb = VectorIndex.train(emb, "vec_id", "embedding", k = k, iters = 2)
+      VectorIndex.searchSelf(emb, "vec_id", "embedding", cb, nProbe = k, topK = 4)
+        .select("query_id", "rank", "neighbor_id", "sim").collect()
+    }
+    val (foundOnce, oneSearch) = Jobs.counted(spark) {
+      VectorIndex.trainAndSearchSelf(emb, "vec_id", "embedding", k = k, iters = 2,
+          nProbe = k, topK = 4)
+        .select("query_id", "rank", "neighbor_id", "sim").collect()
+    }
+    assert(bits(foundOnce) === bits(found))
+    assert(oneSearch.jobs === twoSearch.jobs - 1, s"$oneSearch vs $twoSearch")
+  }
+
+  test("training and mining from one read keeps recall against its exact twin at nProbe < k") {
+    val emb = Tables.load(spark, dir, "embeddings")
+    val k = 16
+    def mined(df: DataFrame) =
+      df.collect().map(x => ((x.getLong(0), x.getString(1)), x.getDouble(3))).toMap
+    val exact = mined(VectorIndex.trainAndMinePairs(emb, "vec_id", "embedding", "label",
+      k = k, iters = 2, nProbe = k))
+    def recall(m: Map[(Long, String), Double]) =
+      exact.count { case (q, es) => m.get(q).exists(_ >= es) }.toDouble / exact.size
+    val cb = VectorIndex.train(emb, "vec_id", "embedding", k = k, iters = 2)
+    val twoReads = recall(mined(
+      VectorIndex.minePairs(emb, "vec_id", "embedding", "label", cb, nProbe = 4)))
+    val oneRead = recall(mined(VectorIndex.trainAndMinePairs(emb, "vec_id", "embedding",
+      "label", k = k, iters = 2, nProbe = 4)))
+    assert(twoReads < 1.0, s"nProbe = 4 of 16 should miss some pairs: $twoReads")
+    assert(oneRead === twoReads)
+  }
+
   test("one-pass Lloyd step equals a groupBy(cell, pos).avg of the same assignment") {
     val emb = Tables.load(spark, dir, "embeddings")
     val k = 8
@@ -267,7 +321,9 @@ class VectorIndexSpec extends AnyFunSuite {
     for ((what, run) <- Seq[(String, () => Any)](
         "train" -> (() => VectorIndex.train(withNull, "vec_id", "embedding", k = 4, iters = 1)),
         "minePairs" -> (() => VectorIndex.minePairs(withNull, "vec_id", "embedding", "label",
-          cb, nProbe = 4).collect()))) {
+          cb, nProbe = 4).collect()),
+        "trainAndMinePairs" -> (() => VectorIndex.trainAndMinePairs(withNull, "vec_id",
+          "embedding", "label", k = 4, iters = 1, nProbe = 4).collect()))) {
       val e = intercept[Exception](run())
       assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .exists(t => String.valueOf(t.getMessage).contains("VectorIndex: null vec_id")),

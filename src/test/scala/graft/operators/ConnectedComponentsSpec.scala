@@ -5,6 +5,7 @@ import scala.util.Random
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.tools.Jobs
 
 /** ConnectedComponents vs a brute-force union-find over random graphs:
   * every node must be labeled with the minimum id of its component. */
@@ -103,6 +104,34 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     val path = ids.sliding(2).map(p => (p(0), p(1))).toSeq
     assert(path.size == 40000) // 80,000 messages: 2 partitions of one chunk each
     check(path, "shuffled-id path over 2 partitions")
+  }
+
+  /** `edges` random edges (no self loops) among the ids 0 until 50,000. */
+  private def randomGraph(edges: Int, seed: Int): Seq[(Long, Long)] = {
+    val rnd = new Random(seed)
+    Iterator.continually((rnd.nextInt(50000).toLong, rnd.nextInt(50000).toLong))
+      .filter { case (a, b) => a != b }.take(edges).toSeq
+  }
+
+  test("a graph of exactly one chunk (65,536 messages) closes in the one-pass round") {
+    val edges = randomGraph(32768, 3)
+    check(edges, "65,536 messages, one chunk")
+  }
+
+  test("a graph one edge over the chunk (65,538 messages) closes through a full round") {
+    val edges = randomGraph(32769, 5)
+    check(edges, "65,538 messages, two message partitions")
+  }
+
+  test("a one-chunk graph starts only the sizing count and the result's job") {
+    val edges = randomGraph(2000, 13)
+    val (got, n) = Jobs.counted(spark) {
+      ConnectedComponents.run(edges.toDF("src", "dst"), "src", "dst")
+        .as[(Long, Long)].collect().toMap
+    }
+    assert(got == unionFind(edges))
+    // no round shuffle, round count or checkpoint: one stage per job
+    assert(n == Jobs.Counts(jobs = 2, stages = 2), n)
   }
 
   test("non-convergence within maxIter still throws") {
