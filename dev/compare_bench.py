@@ -4,11 +4,15 @@
 Usage: python3 dev/compare_bench.py OLD.json NEW.json [--ratio 1.5]
 
 Prints every workload whose median moved by more than the ratio (either
-direction), plus streaming rec/sec moves and the run-hygiene block of each
-artifact (contended / aborts / unresolved / latency tag), so cross-round
+direction), plus streaming rec/sec moves and the run-hygiene line of each
+artifact (totals, budget_exceeded, skipped, latency p50), so cross-round
 regressions can be read from the committed dev/bench_closing_rNN.json series
 without re-running anything. Exit code 1 when any regression (slower by more
 than the ratio AND both runs quiet) is found — usable as a gate.
+
+Older artifacts also carry a co-tenant verdict (`load.contended`); an
+artifact flagged contended is not gated. Artifacts without that field
+(every artifact since the detector was removed) count as quiet.
 """
 import json
 import sys
@@ -20,19 +24,17 @@ def load(path):
 
 
 def hygiene(tag, d):
-    g = d.get("guard", {})
-    load_ = d.get("load", {})
     return (
         f"{tag}: total={d.get('value', -1):.1f}s total_10x="
-        f"{d.get('total_10x', -1):.1f}s contended={load_.get('contended')} "
-        f"targeted_passes={g.get('targeted_passes')} "
-        f"full_attempts={g.get('full_attempts', 0)} "
-        f"self_noise={g.get('self_noise_factor', 1.0)} "
-        f"unresolved={len(g.get('unresolved', []))} "
+        f"{d.get('total_10x', -1):.1f}s "
+        f"budget_exceeded={d.get('budget_exceeded')} "
         f"skipped={len(d.get('skipped', []))} "
         f"lat_p50={d.get('latency_ms', {}).get('p50', -1)}ms"
-        f"@{d.get('latency_probe_spin_vs_quiet', -1)}x_floor"
     )
+
+
+def quiet(d):
+    return not d.get("load", {}).get("contended", False)
 
 
 def main():
@@ -50,8 +52,7 @@ def main():
     old, new = load(args[0]), load(args[1])
     print(hygiene("old", old))
     print(hygiene("new", new))
-    both_quiet = not old.get("load", {}).get("contended") and \
-        not new.get("load", {}).get("contended")
+    both_quiet = quiet(old) and quiet(new)
 
     qo, qn = old.get("queries", {}), new.get("queries", {})
     slower, faster = [], []

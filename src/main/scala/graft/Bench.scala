@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Benchmark main — the analogue of the reference's `SimpleBenchmark`
   * (`streams/src/test/java/.../perf/SimpleBenchmark.java:401-634`, metrics
@@ -8,14 +9,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (`perf/YahooBenchmark.java:268-314`), measured over the driver-provided
   * parquet at `SPARK_GRAFT_SF_DIR`.
   *
-  * Prints ONE JSON line with the driver contract fields
-  * (metric/value/unit/queries/sf); `rec_sec` and `rows` ride along as
-  * extra keys for the BASELINE comparison.
+  * One pass: each workload gets one untimed warm-up, then
+  * `SPARK_GRAFT_BENCH_RUNS` timed runs, and reports their median. A timed
+  * run rebuilds the workload and writes every output column to the `noop`
+  * sink, so no operator can be pruned away by a narrow action. Writes the
+  * full readout to BENCH.json and prints ONE JSON line with the driver
+  * contract fields (metric/value/unit/queries/sf).
   */
 object Bench {
 
   /** Reference SimpleBenchmark workload -> our query catalog entry. */
-  private val workloads: Seq[(String, String)] = Seq(
+  private[graft] val workloads: Seq[(String, String)] = Seq(
     "consume" -> "q_filter_project", // scan+project+pushdown filter
     "processstream" -> "q_ks_filter", // filter workload
     "processstreamwithsink" -> "q_ks_map_selectkey", // map + re-key
@@ -196,11 +200,12 @@ object Bench {
     "split-leakage-safe" -> "q_split_leakage_safe",
     "mixture-epochs" -> "q_mixture_epochs")
 
+
   /** The 11 SimpleBenchmark-parity workloads — the ONLY per-query numbers
     * that ride on the stdout line (driver tail-parses the last line; a
     * full 60-entry map has truncated 4 of 5 rounds). Everything else
     * lives in the BENCH.json artifact. */
-  private val parityWorkloads: Seq[String] = Seq(
+  private[graft] val parityWorkloads: Seq[String] = Seq(
     "consume", "processstream", "processstreamwithsink", "count",
     "windowed-count", "session-count", "stream-table-join",
     "stream-stream-join", "table-table-join", "table-agg", "yahoo")
@@ -208,7 +213,7 @@ object Bench {
   /** The noisiest sub-second-to-2.5 s workloads — re-run on the generated
     * 10x corpus so each lands in the multi-second range where a median
     * move is readable (the regression rule: median AND min moved at 10x). */
-  private val x10Workloads: Seq[String] = Seq(
+  private[graft] val x10Workloads: Seq[String] = Seq(
     "dedup-minhash-lsh", "dedup-minhash-native", "dedup-jaccard",
     "dedup-simhash-pairs", "dedup-simhash-native", "dedup-spans",
     "dedup-spans-native", "dedup-components", "dedup-priority-keep",
@@ -266,95 +271,100 @@ object Bench {
     // construction, like the other dedup entries)
     "interval-join-eager", "ivf-recall-eval", "split-leakage-safe")
 
-  /** Generate (once; marker-guarded) the 10x corpus under the bench work
-    * dir: documents and embeddings copied 10x with each copy perturbed
-    * into a NEAR-dup of its original (so the dedup pair graph densifies
-    * 10x, not just the row count), events copied 10x across disjoint
-    * user-id ranges (10x keys, constant per-key history), the TPC-H
-    * tables symlinked from the source sf dir (scaling them would break
-    * the FK web). Testdata itself is read-only — everything lands in
-    * [[benchDir]]. Same recipe as SCALE.md's empirical scaling probe. */
-  private def ensure10xDir(spark: SparkSession, sfDir: String): Option[String] = {
-    import org.apache.spark.sql.functions._
-    try {
-      val dir = new java.io.File(benchDir,
-        "x10-" + new java.io.File(sfDir).getName)
-      // v2: id remap keeps copy 0 at the ORIGINAL id (copies c>=1 land at
-      // id + c*(maxId+1)) so id-predicated query batches — ann-cosine-topk
-      // and knn-classify select `vec_id < 20` — read the SAME logical
-      // vectors at both scales against a 10x candidate set. The v1 scheme
-      // (id*16+copy) silently narrowed those batches to near-dup copies of
-      // ids 0-1. SCALE.md documents the invariant.
-      // v3: events also scales 10x (10x USERS with identical per-user
-      // histories — key count grows, per-key fold length stays constant:
-      // the honest scale-up for keyed-state/sorted-fold operators), which
-      // unlocks @10x rows for the events-based data-eng batch (r8 #7).
-      val marker = new java.io.File(dir, "_SUCCESS_10X_V3")
-      if (!marker.exists()) {
-        dir.mkdirs()
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        val maxDoc = docs.agg(max(col("doc_id"))).head().getLong(0)
-        docs.withColumn("__copy", explode(sequence(lit(0), lit(9))))
-          .withColumn("doc_id", col("doc_id") + col("__copy") * lit(maxDoc + 1L))
-          .withColumn("text", when(col("__copy") === 0, col("text"))
-            .otherwise(concat(col("text"), lit(" benchcopy"), col("__copy"))))
-          .withColumn("n_chars",
-            length(col("text")).cast(docs.schema("n_chars").dataType))
-          .drop("__copy")
-          .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-        val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        val maxVec = emb.agg(max(col("vec_id"))).head().getLong(0)
-        emb.withColumn("__copy", explode(sequence(lit(0), lit(9))))
-          .withColumn("vec_id", col("vec_id") + col("__copy") * lit(maxVec + 1L))
-          // pure scaling keeps the sign bucket and cosine(copy, orig) = 1:
-          // copies are exact near-dups in vector space
-          .withColumn("embedding", transform(col("embedding"),
-            x => (x * (lit(1.0f) + col("__copy").cast("float") / lit(1000.0f)))
-              .cast("float")))
-          .drop("__copy")
-          .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-        // events: 10x users, each copy cohort identical to the original —
-        // event ids and user ids remapped disjointly (copy 0 = original),
-        // ts/type/value untouched so every per-user readout at 10x is the
-        // base answer replicated across 10x the key space
-        val evLink = java.nio.file.Paths.get(dir.toString, "events.parquet")
-        if (java.nio.file.Files.isSymbolicLink(evLink))
-          java.nio.file.Files.delete(evLink) // v2 dirs symlinked events
-        val ev = Tables.load(spark, sfDir, "events")
-        val Array(maxEv, maxUser) = ev
-          .agg(max(col("event_id")), max(col("user_id"))).head()
-          .toSeq.map(_.asInstanceOf[Long]).toArray
-        ev.withColumn("__copy", explode(sequence(lit(0), lit(9))))
-          .withColumn("event_id", col("event_id") + col("__copy") * lit(maxEv + 1L))
-          .withColumn("user_id", col("user_id") + col("__copy") * lit(maxUser + 1L))
-          .drop("__copy")
-          .write.mode("overwrite").parquet(s"$dir/events.parquet")
-        for (t <- Seq("region", "nation", "customer", "supplier", "part",
-            "orders", "lineitem")) {
-          val link = java.nio.file.Paths.get(dir.toString, s"$t.parquet")
-          if (!java.nio.file.Files.exists(link))
-            java.nio.file.Files.createSymbolicLink(link,
-              java.nio.file.Paths.get(s"$sfDir/$t.parquet"))
-        }
-        marker.createNewFile()
-      }
-      Some(dir.toString)
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] 10x corpus generation failed: $e"); None
-    }
-  }
+  /** The four continuously-running streaming workloads: the events table
+    * replayed through a running Structured Streaming query. */
+  private[graft] val streamingPins: Seq[String] = Seq("yahoo-streaming",
+    "stream-table-join-live", "state-store", "window-store")
+
+  /** Workloads with their own setup (a persisted codebook, index or media
+    * corpus, or an input that is not a catalog query). */
+  private[graft] val customWorkloads: Seq[String] = Seq(
+    "consumeproduce", "suppress-ordered", "dedup-index-probe",
+    "ann-ivf", "ann-ivf-search", "ann-pq", "ann-ivf-pq-serve",
+    "image-dedup-serve", "contrastive-self@10x", "semdedup-prod@10x",
+    "image-dedup-serve@10x", "audio-vad-serve@10x",
+    "video-scenecut-serve@10x", "multimodal-audio-serve@10x")
+
+  /** Every workload name the suite can measure. */
+  private[graft] val allWorkloads: Seq[String] = workloads.map(_._1) ++
+    x10Workloads.map(_ + "@10x") ++ customWorkloads ++ streamingPins
+
+  /** Source table of each workload, the rec/sec and MB/sec basis; a
+    * `@10x` workload reads the same table in the 10x corpus. There is no
+    * default: a workload missing here fails its lookup. `suppress-ordered`
+    * is absent because it generates its input (`spark.range`). */
+  private[graft] val sourceTables: Seq[(String, Seq[String])] = Seq(
+    "lineitem" -> Seq(
+      "consume", "pricing-summary", "shipping-priority", "unpivot-metrics",
+      "profile-columns", "dq-rules", "histogram-equidepth"),
+    "orders" -> Seq(
+      "table-agg", "star-join", "topk", "zorder-layout",
+      "bloom-semi-reduction", "hilbert-layout"),
+    "embeddings" -> Seq(
+      "ann-cosine-topk", "embed-quantize", "semdedup", "contrastive-self",
+      "knn-classify", "quality-classifier", "ann-ivf-pq", "label-noise",
+      "embed-pca", "embed-drift", "kmeans-clusters", "random-projection",
+      "cluster-purity", "ivf-recall-eval", "ann-ivf", "ann-ivf-search",
+      "ann-pq", "ann-ivf-pq-serve", "semdedup-prod"),
+    "documents" -> Seq(
+      "dedup-minhash-lsh", "dedup-minhash-native", "dedup-jaccard",
+      "text-stats", "lang-id", "dedup-simhash-pairs", "dedup-simhash-native",
+      "sample-stratified", "pipeline-c4", "text-chunking", "sequence-packing",
+      "dedup-components", "dedup-spans", "decontaminate", "pii-redact",
+      "dedup-spans-native", "tfidf", "vocab-ids", "ngram-lm", "lm-score",
+      "corpus-shuffle", "dedup-priority-keep", "dsir-weights", "bpe-pairs",
+      "bpe-merges", "bpe-byte-encode", "curation-funnel", "line-filter",
+      "pack-sequences", "repetition-remove", "line-dedup-corpus",
+      "perplexity-buckets", "dedup-minhash-incr", "mixture-unimax",
+      "dedup-spans-remove", "mixture-temperature", "length-quantiles",
+      "multimodal-resize", "embed-hashed", "rag-retrieval", "bm25-search",
+      "text-normalize", "ngram-lm-kn", "pack-token-budget", "corpus-diff",
+      "export-manifest", "wordpiece-encode", "wordpiece-fertility",
+      "dedup-containment", "blocklist-filter", "pii-luhn",
+      "dedup-cluster-sizes", "train-val-split", "domain-excess",
+      "unigram-train", "unigram-encode", "wordpiece-oov", "wordpiece-bert",
+      "unigram-train-soft", "minhash-estimate", "inspection-sample",
+      "novelty-score", "inspection-sample-live", "dup-rate-by-source",
+      "type-token-stats", "vocab-growth", "char-diversity",
+      "length-histogram", "contamination-report", "heavy-hitters-cms",
+      "pagerank-dupgraph", "multimodal-audio", "multimodal-video",
+      "hll-distinct", "audio-vad", "video-scenecut", "source-overlap",
+      "langid-confusion", "image-ahash-dedup", "winnowing-overlap",
+      "lsh-pr-eval", "graph-triangles", "image-dedup-components",
+      "compaction-plan", "graph-degree-dist", "pmi-collocations",
+      "k-anonymity", "kmv-distinct", "kmv-set-ops", "er-entities",
+      "topk-per-source", "weighted-sample", "l-diversity", "er-golden-record",
+      "dedup-prefix-filter", "quality-budget", "split-leakage-safe",
+      "mixture-epochs", "dedup-index-probe", "image-dedup-serve",
+      "audio-vad-serve", "video-scenecut-serve", "multimodal-audio-serve"),
+    "events" -> Seq(
+      "processstream", "processstreamwithsink", "count", "windowed-count",
+      "session-count", "stream-table-join", "stream-stream-join",
+      "table-table-join", "yahoo", "asof-join", "sliding-count",
+      "sliding-live", "fk-join", "cogroup", "timeseries-similar",
+      "cep-pattern", "event-funnel", "cohort-retention", "timeseries-sax",
+      "outlier-mad", "sessionize", "event-transitions", "conversion-latency",
+      "markov-stationary", "ohlc-bars", "skew-report", "scd2-history",
+      "cdc-apply", "audience-segments", "attribution", "window-ewma",
+      "cusum-drift", "mv-delta", "attribution-linear", "autocorr-daily",
+      "seasonality-dow", "dp-noisy-counts", "seasonal-anomaly",
+      "user-streaks", "emit-on-change", "hll-windowed", "interval-join-eager",
+      "consumeproduce", "yahoo-streaming", "stream-table-join-live",
+      "state-store", "window-store"))
+
+  private[graft] val sourceTable: Map[String, String] =
+    sourceTables.flatMap { case (t, wls) => wls.map(_ -> t) }.toMap
+
+  /** Rows and on-disk bytes of a workload's input. */
+  private final case class Input(rows: Long, bytes: Long)
 
   /** Timing samples for one workload: `secs` holds one wall-clock sample
-    * per successful iteration (failed iterations contribute none);
-    * `inRows` is the input cardinality (rec/sec basis), `outRows` the
+    * per successful run (failed runs contribute none); `outRows` is the
     * result cardinality. */
-  private final case class Sample(wl: String, secs: Seq[Double],
-      inRows: Long, outRows: Long, quiet: Boolean = true) {
+  private final case class Sample(wl: String, secs: Seq[Double], in: Input,
+      outRows: Long) {
     private val sorted = secs.sorted
-    /** True median: even run counts average the two middle samples (the
-      * upper-middle pick would report the SLOWER of two runs — a
-      * pessimistic bias against the steady-state intent). */
+    /** True median: even run counts average the two middle samples. */
     def median: Double =
       if (sorted.size % 2 == 1) sorted(sorted.size / 2)
       else (sorted(sorted.size / 2 - 1) + sorted(sorted.size / 2)) / 2.0
@@ -363,369 +373,152 @@ object Bench {
     def n: Int = sorted.size
   }
 
-  /** Iterations per workload (median reported; ≥3 for error bars). */
+  /** Timed runs per workload (median reported; ≥3 for error bars). */
   private lazy val benchRuns: Int = {
     val n = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     require(n >= 1, s"SPARK_GRAFT_BENCH_RUNS must be >= 1, got $n")
-    if (n < 3) System.err.println(
-      s"[bench] WARNING: $n run(s) per workload - medians need >= 3 for error bars")
+    if (n < 3) warn(s"WARNING: $n run(s) per workload - medians need >= 3 for error bars")
     n
   }
 
-  /** Work dir for bench-generated artifacts (10x corpus, IVF codebook) —
-    * persisted across runs so generation/training pay once. */
+  /** Work dir for bench-generated artifacts (10x corpus, codebooks,
+    * indexes, media corpora, checkpoints) — persisted across runs so
+    * generation and training pay once. */
   private lazy val benchDir: String = {
     val d = sys.env.getOrElse("SPARK_GRAFT_BENCH_DIR", "target/bench")
     new java.io.File(d).mkdirs()
     d
   }
 
-  /** 1-minute loadavg — the co-tenant signal (r5's base numbers were
-    * taken under external machine load and could not certify the 2x
-    * gate; BENCH.json now carries the evidence either way). */
-  private def loadAvg(): Double =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString
-      .split(" ")(0).toDouble
-    catch { case _: Throwable => -1.0 }
+  private def warn(msg: String): Unit = System.err.println(s"[bench] $msg")
 
-  /** Single-threaded calibration spin: a fixed LCG loop whose wall time
-    * is constant on a quiet machine. Run before and after the suite — a
-    * start/end ratio far from 1 means a co-tenant grabbed or released
-    * CPU mid-suite, so the samples in between are suspect. */
-  private def calibrationSpinMs(): Double = {
-    var x = 0x9E3779B97F4A7C15L
-    val t0 = System.nanoTime()
-    var i = 0
-    while (i < 200000000) {
-      x = x * 6364136223846793005L + 1442695040888963407L
-      i += 1
-    }
-    if (x == 42L) System.err.println("") // keep the loop live
-    (System.nanoTime() - t0) / 1e6
+  /** The stdout contract line: keys `metric`, `value`, `unit`, `only`
+    * (present only for a filtered run, so a partial total is never
+    * mistaken for the suite total), `queries` (the parity workloads that
+    * produced a median) and `sf`, in that order. The driver tail-parses
+    * it, so every other number stays in BENCH.json. */
+  private[graft] def stdoutLine(total: Double, only: Option[String],
+      medians: Map[String, Double], sf: String): String = {
+    val qs = parityWorkloads.flatMap(w => medians.get(w).map(m => f""""$w":$m%.3f"""))
+      .mkString("{", ",", "}")
+    val onlyTag = only.map(m => s""""only":"$m",""").getOrElse("")
+    s"""{"metric":"total","value":$total,"unit":"sec",$onlyTag"queries":$qs,"sf":"$sf"}"""
   }
 
-  /** Full-width calibration spin (r11): `n` threads of the LCG loop,
-    * min wall-ms over 3 reps (min discards transient scheduler stalls).
-    * The r10 contention miss: a ~6-core co-tenant held loadavg ~6
-    * through all four guard passes while the SINGLE-threaded spin read
-    * 1.005 — one spinning thread always finds a free core, but the
-    * 32-thread streaming replay loses exactly the cores the co-tenant
-    * holds. A spin that competes for EVERY core sees them: on this box
-    * a 6-core co-tenant inflates the min wall ~1.7x (quiet ~205 ms,
-    * loaded ~355 ms at 32 threads x 150M steps). */
-  private def parallelSpinMs(n: Int): Double = {
-    def spin(iters: Long): Unit = {
-      var x = 0x9E3779B97F4A7C15L
-      var i = 0L
-      while (i < iters) {
-        x = x * 6364136223846793005L + 1442695040888963407L
-        i += 1
+  /** `SPARK_GRAFT_BENCH_ONLY`: `streaming` (the four streaming workloads)
+    * or a comma-separated list of workload names. Returns the tag for the
+    * stdout line and artifact name plus the selected names; None runs the
+    * full suite. Unknown names are dropped with a warning, and a value
+    * naming no known workload runs the full suite. The tag is rebuilt from
+    * recognized names only, so no raw env bytes reach the JSON line or
+    * the filesystem. */
+  private[graft] def selection(only: Option[String]): Option[(String, Set[String])] =
+    only.flatMap {
+      case "streaming" => Some(("streaming", streamingPins.toSet))
+      case list =>
+        val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
+        val (known, unknown) = names.partition(allWorkloads.contains)
+        if (unknown.nonEmpty)
+          warn("SPARK_GRAFT_BENCH_ONLY names unknown workload(s): " +
+            unknown.toSeq.sorted.mkString(", "))
+        if (known.isEmpty) {
+          warn(s"SPARK_GRAFT_BENCH_ONLY=$list names no workload - running the full suite")
+          None
+        } else Some((known.toSeq.sorted.mkString(","), known))
+    }
+
+  /** Generate (once; a marker file records completion) the 10x corpus
+    * under the bench work dir: documents and embeddings copied 10x with
+    * each copy perturbed into a NEAR-dup of its original (so the dedup
+    * pair graph densifies 10x, not just the row count), events copied 10x across disjoint
+    * user-id ranges (10x keys, constant per-key history), the TPC-H
+    * tables symlinked from the source sf dir (scaling them would break
+    * the FK web). Testdata itself is read-only — everything lands in
+    * [[benchDir]]. Same recipe as SCALE.md's empirical scaling probe. */
+  private def ensure10xDir(spark: SparkSession, sfDir: String): String = {
+    import org.apache.spark.sql.functions._
+    val dir = new java.io.File(benchDir,
+      "x10-" + new java.io.File(sfDir).getName)
+    // v2: id remap keeps copy 0 at the ORIGINAL id (copies c>=1 land at
+    // id + c*(maxId+1)) so id-predicated query batches — ann-cosine-topk
+    // and knn-classify select `vec_id < 20` — read the SAME logical
+    // vectors at both scales against a 10x candidate set. The v1 scheme
+    // (id*16+copy) silently narrowed those batches to near-dup copies of
+    // ids 0-1. SCALE.md documents the invariant.
+    // v3: events also scales 10x (10x USERS with identical per-user
+    // histories — key count grows, per-key fold length stays constant:
+    // the honest scale-up for keyed-state/sorted-fold operators), which
+    // unlocks @10x rows for the events-based data-eng batch (r8 #7).
+    val marker = new java.io.File(dir, "_SUCCESS_10X_V3")
+    if (!marker.exists()) {
+      dir.mkdirs()
+      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      val maxDoc = docs.agg(max(col("doc_id"))).head().getLong(0)
+      docs.withColumn("__copy", explode(sequence(lit(0), lit(9))))
+        .withColumn("doc_id", col("doc_id") + col("__copy") * lit(maxDoc + 1L))
+        .withColumn("text", when(col("__copy") === 0, col("text"))
+          .otherwise(concat(col("text"), lit(" benchcopy"), col("__copy"))))
+        .withColumn("n_chars",
+          length(col("text")).cast(docs.schema("n_chars").dataType))
+        .drop("__copy")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val maxVec = emb.agg(max(col("vec_id"))).head().getLong(0)
+      emb.withColumn("__copy", explode(sequence(lit(0), lit(9))))
+        .withColumn("vec_id", col("vec_id") + col("__copy") * lit(maxVec + 1L))
+        // pure scaling keeps the sign bucket and cosine(copy, orig) = 1:
+        // copies are exact near-dups in vector space
+        .withColumn("embedding", transform(col("embedding"),
+          x => (x * (lit(1.0f) + col("__copy").cast("float") / lit(1000.0f)))
+            .cast("float")))
+        .drop("__copy")
+        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+      // events: 10x users, each copy cohort identical to the original —
+      // event ids and user ids remapped disjointly (copy 0 = original),
+      // ts/type/value untouched so every per-user readout at 10x is the
+      // base answer replicated across 10x the key space
+      val evLink = java.nio.file.Paths.get(dir.toString, "events.parquet")
+      if (java.nio.file.Files.isSymbolicLink(evLink))
+        java.nio.file.Files.delete(evLink) // v2 dirs symlinked events
+      val ev = Tables.load(spark, sfDir, "events")
+      val Array(maxEv, maxUser) = ev
+        .agg(max(col("event_id")), max(col("user_id"))).head()
+        .toSeq.map(_.asInstanceOf[Long]).toArray
+      ev.withColumn("__copy", explode(sequence(lit(0), lit(9))))
+        .withColumn("event_id", col("event_id") + col("__copy") * lit(maxEv + 1L))
+        .withColumn("user_id", col("user_id") + col("__copy") * lit(maxUser + 1L))
+        .drop("__copy")
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      for (t <- Seq("region", "nation", "customer", "supplier", "part",
+          "orders", "lineitem")) {
+        val link = java.nio.file.Paths.get(dir.toString, s"$t.parquet")
+        if (!java.nio.file.Files.exists(link))
+          java.nio.file.Files.createSymbolicLink(link,
+            java.nio.file.Paths.get(s"$sfDir/$t.parquet"))
       }
-      if (x == 42L) System.err.println("")
+      marker.createNewFile()
     }
-    // drain our OWN JVM's GC backlog first: a spin right after a heavy
-    // batch section competes with concurrent GC threads and reads ~2x
-    // the floor on an otherwise-idle machine (r11 first-run evidence:
-    // post-batch segment probe 428 ms vs 212 ms floor, zero co-tenants)
-    System.gc()
-    try Thread.sleep(200) catch { case _: InterruptedException => () }
-    spin(1000000L) // JIT warmup outside the measurement
-    (1 to 3).map { _ =>
-      val ts = (1 to n).map(_ => new Thread(() => spin(150000000L)))
-      val t0 = System.nanoTime()
-      ts.foreach(_.start()); ts.foreach(_.join())
-      (System.nanoTime() - t0) / 1e6
-    }.min
+    dir.toString
   }
 
-  /** utime+stime (and the ppid, for the ancestor walk) of one pid from
-    * /proc/<pid>/stat. Fields are counted AFTER the parenthesised comm
-    * field (which may itself contain spaces): post-comm index 1 = ppid
-    * (field 4), 11/12 = utime/stime (fields 14/15). */
-  private def pidJiffies(pid: Long): Option[(Long, Long, Long)] = try {
-    val s = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"/proc/$pid/stat")))
-    val rest = s.substring(s.lastIndexOf(')') + 2).split(" ")
-    // post-comm index 19 = stat field 22 = starttime — the pid-identity
-    // check (r16, ADVICE r15 low: a recycled pid must not fold a
-    // stranger's jiffies into `self`)
-    Some((rest(11).toLong + rest(12).toLong, rest(1).toLong, rest(19).toLong))
-  } catch { case _: Throwable => None }
-
-  /** Self-vs-machine CPU accounting (r13, VERDICT #1): returns
-    * (self jiffies, machine busy jiffies). `self` = this JVM's
-    * utime+stime from /proc/self/stat — GC, JIT, RocksDB compaction and
-    * every other bench-JVM thread count as SELF — PLUS the ancestor
-    * process chain (r14, VERDICT r13 #1): under a driver `sbt runMain`
-    * the parent sbt JVM's log pumping / GC / compile tail is in-house
-    * work, not a co-tenant, so it must not read as "other". Descendants
-    * are deliberately NOT folded in: a real co-tenant is never our
-    * child, and the injected-co-tenant spec spawns its busy loops as
-    * children precisely to stay attributable as external. `busy` =
-    * machine-wide non-idle jiffies from /proc/stat EXCLUDING iowait and
-    * steal (steal is the hypervisor withholding vCPUs — it slows our
-    * spins exactly like a co-tenant but no in-VM process is consuming
-    * the time, so attributing it as "external" would re-create the r12
-    * false abort) and EXCLUDING guest/guest_nice (procfs(5): guest time
-    * is already accounted in user/nice, so summing it double-counts VM
-    * hosting load — r13 ADVICE). (-1, -1) when /proc is unreadable. */
-  /** Ancestor pid list, snapshotted on the FIRST walk and reused, with
-    * the last-seen jiffies carried for a pid that exits or becomes
-    * unreadable mid-run (r15, ADVICE r14 medium): re-walking the chain
-    * every call made `self` non-monotonic — an ancestor exiting between
-    * two readings dropped its folded jiffies, the self delta went
-    * negative, and otherCores inflated enough to falsely confirm a
-    * co-tenant or defeat the SelfQuietCores corroboration. */
-  private var ancestorPids: Seq[Long] = null
-  private val ancestorLastSeen = scala.collection.mutable.Map.empty[Long, Long]
-  // pid -> starttime at snapshot: a re-read whose starttime differs is a
-  // RECYCLED pid (the kernel reused the number for an unrelated process)
-  // and must fall back to lastSeen, not fold the stranger's jiffies
-  // (r16, ADVICE r15 low). All three structures are guarded by
-  // `ancestorLock` — the snapshot init was racy if two threads probed.
-  private val ancestorStart = scala.collection.mutable.Map.empty[Long, Long]
-  private val ancestorLock = new Object
-
-  private[graft] def cpuJiffies(): (Long, Long) = {
-    val self = try ancestorLock.synchronized {
-      val s = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/self/stat")))
-      val rest = s.substring(s.lastIndexOf(')') + 2).split(" ")
-      var sum = rest(11).toLong + rest(12).toLong
-      if (ancestorPids == null) {
-        // first call: walk the chain (sbt JVM, driver shell) up to init;
-        // depth-capped — a /proc race mid-walk just truncates the fold
-        val b = Seq.newBuilder[Long]
-        var pid = rest(1).toLong
-        var depth = 0
-        while (pid > 1 && depth < 10) {
-          pidJiffies(pid) match {
-            case Some((j, ppid, st)) =>
-              b += pid; ancestorLastSeen(pid) = j; ancestorStart(pid) = st
-              pid = ppid
-            case None => pid = 0
-          }
-          depth += 1
-        }
-        ancestorPids = b.result()
-      }
-      ancestorPids.foreach { pid =>
-        pidJiffies(pid) match {
-          case Some((j, _, st)) if ancestorStart.get(pid).forall(_ == st) =>
-            // a recycled pid could in principle report LOWER jiffies than
-            // the exited ancestor it replaced — the max keeps self
-            // monotonic either way
-            val seen = math.max(ancestorLastSeen.getOrElse(pid, 0L), j)
-            ancestorLastSeen(pid) = seen; sum += seen
-          case _ =>
-            // exited, unreadable, or recycled (starttime mismatch):
-            // carry the last reading this identity ever reported
-            sum += ancestorLastSeen.getOrElse(pid, 0L)
-        }
-      }
-      sum
-    } catch { case _: Throwable => -1L }
-    val busy = try {
-      val line = scala.io.Source.fromFile("/proc/stat").getLines().next()
-      // cpu  user nice system idle iowait irq softirq steal guest gnice
-      val p = line.trim.split("\\s+").drop(1).map(_.toLong)
-      val idle = p(3) + (if (p.length > 4) p(4) else 0L)
-      val steal = if (p.length > 7) p(7) else 0L
-      val guest = (if (p.length > 8) p(8) else 0L) +
-        (if (p.length > 9) p(9) else 0L)
-      p.sum - idle - steal - guest
-    } catch { case _: Throwable => -1L }
-    (self, busy)
-  }
-
-  /** One full-width spin with self-vs-other CPU attribution: returns
-    * (spin wall ms, non-self CPU cores burned across the spin window).
-    * The r12 detector aborted a zero-co-tenant run because a wall-time
-    * line alone cannot distinguish a co-tenant from the bench JVM's own
-    * GC/JIT/compaction tail or VM steal (VERDICT r12 #1); the jiffies
-    * split can — a co-tenant big enough to slow a full-width spin past
-    * 1.6x the floor must burn CPU this JVM does not own. Attribution
-    * unavailable (no /proc) → cores = MaxValue, i.e. fail open to the
-    * r12 wall-only behavior. */
-  private[graft] def attributedSpinMs(n: Int): (Double, Double) = {
-    val (s0, b0) = cpuJiffies()
-    val t0 = System.nanoTime()
-    val ms = parallelSpinMs(n)
-    val wallS = (System.nanoTime() - t0) / 1e9 // incl. the GC+sleep preamble
-    val (s1, b1) = cpuJiffies()
-    if (s0 < 0 || b0 < 0 || s1 < 0 || b1 < 0) (ms, Double.MaxValue)
-    else {
-      // USER_HZ is 100 on every mainstream linux ABI (procfs(5))
-      val otherS = math.max(0.0, ((b1 - b0) - (s1 - s0)) / 100.0)
-      (ms, otherS / math.max(wallS, 1e-9))
-    }
-  }
-
-  /** Post-guard run state for the stdout contract (r15, VERDICT r14 #2):
-    * the sticky per-attempt `contended` flag alone cannot distinguish
-    * "guard detected contention and re-ran everything quiet" from
-    * "committed samples are dirty". Returns (contended_seen, final_quiet):
-    * `contended_seen` = any attempt's probes flagged contention;
-    * `final_quiet` = every measured workload was confirmed under a quiet
-    * probe on some attempt AND nothing went unmeasured — i.e. the guard
-    * finished its job regardless of what it saw along the way. */
-  private[graft] def guardOutcome(attemptContended: Seq[Boolean],
-      measured: Set[String], everQuiet: Set[String],
-      neverMeasured: Set[String]): (Boolean, Boolean) =
-    (attemptContended.exists(identity),
-      neverMeasured.isEmpty && measured.forall(everQuiet.contains))
-
-  /** Non-self load (cores) above which an elevated spin is attributed to
-    * a real co-tenant rather than self noise: kernel threads plus the
-    * driver's supervision idle well under 1 core, while the co-tenants
-    * that actually poisoned artifacts held ~6 (r10) — 2.0 splits the two
-    * regimes with margin on both sides. */
-  private val CoTenantCores = 2.0
-
-  /** "Non-self load reads as essentially zero" — the corroboration line
-    * (r13 ADVICE, r14): decisions that RELAX scrutiny (re-baselining the
-    * abort line, accepting an elevated-but-self segment probe, skipping
-    * the confirm spin inside the lifted bracket) demand external load
-    * ~0, not merely below the 2.0-core abort threshold. A 1–2-core
-    * co-tenant is invisible to the abort line by design (it cannot slow
-    * a 32-wide spin enough to matter), but it must not be allowed to
-    * DRIVE the relaxations — with the whole in-house ancestor chain now
-    * attributed as self, a clean box genuinely reads 0.0 here. */
-  private val SelfQuietCores = 0.5
-
-  /** The four continuously-running streaming pins — their rec/sec floors
-    * are regression-gated (BASELINE.md), so the targeted guard re-runs
-    * them FIRST (VERDICT r12 #2: suite order put them last and a
-    * contended driver run committed an artifact with two of them never
-    * measured). */
-  private val streamingPins: Seq[String] = Seq("yahoo-streaming",
-    "stream-table-join-live", "state-store", "window-store")
-  private val streamingPinSet: Set[String] = streamingPins.toSet
-
-  /** Which suspects a targeted guard pass re-runs NEXT (r13, VERDICT
-    * r12 #2b): the regression-gated streaming pins first, then
-    * never-measured workloads, then the remaining suspects. Suite order
-    * put the pins LAST, and r12's contended driver run exhausted its
-    * budget with state-store / window-store never measured at all —
-    * priority tiering guarantees a budget death under persistent
-    * contention still leaves every pin with a sample.
-    *
-    * r14 (r13 ADVICE): a tier stops consuming exclusive passes once
-    * every workload in it has already been ATTEMPTED this guard phase —
-    * persistently-suspect pins (e.g. budget-skipped passes, which don't
-    * burn rerunCounts) must not eat all 3 targeted passes and starve
-    * never-measured non-pin workloads (the r12 #2 failure mode,
-    * reappearing one tier down). Once the pins tier has had its
-    * exclusive pass, later passes fold the next tier in alongside it. */
-  private[graft] def guardTier(sus: Set[String], measured: Set[String],
-      attempted: Set[String] = Set.empty): Set[String] = {
-    val pins = sus.intersect(streamingPinSet)
-    val neverMeasured = (sus -- pins).filterNot(measured.contains)
-    if (pins.nonEmpty && !pins.subsetOf(attempted)) pins
-    else if (neverMeasured.nonEmpty && !neverMeasured.subsetOf(attempted))
-      pins ++ neverMeasured
-    else sus
-  }
-
-  /** Quietest full-width spin ever observed on this machine (persisted
-    * under benchDir, keyed by thread count) — the ABSOLUTE reference a
-    * contended-from-the-start run is judged against. A within-run
-    * start/end ratio only sees co-tenants that arrive or leave
-    * MID-suite; r10's co-tenant was present the whole run and every
-    * relative probe read quiet. */
-  private def quietSpinRef(n: Int, observed: Double): Double = {
-    val f = new java.io.File(benchDir, s"spin-quiet-$n.txt")
-    val prior =
-      try {
-        if (f.exists())
-          new String(java.nio.file.Files.readAllBytes(f.toPath)).trim.toDouble
-        else Double.MaxValue
-      } catch { case _: Throwable => Double.MaxValue }
-    val best = math.min(prior, observed)
-    try java.nio.file.Files.write(f.toPath, f"$best%.1f".getBytes)
-    catch { case _: Throwable => () }
-    best
-  }
-
-  /** 5-minute loadavg — distinguishes a SUSTAINED co-tenant (visible at
-    * suite start even though our own sbt/JVM startup pollutes the 1-min
-    * figure) from our own just-finished work. */
-  private def loadAvg5(): Double =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString
-      .split(" ")(1).toDouble
-    catch { case _: Throwable => -1.0 }
-
-  // ---- r11 reliability plumbing: the r10 driver bench died rc 124 (a
-  // checkpoint-write failure wedged a processAllAvailable() forever and
-  // the suite never printed its stdout line). Three defenses:
-  //  1. a total wall-clock budget checked before every workload — when
-  //     exceeded the suite stops measuring and EMITS the artifact with
-  //     what exists (a partial artifact beats rc 124);
-  //  2. a watchdog around every streaming drain that stops the query and
-  //     discards the sample instead of hanging;
-  //  3. explicit checkpoint locations under benchDir (the r10 stack
-  //     died in ChecksumFs temp-file creation on the /tmp default).
-  @volatile private var deadlineNs: Long = Long.MaxValue
-  // r12 (VERDICT #1a): deadline for the CURRENT phase. Full attempts run
-  // against `deadline - guard reserve` (~22% of the budget by default) so
-  // the targeted guard ALWAYS has wall-clock left to re-run streaming
-  // pins and ceiling-capped suspects — r11's driver artifact burned the
-  // whole 2700 s on one contention-slowed full attempt and committed
-  // `contended: true` with 18 unresolved suspects and targeted_passes: 0.
-  // The guard phase lifts this back to the true deadline.
-  @volatile private var phaseDeadlineNs: Long = Long.MaxValue
-  private def budgetOk: Boolean =
-    System.nanoTime() < math.min(deadlineNs, phaseDeadlineNs)
-  // r12 (VERDICT #1b): mid-attempt co-tenant abort. During a FULL attempt
-  // every ~10th workload gate runs one full-width spin against the
-  // machine's quiet floor; a reading past 1.6x the floor (idle-JVM noise
-  // tops out ~1.5x — r11 three-run evidence; the r10/r11 co-tenant
-  // signatures read 1.7x and 6.4x) means a co-tenant arrived, so the
-  // attempt stops measuring base-scale entries (samples already taken
-  // stay, min-median merge keeps the quick ones) and falls through to
-  // the targeted guard, which re-runs everything never measured.
-  @volatile private var attemptAborted = false
-  @volatile private var midProbe: () => Unit = () => ()
-  private val skippedWls = scala.collection.mutable.LinkedHashSet.empty[String]
-  // r12 (review): workloads gated since the last QUIET mid-attempt probe.
-  // When the probe detects a co-tenant, everything measured since the
-  // previous quiet reading was (potentially) measured with the co-tenant
-  // already present but undetected — those samples are de-quieted at
-  // Attempt construction so the targeted guard re-confirms them instead
-  // of silently committing up-to-1.6x-inflated medians as quiet.
-  private val sinceQuietProbe =
-    scala.collection.mutable.LinkedHashSet.empty[String]
-  // r15 (VERDICT r14 #3): per-workload audit trail of the ATTRIBUTED
-  // non-self cores observed by the spin brackets containing it — a
-  // steady 1-2-core co-tenant is invisible to the abort line by design,
-  // so the artifact records the reading for post-hoc adjudication.
-  // Max-merged across probes/attempts; -1 = no bracket probe observed
-  // the workload (attribution unavailable readings are skipped). Zero
-  // behavior change to the guard itself.
-  private val wlNonSelf = scala.collection.mutable.Map.empty[String, Double]
-  private def stampNonSelf(cores: Double): Unit =
-    if (cores >= 0 && cores != Double.MaxValue)
-      sinceQuietProbe.synchronized(sinceQuietProbe.foreach { wl =>
-        wlNonSelf.synchronized {
-          if (wlNonSelf.getOrElse(wl, -1.0) < cores) wlNonSelf(wl) = cores
-        }
-      })
-  @volatile private var taintedWls: Set[String] = Set.empty
-  /** Budget gate for one workload: true to run; false records the skip
-    * (budget exhausted OR the attempt was aborted mid-suite — either way
-    * the workload becomes a targeted-guard suspect until measured). */
-  private def budgetGate(wl: String): Boolean = {
-    midProbe()
-    if (budgetOk && !attemptAborted) {
-      sinceQuietProbe.synchronized(sinceQuietProbe += wl); true
-    }
-    else { skippedWls.synchronized(skippedWls += wl); false }
-  }
+  /** Rows and on-disk bytes (every file under the table's path, following
+    * the 10x corpus's symlinks) of the five source tables in `dir`. */
+  private def tableInputs(spark: SparkSession, dir: String): Map[String, Input] =
+    sourceTables.map(_._1).map { t =>
+      import scala.jdk.CollectionConverters._
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$dir/$t.parquet"),
+        java.nio.file.FileVisitOption.FOLLOW_LINKS)
+      val bytes = try files.iterator().asScala
+        .filter(java.nio.file.Files.isRegularFile(_)).map(java.nio.file.Files.size).sum
+      finally files.close()
+      t -> Input(Tables.load(spark, dir, t).count(), bytes)
+    }.toMap
 
   private lazy val drainWatchdogS: Long =
     sys.env.getOrElse("SPARK_GRAFT_STREAM_WATCHDOG_S", "120").toLong
   /** Run `q.processAllAvailable()` under a watchdog: on timeout the query
-    * is stopped and the sample discarded (callers catch and drop). */
+    * is stopped and the sample discarded (callers catch and drop) — a
+    * wedged drain must not hang the suite before it prints its line. */
   private def watchdogDrain(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
     val ex = java.util.concurrent.Executors.newSingleThreadExecutor(r => {
       val t = new Thread(r, "bench-drain-watchdog"); t.setDaemon(true); t
@@ -734,19 +527,12 @@ object Bench {
     try f.get(drainWatchdogS, java.util.concurrent.TimeUnit.SECONDS)
     catch {
       case _: java.util.concurrent.TimeoutException =>
-        System.err.println(
-          s"[bench] drain watchdog fired (${drainWatchdogS}s) - stopping query")
+        warn(s"drain watchdog fired (${drainWatchdogS}s) - stopping query")
         try q.stop() catch { case _: Throwable => () }
         throw new RuntimeException(s"streaming drain exceeded ${drainWatchdogS}s")
       case e: java.util.concurrent.ExecutionException => throw e.getCause
     } finally ex.shutdownNow()
   }
-
-  /** Full-width spin geometry + the machine's known quiet floor (min-
-    * seeded from the committed BENCH.json and the benchDir marker file,
-    * min-updated by every spin this run). */
-  @volatile private var spinThreads: Int = 32
-  @volatile private var quietSpinMs: Double = Double.MaxValue
 
   private val ckptSeq = new java.util.concurrent.atomic.AtomicInteger(0)
   /** Fresh per-query checkpoint dir under benchDir; the whole ckpt tree
@@ -755,20 +541,11 @@ object Bench {
     s"$benchDir/ckpt/$name-${ckptSeq.incrementAndGet()}"
 
   def main(args: Array[String]): Unit = {
-    // total wall-clock budget (r11): the driver enforces its own timeout
-    // with SIGKILL — overshooting it loses the WHOLE artifact (r10 was
-    // rc 124 with zero parsed numbers). The suite self-limits well under
-    // that and emits whatever it measured.
-    val budgetS =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "2700").toLong
-    deadlineNs = System.nanoTime() + budgetS * 1000000000L
-    // guard-only reserve (r12, VERDICT #1a): the slice of the budget the
-    // full attempts may NOT consume, so the targeted guard always runs
-    val guardFrac =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_GUARD_FRAC", "0.22").toDouble
-    phaseDeadlineNs =
-      System.nanoTime() + (budgetS * (1.0 - guardFrac) * 1e9).toLong
-    // wipe the checkpoint tree from any prior run (fresh state per query)
+    // total wall-clock budget: the driver kills an overlong run and loses
+    // the whole artifact, so the suite stops measuring once the budget is
+    // spent and emits what it has (the rest is listed as `skipped`)
+    val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "2700").toLong
+    val deadlineNs = System.nanoTime() + budgetS * 1000000000L
     try {
       val ck = new java.io.File(benchDir, "ckpt")
       if (ck.exists()) {
@@ -776,108 +553,16 @@ object Bench {
         java.nio.file.Files.walk(ck.toPath).iterator().asScala.toSeq
           .sortBy(-_.getNameCount).foreach(p => p.toFile.delete())
       }
-    } catch { case scala.util.control.NonFatal(_) => () }
+    } catch { case NonFatal(_) => () }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // r13 (VERDICT #3): isolated-mode runs — SPARK_GRAFT_BENCH_ONLY=
-    // streaming measures ONLY the four streaming pins (no batch / 10x /
-    // serve sections), for adjudicating the rec/sec pins on a quiet box
-    // without a full suite's churn in front of them. The artifact goes to
-    // BENCH.only-<mode>.json so the committed BENCH.json (the prior-
-    // median / floor / quiet-spin source) is never overwritten by a
-    // deliberately-partial run.
-    // r14 (VERDICT r13 #5): besides the `streaming` section alias, the
-    // mode accepts an explicit comma-separated workload list (e.g.
-    // SPARK_GRAFT_BENCH_ONLY=lang-id,text-stats) for adjudicating
-    // individual sub-second entries with 5+ quiet isolated reps
-    val benchOnly = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-    val workloadNames = workloads.map(_._1).toSet
-    // exact custom-block names (r15, ADVICE r14: substring/prefix matching
-    // let a typo'd serve name pass the known-name check and silently
-    // produce an empty isolated run)
-    val customWls: Set[String] = Set(
-      "consumeproduce", "suppress-ordered", "dedup-index-probe",
-      "ann-ivf", "ann-ivf-search", "ann-pq", "ann-ivf-pq-serve",
-      "contrastive-self@10x", "contrastive-self-full@10x", "semdedup-prod@10x",
-      "image-dedup-serve", "image-dedup-serve@10x",
-      "audio-vad-serve@10x", "video-scenecut-serve@10x",
-      "multimodal-audio-serve@10x")
-    def knownWl(w: String): Boolean =
-      workloadNames.contains(w.stripSuffix("@10x")) ||
-        streamingPinSet.contains(w) || customWls.contains(w)
-    // (onlyEngaged: the mode string for the stdout tag + artifact name,
-    // present ONLY when the filter actually engaged — the unknown-value
-    // fallback runs the FULL suite and must not tag its total as partial
-    // (ADVICE r14). The value is rebuilt from the recognized names, so no
-    // raw env bytes reach the JSON line or the filesystem.)
-    val (onlyFilter: (String => Boolean), onlyEngaged: Option[String]) =
-      benchOnly match {
-        case Some("streaming") =>
-          ((streamingPinSet.contains _): String => Boolean, Some("streaming"))
-        case Some(list) if list.split(",").map(_.trim).exists(knownWl) =>
-          val wanted = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
-          val unknown = wanted.filterNot(knownWl)
-          if (unknown.nonEmpty) System.err.println(
-            s"[bench] SPARK_GRAFT_BENCH_ONLY names unknown workload(s): " +
-              unknown.toSeq.sorted.mkString(", "))
-          ((wanted.contains _): String => Boolean,
-            Some(wanted.filter(knownWl).toSeq.sorted.mkString(",")))
-        case Some(other) =>
-          System.err.println(
-            s"[bench] unknown SPARK_GRAFT_BENCH_ONLY=$other - running the full suite")
-          (((_: String) => true): String => Boolean, None)
-        case None => (((_: String) => true): String => Boolean, None)
-      }
-    // r13 (VERDICT #1): run-local multiplier on the mid-attempt abort
-    // line — lifted when elevated spins persist with no external CPU
-    // consumer (this box's self-noise ceiling sits above the 1.6x model).
-    // Never touches the persisted quiet floor.
-    var selfNoiseFactor = 1.0
-    // every persisted bench artifact (codebooks, exact-pair audit, near-dup
-    // index, tuned nProbe) is keyed by the sf it was built from — a smoke
-    // run at another sf must never satisfy this run's marker guards
-    val sfTag = new java.io.File(sfDir).getName
+    val only = selection(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // A/B knob for attributing state-store cost: "rocksdb" (default; the
-    // production/durability setting, required by transformWithState stages)
-    // vs "hdfs" (the in-heap HDFSBackedStateStoreProvider)
-    val stateStore = sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "rocksdb")
-    spinThreads = try cpus.toInt catch { case _: Throwable => 32 }
-    // seed the quiet-spin floor from the committed artifact: benchDir
-    // lives under target/ (not committed), so a fresh driver checkout
-    // would otherwise bootstrap its reference from a possibly-contended
-    // first observation — exactly the r10 blindness
-    quietSpinMs = try {
-      val f = new java.io.File("BENCH.json")
-      if (!f.exists()) Double.MaxValue
-      else {
-        val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
-        // only trust the committed floor when it was measured at the
-        // same spin width (the floor scales with thread count)
-        val sameWidth = Option(root.get("spin_threads"))
-          .exists(_.asInt() == spinThreads)
-        if (!sameWidth) Double.MaxValue
-        else Option(root.get("spin_quiet_ms")).map(_.asDouble())
-          .filter(_ > 0).getOrElse(Double.MaxValue)
-      }
-    } catch { case scala.util.control.NonFatal(_) => Double.MaxValue }
-    // the LAUNCH spin: measured at main entry in the freshly-forked JVM
-    // (run/fork := true), BEFORE SparkSession exists — the one full-width
-    // reading free of our own GC/allocator noise, and therefore the one
-    // reading whose absolute comparison against the machine's quiet
-    // floor can be trusted to mean "co-tenant present at launch" (the
-    // r10 blindness). In-suite spins (attempt start/end, streaming
-    // segment) read 1.15-1.5x the floor from JVM-internal noise alone
-    // and only gate per-workload re-runs, never whole-suite retries.
-    val launchSpinMs = parallelSpinMs(spinThreads)
-    quietSpinMs = math.min(quietSpinMs, quietSpinRef(spinThreads, launchSpinMs))
-    val launchVsQuiet = launchSpinMs / quietSpinMs
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    if (stateStore == "rocksdb") builder
       // transformWithState stages (live fk join) require the RocksDB store
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -885,1388 +570,531 @@ object Bench {
       // snapshot uploads (the production setting; cuts commit latency)
       .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
         "true")
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // input cardinality + on-disk bytes per source table, for rec/sec and
-    // MB/sec reporting (the reference's SimpleBenchmark metric pair)
-    def rows(name: String): Long = Tables.load(spark, sfDir, name).count()
-    def bytes(name: String): Long = new java.io.File(s"$sfDir/$name.parquet").length()
-    val eventRows = rows("events")
-    val lineitemRows = rows("lineitem")
-    val docRows = rows("documents")
-    val embRows = rows("embeddings")
-    val orderRows = rows("orders")
-    warmup(spark, sfDir)
+    val suite = new Suite(spark, sfDir,
+      only.map(_._2.contains _).getOrElse((_: String) => true), deadlineNs)
+    // idle-path micro-batch latency first, before any heavy work leaves a
+    // GC backlog behind; a failure here must never cost the artifact
+    val lat =
+      try latencyPercentiles(spark)
+      catch { case NonFatal(e) =>
+        warn(s"latency probe crashed: $e"); Map.empty[String, Double] }
+    val samples = suite.base() ++ suite.custom() ++ suite.x10() ++ suite.streaming()
 
-    val inputBytes: Map[String, Long] = Map(
-      "consume" -> bytes("lineitem"), "pricing-summary" -> bytes("lineitem"),
-      "star-join" -> bytes("orders"), "topk" -> bytes("orders"),
-      "table-agg" -> bytes("orders"),
-      "dedup-minhash-lsh" -> bytes("documents"),
-      "dedup-minhash-native" -> bytes("documents"),
-      "dedup-jaccard" -> bytes("documents"),
-      "text-stats" -> bytes("documents"), "lang-id" -> bytes("documents"),
-      "ann-cosine-topk" -> bytes("embeddings"),
-      "ann-ivf" -> bytes("embeddings"),
-      "dedup-simhash-pairs" -> bytes("documents"),
-      "dedup-simhash-native" -> bytes("documents"),
-      "sample-stratified" -> bytes("documents"),
-      "pipeline-c4" -> bytes("documents"),
-      "text-chunking" -> bytes("documents"),
-      "sequence-packing" -> bytes("documents"),
-      "dedup-components" -> bytes("documents"),
-      "embed-quantize" -> bytes("embeddings"),
-      "dedup-spans" -> bytes("documents"),
-      "decontaminate" -> bytes("documents"),
-      "pii-redact" -> bytes("documents"),
-      "shipping-priority" -> bytes("lineitem"),
-      "ann-pq" -> bytes("embeddings"),
-      "ann-ivf-search" -> bytes("embeddings"),
-      "dedup-spans-native" -> bytes("documents"),
-      "tfidf" -> bytes("documents"),
-      "vocab-ids" -> bytes("documents"),
-      "corpus-shuffle" -> bytes("documents"),
-      "dedup-priority-keep" -> bytes("documents"),
-      "contrastive-self" -> bytes("embeddings"),
-      "semdedup-prod" -> bytes("embeddings"),
-      "knn-classify" -> bytes("embeddings"),
-      "dsir-weights" -> bytes("documents"),
-      "bpe-pairs" -> bytes("documents"),
-      "bpe-merges" -> bytes("documents"),
-      "bpe-byte-encode" -> bytes("documents"),
-      "curation-funnel" -> bytes("documents"),
-      "line-filter" -> bytes("documents"),
-      "pack-sequences" -> bytes("documents"),
-      "repetition-remove" -> bytes("documents"),
-      "quality-classifier" -> bytes("embeddings"),
-      "ann-ivf-pq" -> bytes("embeddings"),
-      "line-dedup-corpus" -> bytes("documents"),
-      "perplexity-buckets" -> bytes("documents"),
-      "dedup-minhash-incr" -> bytes("documents"),
-      "dedup-index-probe" -> bytes("documents"),
-      "mixture-unimax" -> bytes("documents"),
-      "wordpiece-encode" -> bytes("documents"),
-      "wordpiece-fertility" -> bytes("documents"),
-      "unigram-train" -> bytes("documents"),
-      "unigram-train-soft" -> bytes("documents"),
-      "unigram-encode" -> bytes("documents"),
-      "wordpiece-bert" -> bytes("documents"),
-      "wordpiece-oov" -> bytes("documents"),
-      "minhash-estimate" -> bytes("documents"),
-      "inspection-sample" -> bytes("documents"),
-      "novelty-score" -> bytes("documents"),
-      "dedup-containment" -> bytes("documents"),
-      "blocklist-filter" -> bytes("documents"),
-      "pii-luhn" -> bytes("documents"),
-      "dedup-cluster-sizes" -> bytes("documents"),
-      "train-val-split" -> bytes("documents"),
-      "domain-excess" -> bytes("documents"),
-      "type-token-stats" -> bytes("documents"),
-      "vocab-growth" -> bytes("documents"),
-      "char-diversity" -> bytes("documents"),
-      "length-histogram" -> bytes("documents"),
-      "contamination-report" -> bytes("documents"),
-      "heavy-hitters-cms" -> bytes("documents"),
-      "hll-distinct" -> bytes("documents"),
-      "audio-vad" -> bytes("documents"),
-      "video-scenecut" -> bytes("documents"),
-      "source-overlap" -> bytes("documents"),
-      "langid-confusion" -> bytes("documents"),
-      "image-ahash-dedup" -> bytes("documents"),
-      "image-dedup-components" -> bytes("documents"),
-      "winnowing-overlap" -> bytes("documents"),
-      "lsh-pr-eval" -> bytes("documents"),
-      "graph-triangles" -> bytes("documents"),
-      "kmeans-clusters" -> bytes("embeddings"),
-      "embed-drift" -> bytes("embeddings"),
-      "pagerank-dupgraph" -> bytes("documents"),
-      "multimodal-audio" -> bytes("documents"),
-      "multimodal-video" -> bytes("documents"),
-      "embed-pca" -> bytes("embeddings"),
-      "label-noise" -> bytes("embeddings"),
-      "unpivot-metrics" -> bytes("lineitem"),
-      "profile-columns" -> bytes("lineitem"),
-      "dq-rules" -> bytes("lineitem"),
-      "zorder-layout" -> bytes("orders"),
-      "compaction-plan" -> bytes("documents"),
-      "graph-degree-dist" -> bytes("documents"),
-      "pmi-collocations" -> bytes("documents"),
-      "k-anonymity" -> bytes("documents"),
-      "histogram-equidepth" -> bytes("lineitem"),
-      "bloom-semi-reduction" -> bytes("orders"),
-      "random-projection" -> bytes("embeddings"),
-      "cluster-purity" -> bytes("embeddings"),
-      "image-dedup-serve" -> bytes("documents"),
-      "audio-vad-serve" -> bytes("documents"),
-      "video-scenecut-serve" -> bytes("documents"),
-      "multimodal-audio-serve" -> bytes("documents"),
-      "kmv-distinct" -> bytes("documents"),
-      "kmv-set-ops" -> bytes("documents"),
-      "er-entities" -> bytes("documents"),
-      "er-golden-record" -> bytes("documents"),
-      "dedup-prefix-filter" -> bytes("documents"),
-      "quality-budget" -> bytes("documents"),
-      "topk-per-source" -> bytes("documents"),
-      "weighted-sample" -> bytes("documents"),
-      "l-diversity" -> bytes("documents"),
-      "ivf-recall-eval" -> bytes("embeddings"),
-      "split-leakage-safe" -> bytes("documents"),
-      "mixture-epochs" -> bytes("documents"),
-      "hilbert-layout" -> bytes("orders")).withDefaultValue(bytes("events"))
-
-    val inputRows: Map[String, Long] = Map(
-      "consume" -> lineitemRows, "pricing-summary" -> lineitemRows,
-      "star-join" -> orderRows, "topk" -> orderRows, "table-agg" -> orderRows,
-      "dedup-minhash-lsh" -> docRows, "dedup-minhash-native" -> docRows,
-      "dedup-jaccard" -> docRows,
-      "text-stats" -> docRows, "lang-id" -> docRows,
-      "ann-cosine-topk" -> embRows, "ann-ivf" -> embRows,
-      "dedup-simhash-pairs" -> docRows, "dedup-simhash-native" -> docRows,
-      "sample-stratified" -> docRows,
-      "pipeline-c4" -> docRows,
-      "text-chunking" -> docRows,
-      "sequence-packing" -> docRows,
-      "dedup-components" -> docRows,
-      "embed-quantize" -> embRows,
-      "dedup-spans" -> docRows,
-      "decontaminate" -> docRows,
-      "pii-redact" -> docRows,
-      "shipping-priority" -> lineitemRows,
-      "ann-pq" -> embRows,
-      "ann-ivf-search" -> embRows,
-      "dedup-spans-native" -> docRows,
-      "tfidf" -> docRows,
-      "vocab-ids" -> docRows,
-      "corpus-shuffle" -> docRows,
-      "dedup-priority-keep" -> docRows,
-      "contrastive-self" -> embRows,
-      "knn-classify" -> embRows,
-      "dsir-weights" -> docRows,
-      "bpe-pairs" -> docRows,
-      "bpe-merges" -> docRows,
-      "bpe-byte-encode" -> docRows,
-      "curation-funnel" -> docRows,
-      "line-filter" -> docRows,
-      "pack-sequences" -> docRows,
-      "repetition-remove" -> docRows,
-      "quality-classifier" -> embRows,
-      "ann-ivf-pq" -> embRows,
-      "line-dedup-corpus" -> docRows,
-      "perplexity-buckets" -> docRows,
-      "dedup-minhash-incr" -> docRows,
-      "dedup-index-probe" -> docRows,
-      "mixture-unimax" -> docRows,
-      "wordpiece-encode" -> docRows,
-      "wordpiece-fertility" -> docRows,
-      "unigram-train" -> docRows,
-      "unigram-train-soft" -> docRows,
-      "unigram-encode" -> docRows,
-      "wordpiece-bert" -> docRows,
-      "wordpiece-oov" -> docRows,
-      "minhash-estimate" -> docRows,
-      "inspection-sample" -> docRows,
-      "novelty-score" -> docRows,
-      "dedup-containment" -> docRows,
-      "blocklist-filter" -> docRows,
-      "pii-luhn" -> docRows,
-      "dedup-cluster-sizes" -> docRows,
-      "train-val-split" -> docRows,
-      "domain-excess" -> docRows,
-      "type-token-stats" -> docRows,
-      "vocab-growth" -> docRows,
-      "char-diversity" -> docRows,
-      "length-histogram" -> docRows,
-      "contamination-report" -> docRows,
-      "heavy-hitters-cms" -> docRows,
-      "hll-distinct" -> docRows,
-      "audio-vad" -> docRows,
-      "video-scenecut" -> docRows,
-      "source-overlap" -> docRows,
-      "langid-confusion" -> docRows,
-      "image-ahash-dedup" -> docRows,
-      "image-dedup-components" -> docRows,
-      "winnowing-overlap" -> docRows,
-      "lsh-pr-eval" -> docRows,
-      "graph-triangles" -> docRows,
-      "kmeans-clusters" -> embRows,
-      "embed-drift" -> embRows,
-      "pagerank-dupgraph" -> docRows,
-      "multimodal-audio" -> docRows,
-      "multimodal-video" -> docRows,
-      "embed-pca" -> embRows,
-      "label-noise" -> embRows,
-      "unpivot-metrics" -> lineitemRows,
-      "profile-columns" -> lineitemRows,
-      "dq-rules" -> lineitemRows,
-      "zorder-layout" -> orderRows,
-      "compaction-plan" -> docRows,
-      "graph-degree-dist" -> docRows,
-      "pmi-collocations" -> docRows,
-      "k-anonymity" -> docRows,
-      "histogram-equidepth" -> lineitemRows,
-      "bloom-semi-reduction" -> orderRows,
-      "random-projection" -> embRows,
-      "cluster-purity" -> embRows,
-      "kmv-distinct" -> docRows,
-      "kmv-set-ops" -> docRows,
-      "er-entities" -> docRows,
-      "er-golden-record" -> docRows,
-      "dedup-prefix-filter" -> docRows,
-      "quality-budget" -> docRows,
-      "topk-per-source" -> docRows,
-      "weighted-sample" -> docRows,
-      "l-diversity" -> docRows,
-      "ivf-recall-eval" -> embRows,
-      "split-leakage-safe" -> docRows,
-      "mixture-epochs" -> docRows,
-      "hilbert-layout" -> orderRows).withDefaultValue(eventRows)
-
-    // the reference's canonical streaming scale is 10M records
-    // (tests/kafkatest/benchmarks/streams/streams_simple_benchmark_test.py:48
-    // num_records = 10000000); we replay the events table enough times to
-    // clear SPARK_GRAFT_STREAM_RECORDS (default 1M) so rec/sec amortizes
-    // per-batch overhead instead of measuring micro-batch startup
-    val streamTarget =
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_RECORDS", "1000000").toLong
-    val streamCycles =
-      math.max(1L, math.ceil(streamTarget.toDouble / eventRows).toLong).toInt
-    val streamRecords = eventRows * streamCycles
-
-    // ---- one measured attempt: load probes + every workload that passes
-    // the `pass` filter (the full suite on attempt 1; the r10 contention
-    // guard re-runs only suspect workloads afterwards). Raw samples are
-    // returned — the artifact is assembled AFTER the retry loop from the
-    // per-workload MINIMUM-median merge across attempts, so one co-tenant
-    // burst can no longer poison a committed entry (r9's window-store /
-    // dedup-jaccard lesson). One-time build artifacts (10x corpus,
-    // codebooks, media corpora, exact-pair audit, near-dup index) are
-    // marker-guarded under benchDir, so a re-run re-pays only measured
-    // work.
-    case class Attempt(contended: Boolean, samples: Seq[Sample],
-        lat: Map[String, Double], streamLat: Map[String, Map[String, Double]],
-        contrastive: (Double, Int),
-        // (keep/drop agreement vs the oracle-config result, k used) for
-        // the production-config semdedup-prod@10x entry (r14)
-        semdedupProd: (Double, Int), loadStart: Double, loadEnd: Double,
-        calibStart: Double, calibEnd: Double, calibRatio: Double,
-        pcalibStart: Double, pcalibEnd: Double, pcalibRatio: Double,
-        pcalibVsQuiet: Double, streamProbeMs: Double, streamQuiet: Boolean,
-        aborted: Boolean,
-        // start-spin-vs-floor ratio the idle-path latency probe was (or
-        // would have been) taken under — r13 VERDICT #5: committed
-        // latency percentiles must be tagged with their measurement
-        // conditions, and only quiet-start attempts take them at all
-        latSpinVsQuiet: Double = -1.0,
-        // workloads gated true since the last quiet mid-attempt probe —
-        // for a TARGETED pass (no mid-probes) this is every workload the
-        // pass actually ran, which is what bounds its rerun accounting
-        gated: Set[String] = Set.empty)
-
-    def oneAttempt(pass: String => Boolean, full: Boolean,
-        first: Boolean = false): Attempt = {
-      // co-tenant load probe BEFORE any measured work (see loadAvg /
-      // calibrationSpinMs / parallelSpinMs docs); the matching end-probe
-      // runs after the last workload
-      val loadStart = loadAvg()
-      val loadStart5 = loadAvg5()
-      val calibStartMs = calibrationSpinMs()
-      val (pcalibStartMs, pcalibStartOther) = attributedSpinMs(spinThreads)
-      quietSpinMs = math.min(quietSpinMs, quietSpinRef(spinThreads, pcalibStartMs))
-      // arm the mid-attempt abort probe (full attempts only — a targeted
-      // pass is already the fall-through and must keep measuring)
-      attemptAborted = false
-      taintedWls = Set.empty
-      sinceQuietProbe.synchronized(sinceQuietProbe.clear())
-      var gateCalls = 0
-      var selfElevStreak = 0
-      midProbe =
-        if (!full) () => ()
-        else () => {
-          gateCalls += 1
-          if (gateCalls % 10 == 0 && !attemptAborted && budgetOk) {
-            val (spin, other1) = attributedSpinMs(spinThreads)
-            stampNonSelf(other1) // audit trail BEFORE any bracket clear
-            quietSpinMs = math.min(quietSpinMs, quietSpinRef(spinThreads, spin))
-            // abort line: 1.6x the quiet floor, lifted by the run-local
-            // self-noise re-baseline when this JVM's own tail work keeps
-            // reading past it with no external consumer (r13, VERDICT #1).
-            // The BRACKET-CLEAR line stays at the UNLIFTED 1.6x (r13
-            // ADVICE): the lifted factor may only suppress aborts, never
-            // certify samples as verified-quiet — a sub-abort-threshold
-            // co-tenant can inflate spins up to the lifted line, and
-            // those samples must stay gated for the end probes and the
-            // targeted guard to adjudicate.
-            val quietLine = 1.6 * quietSpinMs
-            val line = quietLine * selfNoiseFactor
-            if (spin <= quietLine) {
-              selfElevStreak = 0
-              // a genuinely quiet reading brackets everything gated since
-              // the previous quiet reading as measured-under-quiet
-              sinceQuietProbe.synchronized(sinceQuietProbe.clear())
-            } else if (spin <= line && other1 < SelfQuietCores) {
-              // inside the re-baselined self-noise band AND corroborated
-              // by ~zero external load on this very reading: skip the
-              // confirm/abort machinery (the two extra full-width spins
-              // the re-baseline exists to save) but keep the bracket
-              // OPEN — these samples are not verified-quiet
-            } else {
-              // one bad reading can be the JVM's own GC/compaction tail,
-              // not a co-tenant (r11 evidence: a post-batch 428 ms probe
-              // vs a 212 ms floor with zero co-tenants) — a genuine
-              // co-tenant persists across a SECOND spin, a GC burst does
-              // not.
-              val (confirm, other2) = attributedSpinMs(spinThreads)
-              stampNonSelf(other2)
-              quietSpinMs = math.min(quietSpinMs, quietSpinRef(spinThreads, confirm))
-              val otherCores = math.max(other1, other2)
-              if (confirm <= line) {
-                // unconfirmed spike: skip the abort but do NOT clear the
-                // bracket — only a fully-quiet first reading may commit
-                // the window's samples as verified-quiet (r12 ADVICE: a
-                // bursty co-tenant exiting between the two back-to-back
-                // spins would otherwise get its inflated samples
-                // committed as quiet with no guard re-confirmation)
-                System.err.println(
-                  f"[bench] mid-attempt spin spike $spin%.0f ms not " +
-                    f"confirmed ($confirm%.0f ms) - GC tail, not a co-tenant")
-              } else if (otherCores >= CoTenantCores) {
-                attemptAborted = true
-                // everything measured since the last quiet probe reading
-                // may already be co-tenant-inflated — de-quiet it so the
-                // targeted guard confirms those samples (review r12)
-                taintedWls = sinceQuietProbe.synchronized(sinceQuietProbe.toSet)
-                System.err.println(
-                  f"[bench] mid-attempt spins $spin%.0f/$confirm%.0f ms > " +
-                    f"line $line%.0f ms with non-self load " +
-                    f"$otherCores%.1f cores - co-tenant confirmed; " +
-                    "aborting this attempt, remaining workloads go to the " +
-                    "targeted guard (re-confirming " +
-                    s"${taintedWls.size} samples since the last quiet probe)")
-              } else {
-                // elevated but SELF-attributed (r12 VERDICT #1: the
-                // clean-box false abort — the bench JVM's own GC/JIT/
-                // compaction tail and/or VM steal reads 1.7-2.0x the
-                // floor on this VM): keep measuring; the bracket stays
-                // open so the attempt-end probe adjudicates these samples
-                selfElevStreak += 1
-                System.err.println(
-                  f"[bench] mid-attempt spins $spin%.0f/$confirm%.0f ms " +
-                    f"elevated but self-attributed (non-self " +
-                    f"$otherCores%.1f cores) - not a co-tenant")
-                if (selfElevStreak >= 3 && selfNoiseFactor < 2.5 &&
-                    otherCores < SelfQuietCores) {
-                  // elevation persists with no external consumer: this
-                  // box's self-noise ceiling sits above the 1.6x model —
-                  // re-baseline the ABORT line (only) so remaining gates
-                  // stop paying two extra full-width spins each; the
-                  // quiet floor itself stays untouched (it keys the
-                  // committed quietness taint and the contended flag).
-                  // Corroboration (r13 ADVICE): non-self must read ~0 —
-                  // a 1-2 core co-tenant sits under the 2.0-core abort
-                  // threshold, and letting IT drive the lift would later
-                  // commit its up-to-2.5x-inflated spins as suppressed
-                  selfNoiseFactor = math.min(2.5,
-                    math.max(selfNoiseFactor,
-                      math.min(spin, confirm) / (1.6 * quietSpinMs) * 1.1))
-                  System.err.println(
-                    f"[bench] self-noise persisted $selfElevStreak%d probes" +
-                      f" - re-baselining abort-line factor to $selfNoiseFactor%.2f")
-                }
-              }
-            }
-          }
-        }
-
-      // idle-path micro-batch latency rides the START of a full attempt
-      // (r11): through r10 it ran after the batch + 10x sections, where
-      // the JVM's GC backlog inflated the percentiles ~3x — the
-      // EndToEndLatency analogue wants the cleanest idle-path reading,
-      // which is right here, before any heavy work
-      // belt-and-suspenders (r12 ADVICE): the probe has its own internal
-      // catch, but a failure here must NEVER abort the suite before the
-      // artifact is printed (the rc-124 class of outcome).
-      // r13 (VERDICT #5): take the percentiles only under a QUIET start
-      // spin (<= 1.2x floor) — the committed r11/r12 numbers tracked run
-      // state (loadavg 4.5-5.5 attempt starts), not the engine. A
-      // non-quiet start defers the probe to the guard phase, where main
-      // retakes it once quiet; the artifact tags the reading either way.
-      val latSpinVsQuiet = pcalibStartMs / quietSpinMs
-      val lat =
-        if (full && budgetOk && latSpinVsQuiet <= 1.2)
-          try latencyPercentiles(spark)
-          catch { case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[bench] latency probe crashed: $e")
-            Map.empty[String, Double] }
-        else Map.empty[String, Double]
-
-      // one UNTIMED warmup execution, then benchRuns (≥3) timed
-      // iterations per workload, report the MEDIAN. The warmup pays the
-      // per-workload codegen/JIT compile OUTSIDE the samples — without
-      // it, sub-second workloads early in the suite carried their own
-      // compile in every sample while late (and @10x) re-runs of the
-      // same kernels ran warmed, which read as cross-round "drift"
-      // (BASELINE.md round-8 note: ann-cosine-topk/dedup-jaccard).
-      // Failed iterations yield NO timing sample (a fast failure would
-      // otherwise skew the stats and report absurd throughput).
-      val results: Seq[Sample] = workloads.iterator
-        .filter(w => pass(w._1) && budgetGate(w._1)).flatMap {
-        case (wl, qname) =>
-        val fn = SparkEntry.queries(qname)
-        var n = -1L
-        try fn(spark, sfDir).count()
-        catch { // NonFatal only: OOM/interrupt must propagate, not hide
-          case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[bench] $wl warmup failed: $e")
-        }
-        val secs = (1 to benchRuns).flatMap { _ =>
-          val t0 = System.nanoTime()
-          try { n = fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
-          catch { case e: Throwable => System.err.println(s"[bench] $wl: $e"); None }
-        }
-        if (secs.isEmpty) None // no sample: omit rather than emit NaN JSON
-        else Some(Sample(wl, secs, inputRows(wl), n))
-      }.toSeq
-
-      // consumeproduce: the read->write roundtrip (SimpleBenchmark's
-      // workload with a produce side) — scan events, write parquet
-      val consumeProduce =
-        if (!pass("consumeproduce") || !budgetGate("consumeproduce")) Seq.empty
-        else {
-        val out = java.nio.file.Files.createTempDirectory("bench-cp").toString
-        val secs = (1 to benchRuns).flatMap { _ =>
-          val t0 = System.nanoTime()
-          try {
-            Tables.load(spark, sfDir, "events")
-              .write.mode("overwrite").parquet(s"$out/events")
-            Some((System.nanoTime() - t0) / 1e9)
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] consumeproduce: $e"); None }
-        }
-        if (secs.isEmpty) Seq.empty
-        else Seq(Sample("consumeproduce", secs, eventRows, eventRows))
-      }
-
-      // suppress-ordered: the ordered suppress buffer's adversarial fold —
-      // 80k SAME-timestamp md5-randomized keys into one buffer, so every
-      // insert lands mid-buffer via the serialized-key-bytes tie-break
-      // (ts-increasing arrivals append in O(1) and measure nothing). This
-      // pins the r14 TreeMap rewrite: the pre-rewrite Vector take/drop
-      // copy folded this shape in 2.4 s and scaled quadratically; the
-      // TreeMap fold reads ~0.6-0.9 s flat. Deterministic input
-      // (spark.range + md5), batch-mode fold, output is empty by design
-      // (nothing evicts) — the work IS the buffer maintenance.
-      val suppressOrdered =
-        if (!pass("suppress-ordered") || !budgetGate("suppress-ordered"))
-          Seq.empty
-        else {
-          val nKeys = 80000L
-          val secs = (1 to benchRuns).flatMap { _ =>
-            val t0 = System.nanoTime()
-            try {
-              val builder = new graft.api.GraftStreams(spark)
-              import spark.implicits._
-              import org.apache.spark.sql.functions.{col, lit, md5}
-              val df = spark.range(nKeys).select(
-                md5(col("id").cast("string")).as("k"), lit("v").as("v"),
-                lit(1000000000L).cast("timestamp").as("ts"))
-              val stream = builder.stream[String, String](
-                df, col("k"), col("v"), col("ts"))
-              graft.streaming.StatefulOps.suppressUntilTimeLimitOrdered(
-                stream, delayMs = Long.MaxValue / 4,
-                maxRecordsPerBuffer = nKeys + 1, numBuffers = 1)
-                .toDF("k", "v").count()
-              Some((System.nanoTime() - t0) / 1e9)
-            } catch { case e: Throwable =>
-              System.err.println(s"[bench] suppress-ordered: $e"); None }
-          }
-          if (secs.isEmpty) Seq.empty
-          else Seq(Sample("suppress-ordered", secs, nKeys, nKeys))
-        }
-
-      // ann-ivf / ann-ivf-search: the production serving shapes. The
-      // codebook trains ONCE on a deterministic 1-in-4 id-hash sample (the
-      // documented 100 TB default — training is an index-build cost, not a
-      // query cost) and persists under the bench work dir via saveCodebook.
-      // `ann-ivf` then times loadCodebook + search (the cold job-startup
-      // shape); `ann-ivf-search` times search with the codebook already in
-      // memory (steady-state serving). Neither number contains training.
-      val ivfWls =
-        Seq("ann-ivf", "ann-ivf-search", "ann-pq", "ann-ivf-pq-serve")
-      val ivfSearch = if (!ivfWls.exists(pass)) Seq.empty
-      else if (!budgetOk || attemptAborted) {
-        // r12 (review): the codebook-training setup below is the one
-        // section whose heavy work ran before any per-workload gate — an
-        // aborted or budget-exhausted attempt must not pay k-means/PQ
-        // training out of the guard reserve; record the skips so the
-        // targeted guard re-runs the section instead
-        ivfWls.filter(pass).foreach(w =>
-          skippedWls.synchronized(skippedWls += w))
-        Seq.empty
-      } else {
-        import org.apache.spark.sql.functions.col
-        import graft.functions.VectorIndex
-        try {
-          val emb = Tables.load(spark, sfDir, "embeddings")
-            .repartition(spark.sparkContext.defaultParallelism)
-          // marker-guarded like the neardup index: training is a one-time
-          // index-build artifact, so a contended-retry attempt re-pays
-          // only the measured serving work
-          val cbPath = s"$benchDir/ivf-codebook-$sfTag"
-          val cb =
-            if (new java.io.File(s"$cbPath/_SUCCESS").exists())
-              VectorIndex.loadCodebook(spark, cbPath)
-            else {
-              val c = VectorIndex.train(emb, "vec_id", "embedding", k = 16,
-                iters = 2, sampleOneIn = 4)
-              VectorIndex.saveCodebook(spark, c, cbPath)
-              c
-            }
-          val queries = emb.filter(col("vec_id") < 20)
-          def timed(wl: String)(once: () => Unit): Seq[Sample] = {
-            if (!pass(wl) || !budgetGate(wl)) return Seq.empty
-            val secs = (1 to benchRuns).flatMap { _ =>
-              val t0 = System.nanoTime()
-              try { once(); Some((System.nanoTime() - t0) / 1e9) }
-              catch { case e: Throwable =>
-                System.err.println(s"[bench] $wl: $e"); None }
-            }
-            if (secs.isEmpty) Seq.empty
-            else Seq(Sample(wl, secs, embRows, embRows))
-          }
-          // PQ codebook: same treatment — train once, persist, serve
-          val pqPath = s"$benchDir/pq-codebook-$sfTag"
-          if (!new java.io.File(s"$pqPath/_SUCCESS").exists()) {
-            val pq = graft.functions.ProductQuantizer.train(emb, "vec_id",
-              "embedding", m = 8, ksub = 16, iters = 2)
-            graft.functions.ProductQuantizer.saveCodebook(spark, pq, pqPath)
-          }
-          timed("ann-ivf") { () =>
-            val loaded = VectorIndex.loadCodebook(spark, cbPath)
-            VectorIndex.search(emb, queries, "vec_id", "embedding", loaded,
-              nProbe = 4, topK = 10).count()
-          } ++ timed("ann-ivf-search") { () =>
-            VectorIndex.search(emb, queries, "vec_id", "embedding", cb,
-              nProbe = 4, topK = 10).count()
-          } ++ timed("ann-pq") { () =>
-            // the PQ serving shape (r6 prescription): load the persisted
-            // codebook + ADC full-scan search — NO training in the path
-            val pqCb = graft.functions.ProductQuantizer.loadCodebook(spark, pqPath)
-            graft.functions.ProductQuantizer.search(emb, queries,
-              "vec_id", "embedding", pqCb, topK = 10).count()
-          } ++ timed("ann-ivf-pq-serve") { () =>
-            // the billion-scale serving composition, codebooks persisted:
-            // cell-prune + compressed-domain ADC, zero training in the path
-            val ivfCb = VectorIndex.loadCodebook(spark, cbPath)
-            val pqCb = graft.functions.ProductQuantizer.loadCodebook(spark, pqPath)
-            graft.functions.ProductQuantizer.searchWithCells(emb, queries,
-              "vec_id", "embedding", ivfCb, pqCb, nProbe = 4, topK = 10).count()
-          }
-        } catch {
-          case e: Throwable =>
-            // a setup failure must not silently drop the section from the
-            // suspect set (review r12) — route it to the targeted guard
-            System.err.println(s"[bench] ann-ivf setup: $e")
-            ivfWls.filter(pass).foreach(w =>
-              skippedWls.synchronized(skippedWls += w))
-            Seq.empty
-        }
-      }
-
-      // dedup-index-probe: the incremental near-dup serving shape. The
-      // accepted-corpus MinHash index (doc_id % 4 != 0) builds ONCE and
-      // persists under the bench work dir — an index-build cost, paid when
-      // a batch is accepted, not when the next one is probed. The timed
-      // path is what a daily crawl pays: band the batch, load the index,
-      // one combined bucket shuffle, in-bucket pairing + signature rescore.
-      val indexProbe =
-        if (!pass("dedup-index-probe") || !budgetGate("dedup-index-probe")) Seq.empty
-        else {
-        import org.apache.spark.sql.functions.col
-        import graft.operators.NearDupIndex
-        try {
-          val docs = Tables.load(spark, sfDir, "documents")
-            .repartition(spark.sparkContext.defaultParallelism)
-          val idxPath = s"$benchDir/neardup-index-$sfTag"
-          val marker = new java.io.File(s"$idxPath/_SUCCESS")
-          if (!marker.exists())
-            NearDupIndex.build(docs.filter(col("doc_id") % 4 =!= 0),
-              "doc_id", "text").write.mode("overwrite").parquet(idxPath)
-          val secs = (1 to benchRuns).flatMap { _ =>
-            val t0 = System.nanoTime()
-            try {
-              val index = spark.read.parquet(idxPath)
-              val batch = NearDupIndex.build(
-                docs.filter(col("doc_id") % 4 === 0), "doc_id", "text")
-              NearDupIndex.probe(index, batch).count()
-              Some((System.nanoTime() - t0) / 1e9)
-            } catch { case e: Throwable =>
-              System.err.println(s"[bench] dedup-index-probe: $e"); None }
-          }
-          if (secs.isEmpty) Seq.empty
-          else Seq(Sample("dedup-index-probe", secs, docRows, docRows))
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] dedup-index-probe setup: $e")
-            skippedWls.synchronized(skippedWls += "dedup-index-probe")
-            Seq.empty
-        }
-      }
-
-      // image-dedup-serve: r8's image-dedup-components@10x spent its 49 s
-      // in the synthetic PNG render chain (encode → resize → gray decode
-      // per doc) — it timed corpus synthesis, not dedup. At 100 TB the
-      // aHash signature is an ingest-time artifact computed once per
-      // asset, so the serve entry persists the signature table per bench
-      // dir (marker-guarded, the PQ-codebook pattern) and times what a
-      // dedup pass actually re-runs: banding + 2..50 bucket cut + Hamming
-      // rescore + connected-component closure.
-      def imageDedupServe(wl: String, dataDir: String, tag: String,
-          inRows: Long): Seq[Sample] =
-        if (!pass(wl) || !budgetGate(wl)) Seq.empty
-        else try {
-          val p = s"$benchDir/ahash-sig-$tag"
-          if (!new java.io.File(s"$p/_SUCCESS").exists())
-            graft.queries.LlmPipeline.imageAhash(spark, dataDir)
-              .write.mode("overwrite").parquet(p)
-          def closure(): Long = graft.operators.ConnectedComponents
-            .run(graft.queries.LlmPipeline.ahashPairsFrom(
-              spark.read.parquet(p)), "doc_a", "doc_b").count()
-          // untimed warmup (same policy as the generic workloads): the
-          // iterative closure JIT-compiles a plan per round — without
-          // this the BASE entry pays all of it and reads slower than @10x
-          try closure()
-          catch { case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[bench] $wl warmup failed: $e") }
-          var n = -1L
-          val secs = (1 to benchRuns).flatMap { _ =>
-            val t0 = System.nanoTime()
-            try { n = closure(); Some((System.nanoTime() - t0) / 1e9) }
-            catch { case e: Throwable =>
-              System.err.println(s"[bench] $wl: $e"); None }
-          }
-          if (secs.isEmpty) Seq.empty else Seq(Sample(wl, secs, inRows, n))
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $wl setup: $e")
-          skippedWls.synchronized(skippedWls += wl)
-          Seq.empty }
-      val imageServe = imageDedupServe("image-dedup-serve", sfDir, sfTag, docRows)
-
-      // media serve entries: decode+analysis over the PERSISTED synthetic
-      // media corpus (marker-guarded, the PQ-codebook pattern) — at 100 TB
-      // the media bytes are ingest artifacts in the object store, so the
-      // serve number excludes synthesis. The base audio-vad /
-      // video-scenecut / multimodal-audio entries keep the codec-included
-      // end-to-end measurement per modality.
-      def mediaServe(wl: String, kind: String,
-          serve: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
-          dataDir: String, tag: String, inRows: Long): Seq[Sample] =
-        if (!pass(wl) || !budgetGate(wl)) Seq.empty
-        else try {
-          val p = s"$benchDir/media-$kind-$tag"
-          if (!new java.io.File(s"$p/_SUCCESS").exists())
-            graft.queries.LlmPipeline.mediaCorpus(spark, dataDir, kind)
-              .write.mode("overwrite").parquet(p)
-          def once(): Long = serve(spark.read.parquet(p)).count()
-          // untimed warmup (the generic-workload policy)
-          try once()
-          catch { case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[bench] $wl warmup failed: $e") }
-          var n = -1L
-          val secs = (1 to benchRuns).flatMap { _ =>
-            val t0 = System.nanoTime()
-            try { n = once(); Some((System.nanoTime() - t0) / 1e9) }
-            catch { case e: Throwable =>
-              System.err.println(s"[bench] $wl: $e"); None }
-          }
-          if (secs.isEmpty) Seq.empty else Seq(Sample(wl, secs, inRows, n))
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $wl setup: $e")
-          skippedWls.synchronized(skippedWls += wl)
-          Seq.empty }
-
-      // 10x-scale re-run of the noisiest workloads: at sf0.1 the dedup/ANN
-      // suite finishes in 0.5-2.5 s with ±20 % cross-process noise and
-      // ~3x min-max spreads, so a 1.5x median move is unreadable. The 10x
-      // corpus (generated once, persisted under the bench work dir) pushes
-      // each into the multi-second range where medians mean something.
-      // REGRESSION RULE for these workloads: a real regression moves the
-      // MEDIAN *and* the MIN at 10x — a median-only move at base scale is
-      // sampling noise.
-      var contrastiveRecall10 = -1.0
-      var contrastiveNProbe10 = -1
-      var semdedupAgree10 = -1.0
-      var semdedupK10 = -1
-      val x10CustomWls = Seq("contrastive-self@10x",
-        "contrastive-self-full@10x", "semdedup-prod@10x",
-        "image-dedup-serve@10x",
-        "audio-vad-serve@10x", "video-scenecut-serve@10x",
-        "multimodal-audio-serve@10x")
-      val any10x = x10Workloads.exists(wl => pass(s"$wl@10x")) ||
-        x10CustomWls.exists(pass)
-      val x10Results: Seq[Sample] =
-        if (!any10x || sys.env.getOrElse("SPARK_GRAFT_BENCH_10X", "1") == "0")
-          Seq.empty
-        else if (!budgetOk || attemptAborted) {
-          // r12 (review): an aborted or budget-exhausted attempt must not
-          // pay the 10x corpus generation + three full count() scans out
-          // of the guard reserve — record the skips so the targeted
-          // guard re-runs the whole section instead
-          (x10Workloads.map(wl => s"$wl@10x") ++ x10CustomWls).filter(pass)
-            .foreach(wl => skippedWls.synchronized(skippedWls += wl))
-          Seq.empty
-        }
-        else ensure10xDir(spark, sfDir) match {
-          case None =>
-            // generation failure: route every @10x workload to the
-            // targeted guard (which retries generation) instead of
-            // silently omitting them with skipped=[] (review r12)
-            (x10Workloads.map(wl => s"$wl@10x") ++ x10CustomWls).filter(pass)
-              .foreach(wl => skippedWls.synchronized(skippedWls += wl))
-            Seq.empty
-          case Some(dir10) =>
-            val docRows10 = spark.read.parquet(s"$dir10/documents.parquet").count()
-            val embRows10 = spark.read.parquet(s"$dir10/embeddings.parquet").count()
-            val evRows10 = Tables.load(spark, dir10, "events").count()
-            val byWl = workloads.toMap
-            val generic = x10Workloads.iterator
-              .filter(wl => pass(s"$wl@10x") && budgetGate(s"$wl@10x"))
-              .flatMap { wl =>
-              val fn = SparkEntry.queries(byWl(wl))
-              var n = -1L
-              val secs = (1 to benchRuns).flatMap { _ =>
-                val t0 = System.nanoTime()
-                try { n = fn(spark, dir10).count(); Some((System.nanoTime() - t0) / 1e9) }
-                catch { case e: Throwable =>
-                  System.err.println(s"[bench] $wl@10x: $e"); None }
-              }
-              if (secs.isEmpty) None
-              else Some(Sample(s"$wl@10x", secs,
-                inputRows(wl) match { // rec/sec basis per source table
-                  case r if r == embRows => embRows10
-                  case r if r == docRows => docRows10
-                  case _ => evRows10 // events-based data-eng batch (v3)
-                }, n))
-            }.toSeq
-            // contrastive-self@10x: the PRODUCTION mining config, not the
-            // base-scale oracle-exact one. nProbe = k (the base entry's
-            // setting, kept only so the brute-force SQL oracle is exact)
-            // would degenerate to a ~400M-pair all-pairs join here —
-            // precisely the shape the operator exists to avoid. k = 160
-            // with assignR = 2 multi-assignment from the round-8 knee
-            // study (BASELINE.md): finer cells beat k ∝ N/25 on
-            // recall-per-probe-fraction, cell replication halves the
-            // probe width a given recall needs, and ranking cells ONCE
-            // per vector (the first pass of minePairs' per-cell kernel)
-            // removes the duplicated k·N ranking term. Frontier: recall 0.906 at
-            // ~12.6 s vs r7's 0.749 at 6.8 s / untuned 0.932 at 23.4 s.
-            // r16 (VERDICT r15 #5): contrastive-self-full@10x — the
-            // NON-PRUNABLE twin of contrastive-self@10x. Under the bench's
-            // count() action Catalyst prunes the declarative per-pair
-            // cosine aggregate (disclosed r15 honesty note), so the
-            // headline series no longer measures the kernel; this entry
-            // times the SAME minePairs config under agg(sum(sim)) — the
-            // cosine of every surviving pair must be computed and summed.
-            // The existing series is untouched for cross-round
-            // comparability.
-            val wantContrastive = pass("contrastive-self@10x") &&
-              budgetGate("contrastive-self@10x")
-            val wantContrastiveFull = pass("contrastive-self-full@10x") &&
-              budgetGate("contrastive-self-full@10x")
-            val contrastive =
-              if (!wantContrastive && !wantContrastiveFull) Seq.empty
-            else try {
-              import org.apache.spark.sql.functions.{avg, col, when}
-              import graft.functions.VectorIndex
-              val emb10 = spark.read.parquet(s"$dir10/embeddings.parquet")
-                .repartition(spark.sparkContext.defaultParallelism)
-              val k10 = 160
-              // codebook is a one-time index-build artifact: marker-guarded
-              // under benchDir (the cached codebook — and the tuned
-              // nProbe below — stay fixed across retry attempts)
-              val cb10Path = s"$benchDir/contrastive-cb-10x-k160r2-$sfTag"
-              val cb10 =
-                if (new java.io.File(s"$cb10Path/_SUCCESS").exists())
-                  VectorIndex.loadCodebook(spark, cb10Path)
-                else {
-                  val c = VectorIndex.train(emb10, "vec_id", "embedding",
-                    k = k10, iters = 3, sampleOneIn = 2)
-                  VectorIndex.saveCodebook(spark, c, cb10Path)
-                  c
-                }
-              // recall@1 audit set (UNTIMED): exact hardest-pairs persisted
-              // once per bench dir — nProbe = k meets every pair, a
-              // quadratic audit cost paid at index-build cadence, never per
-              // query. A production pair counts as a hit when its sim
-              // ties-or-beats the exact hardest sim for that
-              // (query, pair_type).
-              val exactPath = s"$benchDir/contrastive-exact-10x-$sfTag"
-              if (!new java.io.File(s"$exactPath/_SUCCESS").exists())
-                VectorIndex.minePairs(emb10, "vec_id", "embedding", "label",
-                    cb10, nProbe = k10)
-                  .write.mode("overwrite").parquet(exactPath)
-              def recallAt(np: Int): Double = {
-                val approx = VectorIndex.minePairs(emb10, "vec_id",
-                    "embedding", "label", cb10, nProbe = np, assignR = 2)
-                  .select(col("query_id"), col("pair_type"), col("sim"))
-                spark.read.parquet(exactPath)
-                  .select(col("query_id"), col("pair_type"),
-                    col("sim").as("exact_sim"))
-                  .join(approx, Seq("query_id", "pair_type"), "left")
-                  .agg(avg(when(col("sim") >= col("exact_sim"), 1.0)
-                    .otherwise(0.0)))
-                  .head().getDouble(0)
-              }
-              // tune nProbe to the knee (UNTIMED, cached): smallest probe
-              // width whose recall clears the ~0.9 a production miner
-              // targets — the VectorIndexSpec recall pattern, applied to
-              // the mining config instead of a first-guess nProbe = 8
-              val tunePath = new java.io.File(s"$benchDir/contrastive-nprobe-10x-k160r2-$sfTag.txt")
-              val (npChosen, recChosen): (Int, Double) =
-                if (tunePath.exists()) {
-                  val Array(np, rec) =
-                    new String(java.nio.file.Files.readAllBytes(tunePath.toPath))
-                      .trim.split(",")
-                  (np.toInt, rec.toDouble)
-                } else {
-                  val swept = Seq(12, 16, 20, 24, 32).iterator
-                    .map(np => (np, recallAt(np)))
-                    .find(_._2 >= 0.9)
-                    .getOrElse((k10, 1.0))
-                  java.nio.file.Files.write(tunePath.toPath,
-                    s"${swept._1},${swept._2}".getBytes)
-                  swept
-                }
-              contrastiveRecall10 = recChosen
-              contrastiveNProbe10 = npChosen
-              val secs = if (!wantContrastive) Seq.empty
-              else (1 to benchRuns).flatMap { _ =>
-                val t0 = System.nanoTime()
-                try {
-                  VectorIndex.minePairs(emb10, "vec_id", "embedding", "label",
-                    cb10, nProbe = npChosen, assignR = 2).count()
-                  Some((System.nanoTime() - t0) / 1e9)
-                } catch { case e: Throwable =>
-                  System.err.println(s"[bench] contrastive-self@10x: $e"); None }
-              }
-              val secsFull = if (!wantContrastiveFull) Seq.empty
-              else (1 to benchRuns).flatMap { _ =>
-                val t0 = System.nanoTime()
-                try {
-                  // sum(sim) cannot be pruned: every pair's cosine is
-                  // computed, aggregated and returned (one scalar row)
-                  VectorIndex.minePairs(emb10, "vec_id", "embedding", "label",
-                    cb10, nProbe = npChosen, assignR = 2)
-                    .agg(org.apache.spark.sql.functions.sum(col("sim"))).head()
-                  Some((System.nanoTime() - t0) / 1e9)
-                } catch { case e: Throwable =>
-                  System.err.println(s"[bench] contrastive-self-full@10x: $e"); None }
-              }
-              (if (secs.isEmpty) Seq.empty
-               else Seq(Sample("contrastive-self@10x", secs, embRows10, embRows10))) ++
-              (if (secsFull.isEmpty) Seq.empty
-               else Seq(Sample("contrastive-self-full@10x", secsFull,
-                 embRows10, embRows10)))
-            } catch { case e: Throwable =>
-              System.err.println(s"[bench] contrastive-self@10x setup: $e")
-              Seq.empty
-            }
-            // semdedup-prod@10x (r14, VERDICT r13 #1): the PRODUCTION
-            // SemDeDup config at 10x — the float VectorIndex codebook +
-            // cosine path with k scaled ∝ N (constant cell occupancy:
-            // the oracle twin runs k=8 at base N, so 10x data trains
-            // k=80), vs the fixed-k=8 oracle-parity config that
-            // semdedup@10x keeps timing for cross-round comparability.
-            // Fixed k on 10x data is the documented anti-scale shape
-            // (SCALE.md: within-cell pair fan-out ~ N²/k — hold k and
-            // 10x the data ⇒ 100x the pairs); k ∝ N holds per-cell pair
-            // work linear in N. tau = 0.35 is the float twin of the
-            // integer oracle threshold (400·dot² >= 49·na·nb ⇔
-            // cos >= 7/20). The keep/drop agreement vs the oracle-config
-            // result is audited UNTIMED (cached per bench dir, the
-            // contrastive_recall_10x pattern) and rides the artifact.
-            val semdedupProd =
-              if (!pass("semdedup-prod@10x") ||
-                !budgetGate("semdedup-prod@10x")) Seq.empty
-            else try {
-              import org.apache.spark.sql.functions.{avg, col, lit, when}
-              import graft.functions.{SemDedup, VectorIndex}
-              val emb10 = spark.read.parquet(s"$dir10/embeddings.parquet")
-                .repartition(spark.sparkContext.defaultParallelism)
-              val kProd = 80
-              val tau = 0.35
-              // (semdedupK10 is assigned only after the agreement audit
-              // succeeds — ADVICE r14: assigning it up front let a thrown
-              // codebook/audit step register k=80 with agreement -1.0 as
-              // if the audit had run)
-              val cbPath = s"$benchDir/semdedup-cb-10x-k$kProd-$sfTag"
-              val cb =
-                if (new java.io.File(s"$cbPath/_SUCCESS").exists())
-                  VectorIndex.loadCodebook(spark, cbPath)
-                else {
-                  val c = VectorIndex.train(emb10, "vec_id", "embedding",
-                    k = kProd, iters = 3, sampleOneIn = 2)
-                  VectorIndex.saveCodebook(spark, c, cbPath)
-                  c
-                }
-              // keep/drop agreement audit (UNTIMED, cached): fraction of
-              // vec_ids on which the production config and the integer
-              // oracle config make the same keep/drop decision at 10x
-              val agreePath = new java.io.File(
-                s"$benchDir/semdedup-agree-10x-k$kProd-$sfTag.txt")
-              semdedupAgree10 =
-                if (agreePath.exists())
-                  new String(java.nio.file.Files.readAllBytes(agreePath.toPath))
-                    .trim.toDouble
-                else {
-                  val oracleKept = SparkEntry.queries("q_semdedup_keep")(spark, dir10)
-                    .select(col("vec_id")).withColumn("o", lit(1))
-                  val prodKept = SemDedup.keep(emb10, "vec_id", "embedding",
-                      cb, tau)
-                    .select(col("vec_id")).withColumn("p", lit(1))
-                  val agree = emb10.select(col("vec_id"))
-                    .join(oracleKept, Seq("vec_id"), "left")
-                    .join(prodKept, Seq("vec_id"), "left")
-                    .agg(avg(when(col("o").isNull === col("p").isNull, 1.0)
-                      .otherwise(0.0)))
-                    .head().getDouble(0)
-                  java.nio.file.Files.write(agreePath.toPath,
-                    f"$agree%.6f".getBytes)
-                  agree
-                }
-              semdedupK10 = kProd // only now: the audit value exists
-              val secs = (1 to benchRuns).flatMap { _ =>
-                val t0 = System.nanoTime()
-                try {
-                  SemDedup.pairs(emb10, "vec_id", "embedding", cb, tau).count()
-                  Some((System.nanoTime() - t0) / 1e9)
-                } catch { case e: Throwable =>
-                  System.err.println(s"[bench] semdedup-prod@10x: $e"); None }
-              }
-              if (secs.isEmpty) Seq.empty
-              else Seq(Sample("semdedup-prod@10x", secs, embRows10, embRows10))
-            } catch { case e: Throwable =>
-              System.err.println(s"[bench] semdedup-prod@10x setup: $e")
-              Seq.empty
-            }
-            generic ++ contrastive ++ semdedupProd ++
-              imageDedupServe("image-dedup-serve@10x", dir10,
-                s"10x-$sfTag", docRows10) ++
-              mediaServe("audio-vad-serve@10x", "vad-wav",
-                graft.queries.LlmPipeline.audioVadServe,
-                dir10, s"10x-$sfTag", docRows10) ++
-              mediaServe("video-scenecut-serve@10x", "frames",
-                graft.queries.LlmPipeline.videoScenecutServe,
-                dir10, s"10x-$sfTag", docRows10) ++
-              mediaServe("multimodal-audio-serve@10x", "plain-wav",
-                graft.queries.LlmPipeline.audioEnergyServe,
-                dir10, s"10x-$sfTag", docRows10)
-        }
-
-      val (streaming, streamLat, streamProbeMs, streamQuiet) =
-        streamingThroughput(spark, sfDir, eventRows, streamCycles, pass)
-
-      // end-probe: all measured work is done, Spark is idle — a calibration
-      // spin slower than the start spin means a co-tenant arrived mid-suite
-      val loadEnd = loadAvg()
-      val calibEndMs = calibrationSpinMs()
-      val (pcalibEndMs, pcalibEndOther) = attributedSpinMs(spinThreads)
-      stampNonSelf(pcalibEndOther) // close the attempt's last open bracket
-      quietSpinMs = math.min(quietSpinMs, quietSpinRef(spinThreads, pcalibEndMs))
-      val calibRatio =
-        math.max(calibStartMs, calibEndMs) / math.min(calibStartMs, calibEndMs)
-      val pcalibRatio =
-        math.max(pcalibStartMs, pcalibEndMs) / math.min(pcalibStartMs, pcalibEndMs)
-      // a co-tenant present for the WHOLE attempt inflates both ends
-      // equally (ratio 1.0) — the absolute check against the quietest
-      // spin this machine has ever shown catches it (r10 blindness)
-      val pcalibVsQuiet =
-        math.min(pcalibStartMs, pcalibEndMs) / quietSpinMs
-      // contended = sustained external CPU pressure at suite start
-      // (loadavg-5min > 2.5 — the r10 co-tenant held ~6; our own sbt
-      // startup pollutes only the 1-min figure), a heavy instantaneous
-      // 1-min reading, calibration drift across the suite (single- or
-      // full-width), or a full-width spin that never approached the
-      // machine's known quiet floor. Samples from a contended run cannot
-      // certify a perf gate (r5 lesson; r10 parallel-blindness lesson).
-      // contended — the WHOLE-SUITE retry trigger — uses only signals
-      // that are reliable where they are measured:
-      //  * the LAUNCH spin (fresh forked JVM, pre-Spark — see main):
-      //    absolute vs the quiet floor = "co-tenant present at launch",
-      //    standalone above 1.5x, loadavg-corroborated above 1.15x
-      //    (loadavg alone is decaying history — the launching sbt
-      //    compile keeps loadavg-5min > 2.5 for minutes);
-      //  * the single-threaded start/end drift catches heavy mid-suite
-      //    arrivals.
-      // The IN-SUITE full-width spins (attempt start/end, streaming
-      // segment) are deliberately NOT retry triggers: three consecutive
-      // r11 runs on an idle machine read them at 1.15-1.5x the floor
-      // from the JVM's own GC/allocator noise (even after explicit GC) —
-      // indistinguishable from a mid-size co-tenant. They are recorded
-      // in the attempt probes, min-update the floor, and the streaming
-      // segment probe gates per-workload quiet-confirmation re-runs —
-      // cheap targeted passes instead of 28-minute whole-suite retries.
-      val contended =
-        (first && ((loadStart5 > 2.5 && launchVsQuiet > 1.15) ||
-          launchVsQuiet > 1.5)) ||
-        calibRatio > 1.5
-
-      midProbe = () => () // disarm — end probes above already ran
-      // Quietness policy (review r12): a batch Sample's default
-      // quiet=true is only trustworthy when full-width spin readings
-      // BRACKET it below the co-tenant detection line (1.6x floor — the
-      // mid-attempt abort threshold; idle-JVM in-suite noise tops out
-      // ~1.5x, so this never taints a genuinely quiet run). Revocations:
-      //   (a) mid-attempt abort -> the undetected window since the last
-      //       quiet probe (taintedWls);
-      //   (b) a full attempt whose END full-width spin reads past the
-      //       line -> the residue since the last quiet probe (the tail
-      //       window the every-10th-gate probe cannot see);
-      //   (c) a TARGETED pass has no mid-probes at all, so a bad start
-      //       OR end spin taints the whole pass — without this, one
-      //       unprobed re-run under the same co-tenant would
-      //       "quiet-confirm" a tainted workload.
-      val allSamples = results ++ consumeProduce ++ suppressOrdered ++ ivfSearch ++ indexProbe ++
-        imageServe ++ streaming ++ x10Results
-      // r13 (VERDICT #1/#2): a bracketing spin only de-quiets samples
-      // when the elevation is EXTERNALLY attributed — the r12 guard loop
-      // de-quieted its own samples from its own batch-tail load, turning
-      // one false abort into three full-width passes
-      val endSpinBad = pcalibEndMs > 1.6 * quietSpinMs &&
-        pcalibEndOther >= CoTenantCores
-      val startSpinBad = pcalibStartMs > 1.6 * quietSpinMs &&
-        pcalibStartOther >= CoTenantCores
-      val gatedNow = sinceQuietProbe.synchronized(sinceQuietProbe.toSet)
-      // r13 (VERDICT #2c): streaming samples measured under a QUIET
-      // stream-segment probe were already certified by the probe that
-      // bracketed them — the batch segment's end spin (our own churn)
-      // must not revoke that certification
-      val streamExempt: Set[String] =
-        if (streamQuiet) streamingPinSet else Set.empty
-      val tainted: Set[String] =
-        if (!full) {
-          if (startSpinBad || endSpinBad) gatedNow -- streamExempt
-          else Set.empty
-        } else taintedWls ++
-          (if (endSpinBad) gatedNow -- streamExempt else Set.empty)
-      if (tainted.nonEmpty && !attemptAborted) System.err.println(
-        s"[bench] spin past the co-tenant line around ${tainted.size} " +
-          "sample(s) - de-quieted for guard re-confirmation")
-      Attempt(contended,
-        allSamples.map(smp =>
-          if (tainted(smp.wl)) smp.copy(quiet = false) else smp),
-        lat, streamLat, (contrastiveRecall10, contrastiveNProbe10),
-        (semdedupAgree10, semdedupK10),
-        loadStart, loadEnd, calibStartMs, calibEndMs, calibRatio,
-        pcalibStartMs, pcalibEndMs, pcalibRatio, pcalibVsQuiet,
-        streamProbeMs, streamQuiet, attemptAborted, latSpinVsQuiet, gatedNow)
-    } // oneAttempt
-
-    // ---- retry policy (r10): whole-suite retries chase a CONTENDED or
-    // NOISY machine exactly as before (r9 policy: calib_ratio > 1.15
-    // counts as noisy); on top of that, a PER-WORKLOAD contention guard
-    // re-runs any workload whose best-so-far median exceeds 3x its
-    // prior-round committed median (BENCH.json stats) or a pinned
-    // steady-state ceiling — the r9 artifact carried window-store at
-    // 0.50x its baseline and dedup-jaccard at ~20x its steady state while
-    // the whole-suite calib_ratio looked fine, because the global probe
-    // cannot see a noisy SEGMENT. The committed artifact is the
-    // per-workload MINIMUM-median merge across all attempts.
-    val priorMedians: Map[String, Double] = try {
-      val f = new java.io.File("BENCH.json")
-      if (!f.exists()) Map.empty
-      else {
-        val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
-        val stats = root.get("stats")
-        // priors are per-SF: a smoke artifact from another scale must not
-        // drive (or suppress) the 3x rule at the driver's bench scale
-        val sameSf = Option(root.get("sf")).map(_.asText())
-          .exists(p => new java.io.File(p).getName == sfTag)
-        if (stats == null || !sameSf) Map.empty
-        else {
-          val b = Map.newBuilder[String, Double]
-          val it = stats.fieldNames()
-          while (it.hasNext) {
-            val k = it.next()
-            Option(stats.get(k).get("median")).foreach(m => b += k -> m.asDouble())
-          }
-          b.result()
-        }
-      }
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
-
-    // Pinned wall-clock ceilings (seconds) at the driver's bench scale —
-    // the workloads r9's committed artifact mis-reported, held to their
-    // known steady states (ceiling ~1.5-2x above steady so a legitimately
-    // slower plan still lands, a contended sample does not). Streaming
-    // ceilings derive from rec/sec floors at the replayed record count.
-    val suspectCeilingSec: Map[String, Double] =
-      if (sfTag != "sf0.1") Map.empty
-      else Map(
-        // r12 re-pin (VERDICT #2): floors at ~0.7x the r11 quiet-box
-        // medians (two independent quiet runs each — judge 141.3k /
-        // builder 136k, judge 223.2k / builder 218k, judge 222.5k /
-        // builder 199k, judge 148.8k yahoo). The old floors (46k / 100k
-        // / 80k / 90k) would have accepted a 2x real regression silently.
-        // (floor basis = 0.7x the LOWER of the two quiet runs, so honest
-        // run-to-run variance doesn't read as a regression)
-        "window-store" -> (streamRecords / 95000.0),
-        "state-store" -> (streamRecords / 152000.0),
-        "stream-table-join-live" -> (streamRecords / 139000.0),
-        "yahoo-streaming" -> (streamRecords / 104000.0),
-        // batch steady states (r8/r9 healthy runs, BASELINE.md)
-        "dedup-jaccard" -> 4.0,
-        "ann-cosine-topk" -> 1.7)
-
-    val maxAttempts =
-      1 + sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRIES", "2").toInt
-    val merged = scala.collection.mutable.LinkedHashMap.empty[String, Sample]
-    val rerunCounts = scala.collection.mutable.Map.empty[String, Int]
-      .withDefaultValue(0)
-    // latency percentiles ride the QUIETEST attempt that produced them
-    // (keyed by calib_ratio), mirroring the loadJson `quietest` pick —
-    // through r10 `lat` was first-wins (pinned to attempt 1 even when
-    // that attempt was the contended one that forced a retry) and
-    // streamLat was last-wins (overwritten by targeted passes).
-    // streamLat's key leads with a quiet-segment/no-abort preference
-    // (review r12): the single-threaded calibRatio is blind to partial
-    // co-tenants, so an aborted attempt's co-tenant-window percentiles
-    // could otherwise out-key the quiet guard attempt's.
-    var latBest: Option[(Double, Map[String, Double])] = None
-    val streamLatBest = scala.collection.mutable.Map
-      .empty[String, ((Int, Double), Map[String, Double])]
-    var contrastive = (-1.0, -1)
-    var semdedupProd = (-1.0, -1)
-    val attemptProbes = scala.collection.mutable.ArrayBuffer.empty[String]
-    val attemptContendedLog = scala.collection.mutable.ArrayBuffer.empty[Boolean]
-
-    // a workload counts as VERIFIED-QUIET once ANY attempt measured it
-    // under a quiet probe — the committed number stays the min-median
-    // (contention only slows, so a faster sample from a noisy-probe
-    // segment is still trustworthy), but resolution requires one quiet
-    // confirmation (r11: the first artifact listed state-store at a
-    // healthy 235k rec/s as "unresolved" because its WINNING sample rode
-    // the noisy-probe attempt even though the quiet re-run confirmed it)
-    val everQuiet = scala.collection.mutable.Set.empty[String]
-
-    def absorb(a: Attempt): Unit = {
-      attemptContendedLog += a.contended
-      a.samples.foreach { s =>
-        if (s.quiet) everQuiet += s.wl
-        if (merged.get(s.wl).forall(_.median > s.median)) merged(s.wl) = s
-      }
-      // r13 (VERDICT #5): latency percentiles are keyed by the full-width
-      // start-spin ratio they were taken under (the probe is only taken
-      // when that ratio reads quiet; the tag rides into the artifact)
-      if (a.lat.nonEmpty && latBest.forall(_._1 > a.latSpinVsQuiet))
-        latBest = Some((a.latSpinVsQuiet, a.lat))
-      val slKey = (if (a.streamQuiet && !a.aborted) 0 else 1, a.calibRatio)
-      a.streamLat.foreach { case (wl, m) =>
-        import scala.math.Ordering.Implicits._
-        if (streamLatBest.get(wl).forall(_._1 > slKey))
-          streamLatBest(wl) = (slKey, m)
-      }
-      if (a.contrastive._2 > 0) contrastive = a.contrastive
-      if (a.semdedupProd._2 > 0) semdedupProd = a.semdedupProd
-      attemptProbes += f"""{"loadavg_start":${a.loadStart}%.2f,"loadavg_end":${a.loadEnd}%.2f,"calib_start_ms":${a.calibStart}%.1f,"calib_end_ms":${a.calibEnd}%.1f,"calib_ratio":${a.calibRatio}%.3f,"pcalib_start_ms":${a.pcalibStart}%.1f,"pcalib_end_ms":${a.pcalibEnd}%.1f,"pcalib_ratio":${a.pcalibRatio}%.3f,"pcalib_vs_quiet":${a.pcalibVsQuiet}%.3f,"stream_probe_ms":${a.streamProbeMs}%.1f,"stream_quiet":${a.streamQuiet},"contended":${a.contended}}"""
-    }
-
-    // suspect = median above 3x its same-sf prior / pinned ceiling, OR
-    // (r11) the winning sample was measured under a NON-quiet streaming
-    // segment probe, OR (r12) a workload never measured at all because a
-    // full attempt aborted or ran out of its reserved slice — re-run
-    // until the probe reads quiet or the re-run budget is spent
-    def suspectsNow(): Set[String] = {
-      val measured = merged.iterator.collect {
-        case (wl, s) if rerunCounts(wl) < 2 &&
-            (!everQuiet.contains(wl) ||
-             priorMedians.get(wl).exists(p => s.median > 3.0 * p) ||
-             suspectCeilingSec.get(wl).exists(c => s.median > c)) => wl
-      }.toSet
-      val missed = skippedWls.synchronized(skippedWls.toSet)
-        .filterNot(merged.contains).filter(rerunCounts(_) < 2)
-      measured ++ missed
-    }
-
-    var attempt = 1
-    var a = oneAttempt(onlyFilter, full = true, first = true)
-    absorb(a)
-    var quietest = a
-    // every loop is ALSO bounded by the wall-clock budget (r11): a busy
-    // machine must produce a partial-but-parsed artifact, never rc 124.
-    // An ABORTED attempt (r12: mid-attempt co-tenant spin) skips the
-    // whole-suite retry entirely — the co-tenant is still there, so a
-    // second 28-minute full pass would burn the reserve for nothing;
-    // the targeted guard re-runs everything unmeasured instead.
-    while (attempt < maxAttempts && budgetOk && !a.aborted &&
-        (a.contended || a.calibRatio > 1.15)) {
-      System.err.println(
-        f"[bench] attempt $attempt ${if (a.contended) "CONTENDED" else "noisy"} " +
-          f"(calib_ratio ${a.calibRatio}%.3f) - retrying " +
-          s"(${maxAttempts - attempt} attempt(s) left)")
-      a = oneAttempt(onlyFilter, full = true)
-      attempt += 1
-      absorb(a)
-      if (a.calibRatio < quietest.calibRatio) quietest = a
-    }
-    // targeted per-workload re-runs (bounded: <= 3 extra passes, <= 2
-    // re-runs per workload, budget) — each pass re-measures ONLY the
-    // suspects and the min-median merge keeps whichever sample was
-    // quicker. The guard phase runs against the TRUE deadline: the
-    // reserve the full attempts could not consume is spent here (r12)
-    phaseDeadlineNs = Long.MaxValue
-    // r13 (VERDICT #5): if no attempt start was quiet enough to carry the
-    // idle-path latency probe, retake it at the start of the guard phase
-    // under a fresh spin reading — tagged with that reading either way
-    if (latBest.isEmpty && budgetOk) {
-      val (ls, _) = attributedSpinMs(spinThreads)
-      quietSpinMs = math.min(quietSpinMs, quietSpinRef(spinThreads, ls))
-      val ratio = ls / quietSpinMs
-      System.err.println(
-        f"[bench] no quiet-start attempt carried the latency probe - " +
-          f"retaking in the guard phase (spin ${ratio}%.2fx floor)")
-      try {
-        val l = latencyPercentiles(spark)
-        if (l.nonEmpty) latBest = Some((ratio, l))
-      } catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] guard-phase latency probe crashed: $e") }
-    }
-    var targetedPasses = 0
-    var guardFullAttempts = 0
-    var sus = suspectsNow()
-    val rerunLog = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (sus.nonEmpty && targetedPasses < 3 && budgetOk) {
-      val suiteSize = math.max(1,
-        (merged.keySet ++ skippedWls.synchronized(skippedWls.toSet)).size)
-      if (sus.size > 0.4 * suiteSize && guardFullAttempts == 0) {
-        // r13 (VERDICT #2a): a "targeted" pass covering most of the suite
-        // is a full attempt in disguise (r12's guard re-ran 254/254) —
-        // run an honest full attempt instead, with mid-probes armed and
-        // the per-workload rerun budgets left unspent for real targeted
-        // passes afterwards
-        guardFullAttempts += 1
-        System.err.println(
-          s"[bench] contention guard: ${sus.size}/$suiteSize suspects " +
-            "(>40% of the suite) - running a full attempt instead of a " +
-            "suite-wide 'targeted' pass")
-        val fa = oneAttempt(onlyFilter, full = true)
-        absorb(fa)
-        if (fa.calibRatio < quietest.calibRatio) quietest = fa
-      } else {
-        val tier = guardTier(sus, merged.keySet.toSet, rerunLog.toSet)
-        System.err.println(
-          s"[bench] contention guard: re-running ${tier.toSeq.sorted.mkString(", ")}")
-        rerunLog ++= tier
-        val ta = oneAttempt(tier.contains, full = false)
-        absorb(ta)
-        // burn rerun allowance only for suspects the pass actually RAN —
-        // a budget-starved pass must not spend the 2-rerun budget of
-        // workloads it never reached (review r12)
-        tier.filter(ta.gated).foreach(wl => rerunCounts(wl) += 1)
-      }
-      targetedPasses += 1
-      sus = suspectsNow()
-    }
-    // suspects that survived their re-run budget are REAL slowdowns (or a
-    // hopelessly busy machine) — name them in the artifact either way
-    val unresolved = merged.iterator.collect {
-      case (wl, s) if !everQuiet.contains(wl) ||
-          priorMedians.get(wl).exists(p => s.median > 3.0 * p) ||
-          suspectCeilingSec.get(wl).exists(c => s.median > c) => wl
-    }.toSeq.sorted
-    val lat = latBest.map(_._2).getOrElse(Map.empty[String, Double])
-    val streamLat = streamLatBest.map { case (wl, (_, m)) => wl -> m }
-
-    val allResults = merged.values.toSeq
-    val qs = allResults.map(s => s""""${s.wl}":${s.median}""").mkString("{", ",", "}")
-    val rs = allResults.map(s => s""""${s.wl}":${(s.inRows / s.median).round}""")
+    val qs = samples.map(s => s""""${s.wl}":${s.median}""").mkString("{", ",", "}")
+    val rs = samples.map(s => s""""${s.wl}":${(s.in.rows / s.median).round}""")
       .mkString("{", ",", "}")
-    val ns = allResults.map(s => s""""${s.wl}":${s.outRows}""").mkString("{", ",", "}")
-    val mb = allResults.map { s =>
-      // @10x corpora are 10 copies of the base table (bytes ~10x)
-      val base = if (s.wl.endsWith("@10x"))
-        10L * inputBytes(s.wl.stripSuffix("@10x")) else inputBytes(s.wl)
-      val mbs = base / 1e6 / s.median
-      f""""${s.wl}":$mbs%.2f"""
-    }.mkString("{", ",", "}")
-    // per-workload error bars: median/min/max over n successful runs (of
-    // the attempt that won the min-median merge), plus the max ATTRIBUTED
-    // non-self cores any spin bracket containing the workload observed
-    // (r15, VERDICT r14 #3 — sub-abort-threshold co-tenants become
-    // auditable; -1 = no bracket probe covered the workload)
-    val stats = allResults.map { s =>
-      val ns = wlNonSelf.synchronized(wlNonSelf.getOrElse(s.wl, -1.0))
-      f""""${s.wl}":{"median":${s.median}%.4f,"min":${s.min}%.4f,"max":${s.max}%.4f,"n":${s.n},"non_self_cores":$ns%.2f}"""
+    val ns = samples.map(s => s""""${s.wl}":${s.outRows}""").mkString("{", ",", "}")
+    val mb = samples.filter(_.in.bytes > 0)
+      .map(s => f""""${s.wl}":${s.in.bytes / 1e6 / s.median}%.2f""").mkString("{", ",", "}")
+    val stats = samples.map { s =>
+      f""""${s.wl}":{"median":${s.median}%.4f,"min":${s.min}%.4f,"max":${s.max}%.4f,"n":${s.n}}"""
     }.mkString("{", ",", "}")
     // headline total stays the BASE-scale suite (comparable across
     // rounds); the 10x re-runs report separately
-    val total = allResults.filterNot(_.wl.endsWith("@10x")).map(_.median).sum
-    val total10 = allResults.filter(_.wl.endsWith("@10x")).map(_.median).sum
-    val latJson = lat.map { case (k, v) => f""""$k":$v%.1f""" }.mkString("{", ",", "}")
-    // per-streaming-workload micro-batch latency percentiles (the
-    // reference's SimpleBenchmark prints records/latency/rec-sec/MB-sec
-    // per workload — SimpleBenchmark.java:631-634)
-    val streamLatJson = streamLat.toSeq.sortBy(_._1).map { case (wl, ps) =>
-      val inner = ps.toSeq.sortBy(_._1)
-        .map { case (k, v) => f""""$k":$v%.1f""" }.mkString("{", ",", "}")
-      s""""$wl":$inner"""
-    }.mkString("{", ",", "}")
-    val cpusN = try cpus.toDouble catch { case _: Throwable => 32.0 }
-    val loadJson =
-      f"""{"cpus":${cpusN.toInt},"loadavg_start":${quietest.loadStart}%.2f,"loadavg_end":${quietest.loadEnd}%.2f,"calib_start_ms":${quietest.calibStart}%.1f,"calib_end_ms":${quietest.calibEnd}%.1f,"calib_ratio":${quietest.calibRatio}%.3f,"launch_spin_ms":$launchSpinMs%.1f,"launch_vs_quiet":$launchVsQuiet%.3f,"contended":${quietest.contended}}"""
-    val guardJson =
-      f""""guard":{"targeted_passes":$targetedPasses,"full_attempts":$guardFullAttempts,"self_noise_factor":$selfNoiseFactor%.2f,"reran":${rerunLog.toSeq.distinct.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},"unresolved":${unresolved.map("\"" + _ + "\"").mkString("[", ",", "]")},"attempts":${attemptProbes.mkString("[", ",", "]")}}"""
-    // a workload "skipped" by the budget during a late targeted pass may
-    // still carry a perfectly good sample from an earlier attempt — only
-    // NEVER-measured workloads are reported as missing
-    val skippedJson =
-      skippedWls.filterNot(merged.contains).toSeq
-        .map("\"" + _ + "\"").mkString("[", ",", "]")
-    // r13 (VERDICT #5): the spin-vs-floor reading the committed latency
-    // percentiles were taken under (-1.0 = probe never ran)
-    val latProbeTag = latBest.map(_._1).getOrElse(-1.0)
-    // r15 (VERDICT r14 #2): post-guard state, in BOTH the artifact and the
-    // stdout contract — "contended_seen && final_quiet" = the guard saw
-    // contention and re-confirmed every committed workload under a quiet
-    // probe; only "!final_quiet" means the samples themselves are suspect
-    val (contendedSeen, finalQuiet) = guardOutcome(
-      attemptContendedLog.toSeq, merged.keySet.toSet, everQuiet.toSet,
-      skippedWls.synchronized(skippedWls.filterNot(merged.contains).toSet))
+    val total = samples.filterNot(_.wl.endsWith("@10x")).map(_.median).sum
+    val total10 = samples.filter(_.wl.endsWith("@10x")).map(_.median).sum
+    def pcts(m: Map[String, Double]): String =
+      m.toSeq.sortBy(_._1).map { case (k, v) => f""""$k":$v%.1f""" }.mkString("{", ",", "}")
+    val streamLat = suite.streamLat.toSeq.sortBy(_._1)
+      .map { case (wl, ps) => s""""$wl":${pcts(ps)}""" }.mkString("{", ",", "}")
+    def names(xs: Iterable[String]): String = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
     val json =
-      f"""{"metric":"total","value":$total,"unit":"sec","total_10x":$total10,"queries":$qs,"rec_sec":$rs,"mb_sec":$mb,"rows":$ns,"stats":$stats,"runs_per_workload":$benchRuns,"state_store":"$stateStore","latency_ms":$latJson,"latency_probe_spin_vs_quiet":$latProbeTag%.3f,"stream_latency_ms":$streamLatJson,"stream_records":$streamRecords,"contrastive_recall_10x":${contrastive._1}%.4f,"contrastive_nprobe_10x":${contrastive._2},"semdedup_agreement_10x":${semdedupProd._1}%.4f,"semdedup_k_10x":${semdedupProd._2},$guardJson,"load":$loadJson,"contended_seen":$contendedSeen,"final_quiet":$finalQuiet,"budget_s":$budgetS,"budget_exceeded":${!budgetOk},"skipped":$skippedJson,"spin_quiet_ms":$quietSpinMs%.1f,"spin_threads":$spinThreads,"sf":"$sfDir"}"""
-    // STDOUT CONTRACT (driver tail-parses the LAST stdout line, and its
-    // tail window has truncated a full queries map in 4 of 5 rounds):
-    // print ONLY total + the 11 SimpleBenchmark-parity workloads + the
-    // load flag — ~450 bytes. Every other metric (full queries map,
-    // rec_sec, mb_sec, rows, stats min/max/n, latency percentiles) lives
-    // in the BENCH.json artifact.
-    val parityQs = allResults
-      .filter(s => parityWorkloads.contains(s.wl))
-      .map(s => f""""${s.wl}":${s.median}%.3f""").mkString("{", ",", "}")
-    // r14 (r13 ADVICE): an isolated-mode run tags its stdout line so a
-    // driver tail-parsing it can never mistake a deliberately-partial
-    // total for the suite total
-    // the tag/filename value comes from onlyEngaged (recognized names
-    // only, emitted only when the filter engaged — ADVICE r14); long
-    // workload lists are shortened so the artifact name stays within
-    // filesystem limits (r15: a 35-workload list exceeded NAME_MAX)
-    val onlyTag = onlyEngaged.map(m => s""""only":"$m",""").getOrElse("")
-    val stdoutLine =
-      s"""{"metric":"total","value":$total,"unit":"sec",$onlyTag"queries":$parityQs,"contended":${quietest.contended},"contended_seen":$contendedSeen,"final_quiet":$finalQuiet,"sf":"$sfDir"}"""
-    // an isolated-mode run (BENCH_ONLY) must never overwrite the full
-    // artifact — BENCH.json feeds next run's priors, floors and the
-    // quiet-spin seed (r13)
+      f"""{"metric":"total","value":$total,"unit":"sec","total_10x":$total10,"queries":$qs,"rec_sec":$rs,"mb_sec":$mb,"rows":$ns,"stats":$stats,"runs_per_workload":$benchRuns,"cpus":"$cpus","latency_ms":${pcts(lat)},"stream_latency_ms":$streamLat,"stream_records":${suite.streamRecords},"contrastive_recall_10x":${suite.contrastive._1}%.4f,"contrastive_nprobe_10x":${suite.contrastive._2},"semdedup_agreement_10x":${suite.semdedupProd._1}%.4f,"semdedup_k_10x":${suite.semdedupProd._2},"budget_s":$budgetS,"budget_exceeded":${!suite.budgetOk},"skipped":${names(suite.skipped)},"failed":${names(suite.failed)},"sf":"$sfDir"}"""
+    // a filtered run must never overwrite the full artifact; long
+    // workload lists are shortened to stay within NAME_MAX
     def fileSafe(m: String): String = {
       val s = m.map(c => if (c.isLetterOrDigit || "@,._-".contains(c)) c else '-')
       if (s.length <= 80) s
       else s.take(48) + "-" + java.lang.Integer.toHexString(s.hashCode)
     }
     val artifactFile =
-      onlyEngaged.map(m => s"BENCH.only-${fileSafe(m)}.json").getOrElse("BENCH.json")
+      only.map(o => s"BENCH.only-${fileSafe(o._1)}.json").getOrElse("BENCH.json")
     val w = new java.io.PrintWriter(artifactFile)
     try w.write(json + "\n") finally w.close()
     spark.stop()
-    println(stdoutLine)
+    println(stdoutLine(total, only.map(_._1),
+      samples.map(s => s.wl -> s.median).toMap, sfDir))
+  }
+
+  /** One bench run over `sfDir`: every workload `selected` admits, in
+    * suite order, until the wall-clock deadline. */
+  private final class Suite(spark: SparkSession, sfDir: String,
+      selected: String => Boolean, deadlineNs: Long) {
+    /** Selected workloads reached after the budget ran out. */
+    val skipped = scala.collection.mutable.LinkedHashSet.empty[String]
+    /** Selected workloads whose setup or every timed run threw. */
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    // every persisted bench artifact (codebooks, exact-pair audit, near-dup
+    // index, tuned nProbe) is keyed by the sf it was built from — a smoke
+    // run at another sf must never satisfy this run's marker checks
+    private val sfTag = new java.io.File(sfDir).getName
+    private val inputs = tableInputs(spark, sfDir)
+    private def input(wl: String): Input = inputs(sourceTable(wl))
+    // built once: `SparkEntry.queries` merges the catalogs on every call,
+    // which must not land inside a timed run
+    private val catalog = SparkEntry.queries
+    /** (recall, nProbe) of the production contrastive miner at 10x. */
+    var contrastive: (Double, Int) = (-1.0, -1)
+    /** (keep/drop agreement vs the oracle config, k) of semdedup-prod@10x. */
+    var semdedupProd: (Double, Int) = (-1.0, -1)
+    /** Per-streaming-workload micro-batch latency percentiles (ms). */
+    var streamLat: Map[String, Map[String, Double]] = Map.empty
+
+    // the reference's canonical streaming scale is 10M records
+    // (tests/kafkatest/benchmarks/streams/streams_simple_benchmark_test.py:48
+    // num_records = 10000000); we replay the events table enough times to
+    // clear SPARK_GRAFT_STREAM_RECORDS (default 1M) so rec/sec amortizes
+    // per-batch overhead instead of measuring micro-batch startup
+    private val events = inputs("events")
+    private val streamCycles = math.max(1L, math.ceil(
+      sys.env.getOrElse("SPARK_GRAFT_STREAM_RECORDS", "1000000").toDouble /
+        events.rows).toLong).toInt
+    val streamRecords: Long = events.rows * streamCycles
+
+    def budgetOk: Boolean = System.nanoTime() < deadlineNs
+
+    /** True to measure `wl`: selected, and reached within the budget
+      * (else recorded as skipped). */
+    private def want(wl: String): Boolean =
+      selected(wl) && (budgetOk || { skipped += wl; false })
+
+    /** One untimed warm-up of `once` (it pays codegen and JIT outside the
+      * samples), then `benchRuns` timed runs; None when every run threw. */
+    private def measure(wl: String, in: Input, outRows: => Long)(once: => Unit)
+        : Option[Sample] = {
+      try once catch { case NonFatal(e) => warn(s"$wl warm-up failed: $e") }
+      val secs = (1 to benchRuns).flatMap { _ =>
+        val t0 = System.nanoTime()
+        try { once; Some((System.nanoTime() - t0) / 1e9) }
+        catch { case NonFatal(e) => warn(s"$wl: $e"); None }
+      }
+      if (secs.isEmpty) { failed += wl; None }
+      else Some(Sample(wl, secs, in,
+        try outRows catch { case NonFatal(e) => warn(s"$wl count: $e"); -1L }))
+    }
+
+    /** Measure `wl` when wanted: each run rebuilds `df` and writes every
+      * column to the `noop` sink; the row count comes from one untimed
+      * `count()`. */
+    private def timed(wl: String, in: Input)(df: => DataFrame): Option[Sample] =
+      if (!want(wl)) None
+      else measure(wl, in, df.count())(df.write.format("noop").mode("overwrite").save())
+
+    /** Workloads that share one setup (a trained codebook, a persisted
+      * corpus): `run` executes only when one of `wls` is selected and the
+      * budget is left, and a setup failure marks every selected one
+      * failed. */
+    private def section(wls: String*)(run: => Seq[Sample]): Seq[Sample] = {
+      val wanted = wls.filter(selected)
+      if (wanted.isEmpty) Nil
+      else if (!budgetOk) { skipped ++= wanted; Nil }
+      else try run catch { case NonFatal(e) =>
+        warn(s"${wanted.mkString(",")} setup: $e"); failed ++= wanted; Nil }
+    }
+
+    /** Persisted under benchDir on first use: `build` writes `path`
+      * (marked by Spark's `_SUCCESS`) only when it is missing. */
+    private def persisted(path: String)(build: => DataFrame): String = {
+      if (!new java.io.File(s"$path/_SUCCESS").exists())
+        build.write.mode("overwrite").parquet(path)
+      path
+    }
+
+    /** The catalog workloads at base scale. */
+    def base(): Seq[Sample] = workloads.flatMap { case (wl, q) =>
+      timed(wl, input(wl))(catalog(q)(spark, sfDir))
+    }
+
+    def custom(): Seq[Sample] = {
+      import org.apache.spark.sql.functions.{col, lit, md5}
+      import graft.functions.{ProductQuantizer, VectorIndex}
+      // consumeproduce: the read->write roundtrip (SimpleBenchmark's
+      // workload with a produce side) — scan events, write parquet
+      val out = s"$benchDir/consumeproduce-$sfTag"
+      val consumeProduce =
+        if (!want("consumeproduce")) None
+        else measure("consumeproduce", input("consumeproduce"), events.rows) {
+          Tables.load(spark, sfDir, "events").write.mode("overwrite").parquet(out)
+        }
+
+      // suppress-ordered: the ordered suppress buffer's adversarial fold —
+      // 80k SAME-timestamp md5-randomized keys into one buffer, so every
+      // insert lands mid-buffer via the serialized-key-bytes tie-break
+      // (ts-increasing arrivals append in O(1) and measure nothing).
+      // Deterministic input (spark.range + md5), output is empty by design
+      // (nothing evicts) — the work IS the buffer maintenance.
+      val nKeys = 80000L
+      val suppressOrdered = timed("suppress-ordered", Input(nKeys, 0L)) {
+        val builder = new graft.api.GraftStreams(spark)
+        import spark.implicits._
+        val df = spark.range(nKeys).select(
+          md5(col("id").cast("string")).as("k"), lit("v").as("v"),
+          lit(1000000000L).cast("timestamp").as("ts"))
+        graft.streaming.StatefulOps.suppressUntilTimeLimitOrdered(
+          builder.stream[String, String](df, col("k"), col("v"), col("ts")),
+          delayMs = Long.MaxValue / 4, maxRecordsPerBuffer = nKeys + 1,
+          numBuffers = 1).toDF("k", "v")
+      }
+
+      // ann-ivf / ann-ivf-search / ann-pq / ann-ivf-pq-serve: the
+      // production serving shapes. The codebooks train ONCE (the IVF one
+      // on a deterministic 1-in-4 id-hash sample) and persist under
+      // benchDir — training is an index-build cost, not a query cost.
+      // `ann-ivf` times loadCodebook + search (the cold job-startup
+      // shape); `ann-ivf-search` times search with the codebook already in
+      // memory (steady-state serving).
+      val ann = section("ann-ivf", "ann-ivf-search", "ann-pq", "ann-ivf-pq-serve") {
+        val emb = Tables.load(spark, sfDir, "embeddings")
+          .repartition(spark.sparkContext.defaultParallelism)
+        val cbPath = s"$benchDir/ivf-codebook-$sfTag"
+        if (!new java.io.File(s"$cbPath/_SUCCESS").exists())
+          VectorIndex.saveCodebook(spark, VectorIndex.train(emb, "vec_id",
+            "embedding", k = 16, iters = 2, sampleOneIn = 4), cbPath)
+        val cb = VectorIndex.loadCodebook(spark, cbPath)
+        val pqPath = s"$benchDir/pq-codebook-$sfTag"
+        if (!new java.io.File(s"$pqPath/_SUCCESS").exists())
+          ProductQuantizer.saveCodebook(spark, ProductQuantizer.train(emb, "vec_id",
+            "embedding", m = 8, ksub = 16, iters = 2), pqPath)
+        val queries = emb.filter(col("vec_id") < 20)
+        Seq(
+          timed("ann-ivf", input("ann-ivf")) {
+            VectorIndex.search(emb, queries, "vec_id", "embedding",
+              VectorIndex.loadCodebook(spark, cbPath), nProbe = 4, topK = 10)
+          },
+          timed("ann-ivf-search", input("ann-ivf-search")) {
+            VectorIndex.search(emb, queries, "vec_id", "embedding", cb,
+              nProbe = 4, topK = 10)
+          },
+          // load the persisted codebook + ADC full-scan search
+          timed("ann-pq", input("ann-pq")) {
+            ProductQuantizer.search(emb, queries, "vec_id", "embedding",
+              ProductQuantizer.loadCodebook(spark, pqPath), topK = 10)
+          },
+          // the billion-scale serving composition: cell-prune +
+          // compressed-domain ADC, zero training in the path
+          timed("ann-ivf-pq-serve", input("ann-ivf-pq-serve")) {
+            ProductQuantizer.searchWithCells(emb, queries, "vec_id", "embedding",
+              VectorIndex.loadCodebook(spark, cbPath),
+              ProductQuantizer.loadCodebook(spark, pqPath), nProbe = 4, topK = 10)
+          }).flatten
+      }
+
+      // dedup-index-probe: the incremental near-dup serving shape. The
+      // accepted-corpus MinHash index (doc_id % 4 != 0) builds ONCE and
+      // persists — an index-build cost, paid when a batch is accepted, not
+      // when the next one is probed. The timed path is what a daily crawl
+      // pays: band the batch, load the index, one combined bucket shuffle,
+      // in-bucket pairing + signature rescore.
+      val indexProbe = section("dedup-index-probe") {
+        import graft.operators.NearDupIndex
+        val docs = Tables.load(spark, sfDir, "documents")
+          .repartition(spark.sparkContext.defaultParallelism)
+        val idxPath = persisted(s"$benchDir/neardup-index-$sfTag") {
+          NearDupIndex.build(docs.filter(col("doc_id") % 4 =!= 0), "doc_id", "text")
+        }
+        timed("dedup-index-probe", input("dedup-index-probe")) {
+          NearDupIndex.probe(spark.read.parquet(idxPath),
+            NearDupIndex.build(docs.filter(col("doc_id") % 4 === 0), "doc_id", "text"))
+        }.toSeq
+      }
+
+      consumeProduce.toSeq ++ suppressOrdered ++ ann ++ indexProbe ++
+        imageDedupServe("image-dedup-serve", sfDir, sfTag, input("image-dedup-serve"))
+    }
+
+    /** image-dedup-serve: the aHash signature is an ingest-time artifact
+      * computed once per asset, so the signature table persists per bench
+      * dir and the timed path is what a dedup pass re-runs: banding + 2..50
+      * bucket cut + Hamming rescore + connected-component closure (not the
+      * synthetic PNG render chain that generates the corpus). */
+    private def imageDedupServe(wl: String, dataDir: String, tag: String,
+        in: Input): Seq[Sample] = section(wl) {
+      val sig = persisted(s"$benchDir/ahash-sig-$tag") {
+        graft.queries.LlmPipeline.imageAhash(spark, dataDir)
+      }
+      timed(wl, in) {
+        graft.operators.ConnectedComponents.run(
+          graft.queries.LlmPipeline.ahashPairsFrom(spark.read.parquet(sig)),
+          "doc_a", "doc_b")
+      }.toSeq
+    }
+
+    /** Media serve entries: decode+analysis over the PERSISTED synthetic
+      * media corpus — at scale the media bytes are ingest artifacts in the
+      * object store, so the serve number excludes synthesis. The base
+      * audio-vad / video-scenecut / multimodal-audio entries keep the
+      * codec-included end-to-end measurement per modality. */
+    private def mediaServe(wl: String, kind: String, serve: DataFrame => DataFrame,
+        dataDir: String, tag: String, in: Input): Seq[Sample] = section(wl) {
+      val media = persisted(s"$benchDir/media-$kind-$tag") {
+        graft.queries.LlmPipeline.mediaCorpus(spark, dataDir, kind)
+      }
+      timed(wl, in)(serve(spark.read.parquet(media))).toSeq
+    }
+
+    /** 10x-scale re-run of the noisiest workloads: at sf0.1 the dedup/ANN
+      * suite finishes in 0.5-2.5 s with ±20 % cross-process noise, so a
+      * 1.5x median move is unreadable. The 10x corpus (generated once,
+      * persisted under benchDir) pushes each into the multi-second range.
+      * REGRESSION RULE for these workloads: a real regression moves the
+      * MEDIAN *and* the MIN at 10x. */
+    def x10(): Seq[Sample] = section(allWorkloads.filter(_.endsWith("@10x")): _*) {
+      val dir10 = ensure10xDir(spark, sfDir)
+      val tag10 = s"10x-$sfTag"
+      val inputs10 = tableInputs(spark, dir10)
+      def input10(wl: String): Input = inputs10(sourceTable(wl.stripSuffix("@10x")))
+      val byWl = workloads.toMap
+      val generic = x10Workloads.flatMap { wl =>
+        timed(s"$wl@10x", input10(wl))(catalog(byWl(wl))(spark, dir10))
+      }
+      val media = Seq(
+        ("audio-vad-serve@10x", "vad-wav", graft.queries.LlmPipeline.audioVadServe _),
+        ("video-scenecut-serve@10x", "frames", graft.queries.LlmPipeline.videoScenecutServe _),
+        ("multimodal-audio-serve@10x", "plain-wav", graft.queries.LlmPipeline.audioEnergyServe _))
+        .flatMap { case (wl, kind, serve) =>
+          mediaServe(wl, kind, serve, dir10, tag10, input10(wl)) }
+      generic ++
+        contrastive10(dir10, input10("contrastive-self@10x")) ++
+        semdedupProd10(dir10, input10("semdedup-prod@10x")) ++
+        imageDedupServe("image-dedup-serve@10x", dir10, tag10,
+          input10("image-dedup-serve@10x")) ++ media
+    }
+
+    /** contrastive-self@10x: the PRODUCTION mining config, not the
+      * base-scale oracle-exact one. nProbe = k (the base entry's setting,
+      * kept only so the brute-force SQL oracle is exact) would degenerate
+      * to a ~400M-pair all-pairs join here. k = 160 with assignR = 2
+      * multi-assignment from the round-8 knee study (BASELINE.md); nProbe
+      * is tuned once (UNTIMED, cached) to the smallest width whose
+      * recall@1 against the exact hardest pairs clears 0.9. The `noop`
+      * write materializes every pair's `sim`. */
+    private def contrastive10(dir10: String, in: Input) = section("contrastive-self@10x") {
+      import org.apache.spark.sql.functions.{avg, col, when}
+      import graft.functions.VectorIndex
+      val emb10 = spark.read.parquet(s"$dir10/embeddings.parquet")
+        .repartition(spark.sparkContext.defaultParallelism)
+      val k10 = 160
+      val cbPath = s"$benchDir/contrastive-cb-10x-k160r2-$sfTag"
+      if (!new java.io.File(s"$cbPath/_SUCCESS").exists())
+        VectorIndex.saveCodebook(spark, VectorIndex.train(emb10, "vec_id",
+          "embedding", k = k10, iters = 3, sampleOneIn = 2), cbPath)
+      val cb10 = VectorIndex.loadCodebook(spark, cbPath)
+      // recall@1 audit set (UNTIMED): exact hardest pairs, nProbe = k —
+      // a quadratic audit cost paid at index-build cadence, never per query
+      val exactPath = persisted(s"$benchDir/contrastive-exact-10x-$sfTag") {
+        VectorIndex.minePairs(emb10, "vec_id", "embedding", "label", cb10, nProbe = k10)
+      }
+      def mine(np: Int): DataFrame = VectorIndex.minePairs(emb10, "vec_id",
+        "embedding", "label", cb10, nProbe = np, assignR = 2)
+      // a production pair is a hit when its sim ties-or-beats the exact
+      // hardest sim for that (query, pair_type)
+      def recallAt(np: Int): Double =
+        spark.read.parquet(exactPath)
+          .select(col("query_id"), col("pair_type"), col("sim").as("exact_sim"))
+          .join(mine(np).select(col("query_id"), col("pair_type"), col("sim")),
+            Seq("query_id", "pair_type"), "left")
+          .agg(avg(when(col("sim") >= col("exact_sim"), 1.0).otherwise(0.0)))
+          .head().getDouble(0)
+      val tune = new java.io.File(s"$benchDir/contrastive-nprobe-10x-k160r2-$sfTag.txt")
+      val (np, recall) =
+        if (tune.exists()) {
+          val Array(n, r) = new String(java.nio.file.Files.readAllBytes(tune.toPath))
+            .trim.split(",")
+          (n.toInt, r.toDouble)
+        } else {
+          val swept = Seq(12, 16, 20, 24, 32).iterator.map(n => (n, recallAt(n)))
+            .find(_._2 >= 0.9).getOrElse((k10, 1.0))
+          java.nio.file.Files.write(tune.toPath, s"${swept._1},${swept._2}".getBytes)
+          swept
+        }
+      contrastive = (recall, np)
+      timed("contrastive-self@10x", in)(mine(np)).toSeq
+    }
+
+    /** semdedup-prod@10x: the PRODUCTION SemDeDup config at 10x — the
+      * float VectorIndex codebook + cosine path with k scaled ∝ N (the
+      * oracle twin runs k=8 at base N, so 10x data trains k=80), vs the
+      * fixed-k=8 oracle-parity config that semdedup@10x keeps timing.
+      * tau = 0.35 is the float twin of the integer oracle threshold
+      * (400·dot² >= 49·na·nb ⇔ cos >= 7/20). The keep/drop agreement vs the
+      * oracle-config result is audited UNTIMED and cached per bench dir. */
+    private def semdedupProd10(dir10: String, in: Input) = section("semdedup-prod@10x") {
+      import org.apache.spark.sql.functions.{avg, col, lit, when}
+      import graft.functions.{SemDedup, VectorIndex}
+      val emb10 = spark.read.parquet(s"$dir10/embeddings.parquet")
+        .repartition(spark.sparkContext.defaultParallelism)
+      val kProd = 80
+      val tau = 0.35
+      val cbPath = s"$benchDir/semdedup-cb-10x-k$kProd-$sfTag"
+      if (!new java.io.File(s"$cbPath/_SUCCESS").exists())
+        VectorIndex.saveCodebook(spark, VectorIndex.train(emb10, "vec_id",
+          "embedding", k = kProd, iters = 3, sampleOneIn = 2), cbPath)
+      val cb = VectorIndex.loadCodebook(spark, cbPath)
+      val agreePath = new java.io.File(s"$benchDir/semdedup-agree-10x-k$kProd-$sfTag.txt")
+      val agree =
+        if (agreePath.exists())
+          new String(java.nio.file.Files.readAllBytes(agreePath.toPath)).trim.toDouble
+        else {
+          val oracleKept = catalog("q_semdedup_keep")(spark, dir10)
+            .select(col("vec_id")).withColumn("o", lit(1))
+          val prodKept = SemDedup.keep(emb10, "vec_id", "embedding", cb, tau)
+            .select(col("vec_id")).withColumn("p", lit(1))
+          val a = emb10.select(col("vec_id"))
+            .join(oracleKept, Seq("vec_id"), "left")
+            .join(prodKept, Seq("vec_id"), "left")
+            .agg(avg(when(col("o").isNull === col("p").isNull, 1.0).otherwise(0.0)))
+            .head().getDouble(0)
+          java.nio.file.Files.write(agreePath.toPath, f"$a%.6f".getBytes)
+          a
+        }
+      semdedupProd = (agree, kProd)
+      timed("semdedup-prod@10x", in) {
+        SemDedup.pairs(emb10, "vec_id", "embedding", cb, tau)
+      }.toSeq
+    }
+
+    /** True streaming-mode throughput: the events table replayed through a
+      * running Structured Streaming query (the Yahoo topology, a live
+      * stream-table join, keyed state and a windowed store). This is the
+      * apples-to-apples number against the reference's continuously-running
+      * Streams workloads; the batch workloads measure the analytic engine. */
+    def streaming(): Seq[Sample] = section(streamingPins: _*) {
+      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+      import org.apache.spark.sql.functions._
+      import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+      import spark.implicits._
+      implicit val sqlCtx = spark.sqlContext
+      val cycles = streamCycles
+      // state fan-out sized for the stream's key cardinality, not the batch
+      // engine's width (deployment tuning, like the latency probe)
+      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", "8")
+      try {
+        val rows = Tables.load(spark, sfDir, "events")
+          .select(col("user_id"), col("event_type"), col("ts"))
+          .as[(Long, String, java.sql.Timestamp)]
+          .collect()
+        val seq = scala.collection.immutable.ArraySeq.unsafeWrapArray(rows)
+
+        // Each replay builds a FRESH query (fresh state/checkpoint), warms it
+        // with a tiny batch, times one saturated flood of `cycles` copies of
+        // the table, and returns (replay seconds, per-micro-batch latencies
+        // in ms). rec/sec comes from the flood; latency percentiles come
+        // from a separate PACED pass (the first run only) — the replay
+        // volume re-fed in ~40 bounded chunks, each drained before the next
+        // is offered, so every chunk is one steady-state-sized micro-batch.
+        def replay[A](mem: MemoryStream[A], q: StreamingQuery, data: Seq[A],
+            paced: Boolean): (Double, Seq[Double]) =
+          try {
+            // chunks run over the WHOLE replay, crossing cycle boundaries:
+            // each addData becomes one MemoryStream partition, so one chunk
+            // per cycle would split a small table's flood (sf0.001: 1,000
+            // cycles) into 1,000 tiny partitions
+            def chunks(size: Long): Iterator[Seq[A]] =
+              Iterator.continually(data).take(cycles).flatten.grouped(size.toInt)
+            mem.addData(data.take(100))
+            watchdogDrain(q)
+            val t0 = System.nanoTime()
+            chunks(50000).foreach(mem.addData(_))
+            watchdogDrain(q)
+            val secs = (System.nanoTime() - t0) / 1e9
+            val floodEnd = Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
+            if (!paced) (secs, Seq.empty)
+            else {
+              chunks(math.max(1L, data.size.toLong * cycles / 40L))
+                .foreach { ch => mem.addData(ch); watchdogDrain(q) }
+              (secs, batchLatencies(q, floodEnd))
+            }
+          } finally q.stop()
+
+        def start(df: DataFrame, name: String, mode: OutputMode): StreamingQuery =
+          df.writeStream.format("noop").queryName(s"bench_$name")
+            .option("checkpointLocation", ckptDir(name)).outputMode(mode).start()
+
+        // yahoo-streaming: filter, re-key, tumbling windowed count
+        def yahooOnce(paced: Boolean): (Double, Seq[Double]) = {
+          val mem = MemoryStream[(Long, String, java.sql.Timestamp)]
+          val counts = mem.toDF().toDF("user_id", "event_type", "ts")
+            .filter(col("event_type") === "view")
+            .groupBy(window(col("ts"), "1 hour"), col("user_id") % 25)
+            .agg(count(lit(1)))
+          replay(mem, start(counts, "yahoo", OutputMode.Update), seq, paced)
+        }
+
+        // live KStream⋈KTable enrichment: every event looks up the table's
+        // current value for its user; the table changelog streams too
+        // (stream-side-only emission through flatMapGroupsWithState)
+        def stJoinOnce(paced: Boolean): (Double, Seq[Double]) = {
+          val sMem = MemoryStream[(Long, Long, java.sql.Timestamp)]
+          val tMem = MemoryStream[(Long, Long, java.sql.Timestamp)]
+          val b = graft.api.GraftStreams(spark)
+          val joined = b.stream[Long, Long](sMem.toDF(), col("_1"), col("_2"), col("_3"))
+            .joinTable(b.table[Long, Long](tMem.toDF(), col("_1"), col("_2"), col("_3")))(_ + _)
+          val q = start(joined.toDF, "stjoin", OutputMode.Append)
+          tMem.addData(rows.map(e => (e._1, e._1, e._3)).distinctBy(_._1))
+          replay(sMem, q, seq.map(e => (e._1, e._1 * 2, e._3)), paced)
+        }
+
+        // state-store: per-record get+update through keyed state (the
+        // SimpleBenchmark statestore workload — processStreamWithStateStore
+        // does one get and one put per record)
+        def stateStoreOnce(paced: Boolean): (Double, Seq[Double]) = {
+          val kvMem = MemoryStream[(Long, Double, java.sql.Timestamp)]
+          val kvStream = graft.api.GraftStreams(spark)
+            .stream[Long, Double](kvMem.toDF(), col("_1"), col("_2"), col("_3"))
+          val stateful = graft.streaming.StatefulOps
+            .flatTransformWithState[Long, Double, Double, (Long, Double)](kvStream) {
+              (key, vs, state) =>
+                var acc = state.getOption.getOrElse(0.0) // get
+                vs.foreach { case (v, _) => acc += v }
+                state.update(acc) // put
+                Iterator.single((key, acc))
+            }
+          replay(kvMem, start(stateful.toDF(), "statestore", OutputMode.Append),
+            seq.map(e => (e._1, 1.0, e._3)), paced)
+        }
+
+        // window-store: per-record put into (key, window) state — the
+        // windowed-count topology running in true streaming update mode
+        // (the batch twin is the `windowed-count` workload)
+        def windowStoreOnce(paced: Boolean): (Double, Seq[Double]) = {
+          val wMem = MemoryStream[(Long, String, java.sql.Timestamp)]
+          val windowed = wMem.toDF().toDF("user_id", "event_type", "ts")
+            .groupBy(window(col("ts"), "1 hour"), col("user_id"))
+            .agg(count(lit(1)))
+          replay(wMem, start(windowed, "windowstore", OutputMode.Update), seq, paced)
+        }
+
+        def pct(xs: Seq[Double], p: Double): Double = {
+          val s = xs.sorted
+          if (s.isEmpty) -1.0 else s(math.min(s.size - 1, (p * s.size).toInt))
+        }
+        val in = Input(streamRecords, inputs("events").bytes * cycles)
+        def sample(wl: String)(once: Boolean => (Double, Seq[Double])): Option[Sample] =
+          if (!want(wl)) None
+          else {
+            val runs = (1 to benchRuns).flatMap { i =>
+              try Some(once(i == 1))
+              catch { case NonFatal(e) => warn(s"$wl: $e"); None }
+            }
+            if (runs.isEmpty) { failed += wl; None }
+            else {
+              val lat = runs.flatMap(_._2)
+              streamLat += wl -> Map("p50" -> pct(lat, 0.50),
+                "p95" -> pct(lat, 0.95), "p99" -> pct(lat, 0.99))
+              Some(Sample(wl, runs.map(_._1), in, streamRecords))
+            }
+          }
+
+        Seq(sample("yahoo-streaming")(yahooOnce),
+          sample("stream-table-join-live")(stJoinOnce),
+          sample("state-store")(stateStoreOnce),
+          sample("window-store")(windowStoreOnce)).flatten
+      } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
   }
 
   /** End-to-end micro-batch latency percentiles — the `EndToEndLatency`
@@ -2317,270 +1145,6 @@ object Bench {
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
   }
 
-  /** True streaming-mode throughput: the events table replayed through a
-    * running Structured Streaming query (the Yahoo topology shape —
-    * filter, re-key, tumbling windowed count). This is the apples-to-
-    * apples number against the reference's continuously-running Streams
-    * workloads; the batch workloads above measure the analytic engine. */
-  private def streamingThroughput(spark: SparkSession, sfDir: String,
-      eventRows: Long, cycles: Int, pass: String => Boolean)
-      : (Seq[Sample], Map[String, Map[String, Double]], Double, Boolean) = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.streaming.OutputMode
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val streamWls = streamingPins
-    if (!streamWls.exists(pass)) return (Seq.empty, Map.empty, -1.0, true)
-    if (!budgetOk || attemptAborted) {
-      // record the skips so the targeted guard re-runs them (r12) —
-      // through r11 a budget-exhausted full attempt silently dropped the
-      // whole streaming section from the suspect set. quiet=false: the
-      // segment was never probed, and this attempt is the aborted one —
-      // reporting "stream_quiet":true here would be fiction (review r12)
-      streamWls.filter(pass).foreach(w =>
-        skippedWls.synchronized(skippedWls += w))
-      return (Seq.empty, Map.empty, -1.0, false)
-    }
-    // segment probe (r11): the 1-min loadavg is polluted by our OWN
-    // just-finished batch section, so the streaming segment's contention
-    // signal is the instantaneous full-width spin against the machine's
-    // known quiet floor. A non-quiet probe tags every sample it covers;
-    // the guard re-runs tagged workloads until their probe reads quiet
-    // (or the re-run/budget allowance is spent — then they are named in
-    // guard.unresolved, never silently committed).
-    val (probeMs, probeOther) = attributedSpinMs(spinThreads)
-    quietSpinMs = math.min(quietSpinMs, quietSpinRef(spinThreads, probeMs))
-    // quiet = within the in-suite noise band of the floor, OR elevated
-    // but SELF-attributed (r13, VERDICT #1: the segment probe fires right
-    // after the batch/10x sections, where this JVM's own GC/compaction
-    // tail reads up to ~2x the floor on an idle box — the co-tenant
-    // certification is about EXTREME external load; a hard 2.5x cap still
-    // forces re-runs under extreme self-churn). r14 (r13 ADVICE): the
-    // elevated acceptance demands non-self ~0 (SelfQuietCores), not
-    // merely under the 2.0-core abort threshold — a 1-2 core co-tenant
-    // must not have its inflated streaming segment certified quiet.
-    val segQuiet = probeMs <= 1.35 * quietSpinMs ||
-      (probeMs <= 2.5 * quietSpinMs && probeOther < SelfQuietCores)
-    if (!segQuiet) System.err.println(
-      f"[bench] streaming segment probe NOT quiet: spin $probeMs%.0f ms vs floor $quietSpinMs%.0f ms (non-self $probeOther%.1f cores)")
-    else if (probeMs > 1.35 * quietSpinMs) System.err.println(
-      f"[bench] streaming segment probe elevated ($probeMs%.0f ms vs floor $quietSpinMs%.0f ms) but self-attributed (non-self $probeOther%.1f cores) - quiet")
-    // state fan-out sized for the stream's key cardinality, not the batch
-    // engine's width (deployment tuning, like the latency probe)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val events = Tables.load(spark, sfDir, "events")
-        .select(col("user_id"), col("event_type"), col("ts"))
-        .as[(Long, String, java.sql.Timestamp)]
-        .collect()
-
-      // each call builds a FRESH query (fresh state/checkpoint), warms it
-      // with a tiny batch, times one full replay, stops — so benchRuns
-      // samples are independent and the median is an honest steady-state.
-      // Each returns (replay seconds, per-micro-batch latencies in ms) —
-      // the reference's SimpleBenchmark reports latency alongside rec/sec.
-      //
-      // rec/sec comes from the SATURATED flood-drain (comparable to the
-      // pinned baselines); latency percentiles come from a separate PACED
-      // pass — the replay volume re-fed in ~40 bounded chunks, each
-      // drained before the next is offered, so every chunk is one
-      // steady-state-sized micro-batch. The flood's 2-3 giant batches
-      // made p95 = p99 = max (saturated-drain numbers, not the
-      // steady-state latency SimpleBenchmark's latency column reports);
-      // ≥40 bounded triggers sample a real distribution.
-      def pacedReplay[A](addChunk: Seq[A] => Unit, drain: () => Unit,
-          data: Seq[A], nCycles: Int): Unit = {
-        val total = data.size.toLong * nCycles
-        // ~40 equal chunks over the WHOLE replay, crossing cycle
-        // boundaries (a per-cycle split would degenerate to `nCycles`
-        // drains when the table is small relative to the record target)
-        val chunk = math.max(1L, total / 40L).toInt
-        Iterator.continually(data).take(nCycles).flatten
-          .grouped(chunk)
-          .foreach { ch => addChunk(ch); drain() }
-      }
-
-      // r11: the timed replay writes to the `noop` sink, like the other
-      // three streaming workloads. Through r10 this was the one workload
-      // on a `memory` sink, whose update-mode buffer RETAINS every
-      // emitted row driver-side across the whole 1M-record replay — a
-      // sink-side drag that grew with windows x keys and is the prime
-      // suspect for the three-round 123k -> 101k -> 77k drift (VERDICT
-      // r10 #3). Correctness of the topology is Verify's job
-      // (q_window_tumbling_count_live et al.); the memory-sink plumbing
-      // keeps a probe in latencyPercentiles. BASELINE.md re-pins the
-      // baseline at the noop-sink number with this note.
-      def yahooStreamingOnce(paced: Boolean): (Double, Seq[Double]) = {
-        val mem = MemoryStream[(Long, String, java.sql.Timestamp)]
-        val counts = mem.toDF().toDF("user_id", "event_type", "ts")
-          .filter(col("event_type") === "view")
-          .groupBy(window(col("ts"), "1 hour"), col("user_id") % 25)
-          .agg(count(lit(1)))
-        val q = counts.writeStream.format("noop").queryName("bench_streaming")
-          .option("checkpointLocation", ckptDir("yahoo"))
-          .outputMode(OutputMode.Update).start()
-        try {
-          mem.addData(events.take(100))
-          watchdogDrain(q)
-          val t0 = System.nanoTime()
-          var c = 0
-          while (c < cycles) {
-            events.grouped(50000).foreach(mem.addData(_)); c += 1
-          }
-          watchdogDrain(q)
-          val secs = (System.nanoTime() - t0) / 1e9
-          val floodEnd = Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
-          if (paced)
-            pacedReplay[(Long, String, java.sql.Timestamp)](
-              mem.addData(_), () => watchdogDrain(q),
-              scala.collection.immutable.ArraySeq.unsafeWrapArray(events), cycles)
-          (secs, if (paced) batchLatencies(q, floodEnd) else Seq.empty)
-        } finally q.stop()
-      }
-
-      // live KStream⋈KTable enrichment: every event looks up the table's
-      // current value for its user; the table changelog streams too
-      // (stream-side-only emission through flatMapGroupsWithState)
-      def stJoinOnce(paced: Boolean): (Double, Seq[Double]) = {
-        val sMem = MemoryStream[(Long, Long, java.sql.Timestamp)]
-        val tMem = MemoryStream[(Long, Long, java.sql.Timestamp)]
-        val b = graft.api.GraftStreams(spark)
-        val joined = b.stream[Long, Long](sMem.toDF(), col("_1"), col("_2"), col("_3"))
-          .joinTable(b.table[Long, Long](tMem.toDF(), col("_1"), col("_2"), col("_3")))(_ + _)
-        val q2 = joined.toDF.writeStream.format("noop").queryName("bench_stjoin")
-          .option("checkpointLocation", ckptDir("stjoin"))
-          .outputMode(OutputMode.Append).start()
-        val streamSide = events.map(e => (e._1, e._1 * 2, e._3))
-        try {
-          tMem.addData(events.map(e => (e._1, e._1, e._3)).distinctBy(_._1))
-          sMem.addData(streamSide.take(100))
-          watchdogDrain(q2)
-          val t0 = System.nanoTime()
-          var c = 0
-          while (c < cycles) {
-            streamSide.grouped(50000).foreach(sMem.addData(_)); c += 1
-          }
-          watchdogDrain(q2)
-          val secs = (System.nanoTime() - t0) / 1e9
-          val floodEnd = Option(q2.lastProgress).map(_.batchId).getOrElse(-1L)
-          if (paced)
-            pacedReplay[(Long, Long, java.sql.Timestamp)](
-              sMem.addData(_), () => watchdogDrain(q2),
-              scala.collection.immutable.ArraySeq.unsafeWrapArray(streamSide), cycles)
-          (secs, if (paced) batchLatencies(q2, floodEnd) else Seq.empty)
-        } finally q2.stop()
-      }
-
-      // state-store: per-record get+update through keyed state (the
-      // SimpleBenchmark statestore workload — processStreamWithStateStore
-      // does one get and one put per record)
-      def stateStoreOnce(paced: Boolean): (Double, Seq[Double]) = {
-        val kvMem = MemoryStream[(Long, Double, java.sql.Timestamp)]
-        val b3 = graft.api.GraftStreams(spark)
-        val kvStream = b3.stream[Long, Double](kvMem.toDF(), col("_1"), col("_2"), col("_3"))
-        val stateful = graft.streaming.StatefulOps
-          .flatTransformWithState[Long, Double, Double, (Long, Double)](kvStream) {
-            (key, rows, state) =>
-              var acc = state.getOption.getOrElse(0.0) // get
-              rows.foreach { case (v, _) => acc += v }
-              state.update(acc) // put
-              Iterator.single((key, acc))
-          }
-        val q3 = stateful.writeStream.format("noop").queryName("bench_statestore")
-          .option("checkpointLocation", ckptDir("statestore"))
-          .outputMode(OutputMode.Append).start()
-        val kvSide = events.map(e => (e._1, 1.0, e._3))
-        try {
-          kvMem.addData(kvSide.take(100))
-          watchdogDrain(q3)
-          val t0 = System.nanoTime()
-          var c = 0
-          while (c < cycles) {
-            kvSide.grouped(50000).foreach(kvMem.addData(_)); c += 1
-          }
-          watchdogDrain(q3)
-          val secs = (System.nanoTime() - t0) / 1e9
-          val floodEnd = Option(q3.lastProgress).map(_.batchId).getOrElse(-1L)
-          if (paced)
-            pacedReplay[(Long, Double, java.sql.Timestamp)](
-              kvMem.addData(_), () => watchdogDrain(q3),
-              scala.collection.immutable.ArraySeq.unsafeWrapArray(kvSide), cycles)
-          (secs, if (paced) batchLatencies(q3, floodEnd) else Seq.empty)
-        } finally q3.stop()
-      }
-
-      // window-store: per-record put into (key, window) state — the
-      // windowed-count topology running in true streaming update mode
-      // (the batch twin is the `windowed-count` workload above)
-      def windowStoreOnce(paced: Boolean): (Double, Seq[Double]) = {
-        val wMem = MemoryStream[(Long, String, java.sql.Timestamp)]
-        val windowed = wMem.toDF().toDF("user_id", "event_type", "ts")
-          .groupBy(window(col("ts"), "1 hour"), col("user_id"))
-          .agg(count(lit(1)))
-        val q4 = windowed.writeStream.format("noop").queryName("bench_windowstore")
-          .option("checkpointLocation", ckptDir("windowstore"))
-          .outputMode(OutputMode.Update).start()
-        try {
-          wMem.addData(events.take(100))
-          watchdogDrain(q4)
-          val t0 = System.nanoTime()
-          var c = 0
-          while (c < cycles) {
-            events.grouped(50000).foreach(wMem.addData(_)); c += 1
-          }
-          watchdogDrain(q4)
-          val secs = (System.nanoTime() - t0) / 1e9
-          val floodEnd = Option(q4.lastProgress).map(_.batchId).getOrElse(-1L)
-          if (paced)
-            pacedReplay[(Long, String, java.sql.Timestamp)](
-              wMem.addData(_), () => watchdogDrain(q4),
-              scala.collection.immutable.ArraySeq.unsafeWrapArray(events), cycles)
-          (secs, if (paced) batchLatencies(q4, floodEnd) else Seq.empty)
-        } finally q4.stop()
-      }
-
-      val latAcc = scala.collection.mutable.Map.empty[String, Seq[Double]]
-      def sample(wl: String)(once: Boolean => (Double, Seq[Double])): Seq[Sample] = {
-        if (!pass(wl)) return Seq.empty // targeted re-run filter (r10 guard)
-        if (!budgetGate(wl)) return Seq.empty
-        // paced latency pass rides the FIRST run only: 40+ bounded-trigger
-        // samples are plenty for p50/p95/p99, and the flood timings of the
-        // remaining runs stay exactly the baseline-comparable measurement
-        val runs = (1 to benchRuns).flatMap { i =>
-          try Some(once(i == 1))
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $wl: $e"); None }
-        }
-        if (runs.isEmpty) Seq.empty
-        else {
-          latAcc(wl) = runs.flatMap(_._2)
-          Seq(Sample(wl, runs.map(_._1), eventRows * cycles, eventRows * cycles,
-            quiet = segQuiet))
-        }
-      }
-
-      val samples = sample("yahoo-streaming")(yahooStreamingOnce) ++
-        sample("stream-table-join-live")(stJoinOnce) ++
-        sample("state-store")(stateStoreOnce) ++
-        sample("window-store")(windowStoreOnce)
-      def pct(xs: Seq[Double], p: Double): Double = {
-        val s = xs.sorted
-        if (s.isEmpty) -1.0 else s(math.min(s.size - 1, (p * s.size).toInt))
-      }
-      val latMap = latAcc.toMap.map { case (wl, xs) =>
-        wl -> Map("p50" -> pct(xs, 0.50), "p95" -> pct(xs, 0.95),
-          "p99" -> pct(xs, 0.99))
-      }
-      (samples, latMap, probeMs, segQuiet)
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] streaming throughput failed: $e")
-        (Seq.empty, Map.empty[String, Map[String, Double]], probeMs, segQuiet)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-  }
-
   /** Per-micro-batch `triggerExecution` durations (ms) for batches after
     * `afterBatch` (the warm-up batch) — the series behind BENCH.json's
     * per-workload `stream_latency_ms` percentiles. `recentProgress`
@@ -2595,10 +1159,4 @@ object Bench {
       .filter(p => p.batchId > afterBatch && p.numInputRows > 0)
       .flatMap(p => Option(p.durationMs.get("triggerExecution")).map(_.toDouble))
 
-  /** One small end-to-end action so JIT/codegen warmup doesn't land on the
-    * first measured workload (the reference benchmark similarly excludes
-    * startup). */
-  private def warmup(spark: SparkSession, sfDir: String): Unit =
-    try SparkEntry.queries("q_grouped_count")(spark, sfDir).count()
-    catch { case _: Throwable => () }
 }

@@ -27,7 +27,7 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // one throwaway action so JVM/codegen warmup doesn't inflate the
-    // first query's reported time (same policy as Bench.warmup)
+    // first query's reported time
     try SparkEntry.queries("q_grouped_count")(spark, sfDir).count()
     catch { case _: Throwable => () }
     SparkEntry.queries
