@@ -21,13 +21,28 @@ import graft.functions.{DedupFunctions => D, TextFunctions => T, VectorFunctions
   */
 object LlmPipeline extends Catalog {
 
-  /** The small-sf documents/embeddings parquet is a single row group, so
-    * without an explicit spread every per-row-heavy stage (md5 shingling,
-    * dot products) runs on ONE core. At real scale the scan has thousands
-    * of splits and this repartition is a no-op cost-wise; locally it's the
-    * difference between 1 and 32 cores. */
-  private def spread(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+  /** Spreads `df` over `defaultParallelism` partitions with a round-robin
+    * shuffle when its estimated size (`optimizedPlan.stats.sizeInBytes`)
+    * exceeds `spark.sql.files.openCostInBytes` (4 MB by default), and
+    * returns it unchanged otherwise. That setting is what Spark's split
+    * planner counts one file open as: below it a split is not worth a
+    * task of its own, and neither is a shuffle that adds a job and a task
+    * per partition to parallelize so little per-row work. An input of
+    * unknown size (a `LogicalRDD` reports `spark.sql.defaultSizeInBytes`)
+    * is spread.
+    *
+    * The spread exists for a large one-file input (one row group, one
+    * split), whose per-row-heavy stages (md5 shingling, dot products)
+    * would otherwise run on one core. At real scale the scan already has
+    * many splits and the spread is still a full shuffle of every row;
+    * skipping it there needs the scan's split count, which this rule
+    * does not read. */
+  private[graft] def spread(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val s = df.sparkSession
+    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (bytes <= s.sessionState.conf.filesOpenCostInBytes) df
+    else df.repartition(s.sparkContext.defaultParallelism)
+  }
 
   /** DuckDB fragment: whitespace tokens of normalized text (mirror of
     * TextFunctions.tokens∘normalizeText). */

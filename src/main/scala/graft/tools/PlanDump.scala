@@ -15,9 +15,10 @@ import org.apache.spark.sql.execution.ExplainMode
   * classes its cold build and write compiled (the delta of Spark's
   * `CodegenMetrics.METRIC_COMPILATION_TIME`), `jobs=N`, the Spark
   * jobs that build and write started (a schema-inference or checkpoint
-  * job in the build shows up here, not in the write's plan), and
+  * job in the build shows up here, not in the write's plan),
   * `stages=N`, the stages those jobs ran (a stage whose shuffle output
-  * an earlier job already wrote is skipped, and not counted). Spark
+  * an earlier job already wrote is skipped, and not counted), and
+  * `tasks=N`, the tasks those stages launched. Spark
   * caches compiled classes by (class loader, source) in 100 entries, and
   * in local mode each class costs two (driver and executor loader), so a
   * suite whose queries together compile more than about 50 classes
@@ -78,10 +79,10 @@ object PlanDump {
                 (System.nanoTime() - t0) / 1e9
               }
               println(f"[plandump] $q%-36s compiles=$compiles%4d jobs=${n.jobs}%3d " +
-                f"stages=${n.stages}%3d " +
+                f"stages=${n.stages}%3d tasks=${n.tasks}%4d " +
                 f"cold=$cold%7.3f " + times.map(t => f"$t%7.3f").mkString(" "))
             } else println(f"[plandump] $q%-36s compiles=$compiles%4d jobs=${n.jobs}%3d " +
-              f"stages=${n.stages}%3d plan written")
+              f"stages=${n.stages}%3d tasks=${n.tasks}%4d plan written")
           } catch {
             case e: Throwable =>
               System.err.println(s"[plandump] $q FAILED: $e")

@@ -131,7 +131,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     }
     assert(got == unionFind(edges))
     // no round shuffle, round count or checkpoint: one stage per job
-    assert(n == Jobs.Counts(jobs = 2, stages = 2), n)
+    assert((n.jobs, n.stages) == ((2, 2)), n)
   }
 
   test("non-convergence within maxIter still throws") {

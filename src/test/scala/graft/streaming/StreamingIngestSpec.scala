@@ -29,8 +29,13 @@ class StreamingIngestSpec extends AnyFunSuite {
     val withPii = good + " write to fox@den.example.org for details"
     val junk = "!!! ??? !!! ???"
 
-    val ingested = b.stream[Long, String](mem.toDF(), $"_1", $"_2", $"_3")
-      .where(TextFunctions.qualityScore(col(Rec.ValueCol)) > 0.3)
+    // the quality gate reads its text stats through a one-element explode,
+    // so `text_stats` runs once per row (a Filter has no common-
+    // subexpression elimination; see StreamingIngestApp)
+    val gated = mem.toDF()
+      .select($"_1", $"_2", $"_3", explode(array(TextFunctions.textStats($"_2"))).as("st"))
+      .filter(TextFunctions.qualityScoreOf($"_2", $"st") > 0.3)
+    val ingested = b.stream[Long, String](gated, $"_1", $"_2", $"_3")
       .mapValuesExpr(TextFunctions.redactPii(col(Rec.ValueCol)))
       .selectKeyExpr[String](TextFunctions.fingerprintHex(col(Rec.ValueCol)))
       .dedupWithinGrace(Seq(Rec.KeyCol), graceMs = 60000)
