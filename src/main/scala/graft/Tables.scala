@@ -5,6 +5,8 @@ import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
@@ -79,6 +81,36 @@ object Tables {
     // built after load set nanosAsLong: the converter reads the session conf
     val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
     nullable(ParquetFileFormat.readSchemaFromFooter(footer, converter)).asInstanceOf[StructType]
+  }
+
+  /** The parquet data files `plan` scans, from the file indexes' cached
+    * listings (no file system call), or None when a leaf of `plan` is not
+    * a parquet file scan. */
+  private[graft] def parquetFiles(plan: LogicalPlan): Option[Seq[FileStatus]] = {
+    val perLeaf = plan.collectLeaves().map {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
+        fs.location match {
+          case i: PartitioningAwareFileIndex => Some(i.allFiles().filterNot(_.getPath.getName.startsWith("_")))
+          case _ => None
+        }
+      case _ => None
+    }
+    if (perLeaf.forall(_.isDefined)) Some(perLeaf.flatten.flatten) else None
+  }
+
+  /** The rows in the parquet `files`, summed from their footers' row
+    * groups on the driver. Reading stops once the sum exceeds `limit`,
+    * so the result is exact up to `limit` and above it otherwise. */
+  private[graft] def parquetRows(spark: SparkSession, files: Seq[FileStatus], limit: Long): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    var rows = 0L
+    val it = files.iterator
+    while (rows <= limit && it.hasNext) {
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(it.next(), conf), ParquetMetadataConverter.NO_FILTER)
+      footer.getBlocks.forEach(b => rows += b.getRowCount)
+    }
+    rows
   }
 
   /** The names a file listing for a data source skips (Spark keeps the

@@ -22,27 +22,39 @@ import graft.functions.{DedupFunctions => D, TextFunctions => T, VectorFunctions
 object LlmPipeline extends Catalog {
 
   /** Spreads `df` over `defaultParallelism` partitions with a round-robin
-    * shuffle when its estimated size (`optimizedPlan.stats.sizeInBytes`)
-    * exceeds `spark.sql.files.openCostInBytes` (4 MB by default), and
-    * returns it unchanged otherwise. That setting is what Spark's split
-    * planner counts one file open as: below it a split is not worth a
-    * task of its own, and neither is a shuffle that adds a job and a task
-    * per partition to parallelize so little per-row work. An input of
-    * unknown size (a `LogicalRDD` reports `spark.sql.defaultSizeInBytes`)
-    * is spread.
-    *
-    * The spread exists for a large one-file input (one row group, one
-    * split), whose per-row-heavy stages (md5 shingling, dot products)
-    * would otherwise run on one core. At real scale the scan already has
-    * many splits and the spread is still a full shuffle of every row;
-    * skipping it there needs the scan's split count, which this rule
-    * does not read. */
+    * shuffle when its parquet scan is both few-file and many-row, and
+    * returns it unchanged otherwise:
+    *   - read from at least `defaultParallelism` files: not spread. Each
+    *     file is at least one split and Spark's split planner sizes
+    *     splits to about one per core, so the scan already runs a task
+    *     per core and the spread would only shuffle every row once more.
+    *   - fewer files holding at most [[SpreadMinRows]] rows (their parquet
+    *     footers' row counts, read on the driver): not spread. Its
+    *     per-row kernels cost less than the job, stage and tasks the
+    *     shuffle adds.
+    *   - fewer files holding more rows: spread. A file of a few MB is
+    *     one row group, read by one task, and its per-row-heavy stages
+    *     (md5 shingling, dot products) would otherwise run on one core.
+    *   - an input that is not a parquet file scan (a `LogicalRDD`, say):
+    *     spread, since its rows are unknown.
+    * Rows, not bytes, measure the per-row work: the same rows can
+    * compress 3x better in one corpus than in another. */
   private[graft] def spread(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val s = df.sparkSession
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (bytes <= s.sessionState.conf.filesOpenCostInBytes) df
-    else df.repartition(s.sparkContext.defaultParallelism)
+    val n = s.sparkContext.defaultParallelism
+    val keep = graft.Tables.parquetFiles(df.queryExecution.analyzed).exists(files =>
+      files.size >= n || graft.Tables.parquetRows(s, files, SpreadMinRows) <= SpreadMinRows)
+    if (keep) df else df.repartition(n)
   }
+
+  /** The most rows a few-file input may hold and still skip [[spread]]'s
+    * shuffle. Measured with `graft.Bench` on one-file `documents` tables
+    * of 1,500 to 20,000 rows (4 cores, minhash, simhash, components and
+    * BM25 queries, two alternating passes): without the spread their
+    * summed medians were even at 1,500 and 3,000 rows, where the shuffle
+    * only adds CPU, and 7%, 27% and 44% slower at 5,000, 10,000 and
+    * 20,000. */
+  private[graft] val SpreadMinRows = 4096L
 
   /** DuckDB fragment: whitespace tokens of normalized text (mirror of
     * TextFunctions.tokens∘normalizeText). */

@@ -254,8 +254,8 @@ class PlanSpec extends AnyFunSuite {
       val plan = planOf(q)
       assert(!plan.contains("Join"), s"$q: ${plan.take(800)}")
       assert(!plan.contains("Window"), s"$q: ${plan.take(800)}")
-      // the only exchange allowed is the round-robin spread of an input
-      // above one file open — never a key shuffle (the op must ride the
+      // the only exchange allowed is the round-robin spread of a
+      // few-file, many-row input — never a key shuffle (the op must ride the
       // scan at 100 TB)
       assert(!plan.contains("hashpartitioning"), s"$q: ${plan.take(800)}")
     }
